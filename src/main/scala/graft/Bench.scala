@@ -82,6 +82,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpusNum = scala.util.Try(cpus.trim.toInt).toOption
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -188,7 +189,6 @@ object Bench {
       // a cpus-less (pre-r10/custom) file never fires the guard on a
       // low-core scaling run; and a non-numeric SPARK_GRAFT_CPUS (e.g. "*")
       // is an explicit mismatch instead of a silent catch-all disable.
-      val cpusNum = scala.util.Try(cpus.trim.toInt).toOption
       val cpusOk = "\"cpus\"\\s*:\\s*([0-9]+)".r.findFirstMatchIn(txt)
         .exists(m => cpusNum.contains(m.group(1).toInt))
       if (!sfOk || !cpusOk) Map.empty
@@ -315,7 +315,7 @@ object Bench {
     val contended =
       sentinelLast > 2.0 * sentinelFirst || sentinelFirst > 2.0 * sentinelLast
     val line =
-      s"""{"metric":"total","value":${s3(total)},"unit":"sec","queries":$qs,"passes":$ps$psByQuery,"ref_guard_n":$refGuardN,"sentinel_first":${s3(sentinelFirst)},"sentinel_last":${s3(sentinelLast)},"contended":$contended,"cpus":"$cpus","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${s3(total)},"unit":"sec","queries":$qs,"passes":$ps$psByQuery,"ref_guard_n":$refGuardN,"sentinel_first":${s3(sentinelFirst)},"sentinel_last":${s3(sentinelLast)},"contended":$contended,"cpus":${cpusNum.fold("null")(_.toString)},"sf":"$sfDir"}"""
     val full = results.map { case (k, (v, p, est, guard)) =>
       "\"" + k + "\":{\"sec\":" + v + ",\"passes\":" + p +
         ",\"est\":\"" + est + "\",\"guard\":\"" + guard + "\"}"

@@ -2,15 +2,26 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{expr, timestamp_micros}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-provided star schema (TESTDATA.md): one parquet
   * file per table under `dir`. Mirrors the reference's file-backed external
   * tables (reference context.rs:100-163) — every query starts from a
   * declarative parquet scan so Catalyst gets pushdown + pruning for free.
+  *
+  * Like the reference, which resolves a table once when it registers it,
+  * each table's parquet schema is inferred once per session (see
+  * [[Tables.read]]); later accesses, through this or any other `Tables`
+  * of the same session, read with that schema and start no Spark job.
+  * The schema is inferred again when the table's content stamp (size and
+  * mtime of the file, or of every file under a directory) or any
+  * `spark.sql.*parquet*` entry set in the session changes. Every access
+  * still lists the files afresh and yields fresh attribute ids, so a
+  * self-join of two accesses resolves like two independent scans.
   */
 final case class Tables(spark: SparkSession, dir: String) {
   private def t(name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Tables.read(spark, s"$dir/$name.parquet")
 
   def region: DataFrame     = t("region")
   def nation: DataFrame     = t("nation")
@@ -128,7 +139,7 @@ final case class Tables(spark: SparkSession, dir: String) {
         }
       }
     }
-    spark.read.parquet(cacheDir.toString)
+    Tables.read(spark, cacheDir.toString)
   }
 
   /** Register every table as a temp view so `spark.sql` queries can refer to
@@ -143,6 +154,36 @@ final case class Tables(spark: SparkSession, dir: String) {
 }
 
 object Tables {
+  /** Per session: path → (validity token, inferred schema). Weak keys and
+    * values that hold only strings and [[StructType]]s, so an entry never
+    * keeps its session alive; one entry per path, replaced when stale. */
+  private val schemas = new java.util.WeakHashMap[SparkSession,
+    java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]]()
+
+  /** `spark.read.parquet(path)` with the schema inferred once per session:
+    * the inference job runs only on the first access, or when the token —
+    * [[contentStamp]] of `path` plus every `spark.sql.*parquet*` entry the
+    * session has set (`nanosAsLong` changes the inferred `events.ts`
+    * type) — differs from the one the schema was inferred under. */
+  private[graft] def read(spark: SparkSession, path: String): DataFrame = {
+    val memo = schemas.synchronized {
+      schemas.computeIfAbsent(spark,
+        _ => new java.util.concurrent.ConcurrentHashMap())
+    }
+    val parquetConf = spark.conf.getAll.toSeq
+      .filter { case (k, _) =>
+        k.startsWith("spark.sql.") && k.contains("parquet") }
+      .sorted.mkString(",")
+    val token = contentStamp(new java.io.File(path)) + "|" + parquetConf
+    Option(memo.get(path)) match {
+      case Some((`token`, st)) => spark.read.schema(st).parquet(path)
+      case _ =>
+        val df = spark.read.parquet(path)
+        memo.put(path, (token, df.schema))
+        df
+    }
+  }
+
   /** Bump when the [[Tables.edges]] derivation rule changes — part of the
     * cache key, so old cache dirs are simply never read again. */
   private[graft] val EdgeRuleVersion = 1

@@ -985,8 +985,11 @@ object Curation {
     * Resampling"). md5 rather than an engine-native hash so the feature
     * map is bit-identical across engines and re-runs.
     *
-    * One narrow (id, bucket) row per gram instance; pure map-side — no
-    * shuffle at any corpus size. */
+    * One narrow (id, bucket) row per gram instance, computed map-side.
+    * The one possible shuffle is [[Scale.minParallel]]'s hash repartition
+    * of the (id, text) input when it scans fewer partitions than the
+    * session's default parallelism; at real scan parallelism there is
+    * none. */
   def hashedGramBuckets(df: DataFrame, idCol: String, text: Column,
                         buckets: Int): DataFrame = {
     require(buckets > 0, s"buckets=$buckets must be positive")

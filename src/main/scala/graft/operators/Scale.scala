@@ -31,15 +31,16 @@ object Scale {
     * key's rows co-located, so per-key float aggregations keep their
     * single-partition summation order (oracle determinism). */
   def minParallel(df: DataFrame, byCol: String): DataFrame = {
-    // Shuffle-free inputs ONLY: reading .rdd.getNumPartitions of a plan
-    // that contains an exchange would materialize its AQE query stages
-    // (i.e. eagerly run jobs at construction). A plan that already
-    // shuffles has AQE governing its width — return it unchanged.
-    val shuffles = df.queryExecution.sparkPlan.find(
-      _.isInstanceOf[org.apache.spark.sql.execution.exchange
-        .ShuffleExchangeLike]).isDefined
+    // Shuffle-free inputs ONLY: reading .rdd.getNumPartitions of an
+    // adaptive plan would materialize its AQE query stages (i.e. eagerly
+    // run jobs at construction). The executed plan is adaptive exactly
+    // when the input shuffles — including the exchanges EnsureRequirements
+    // inserts, which the pre-exchange `sparkPlan` does not show yet — and
+    // then AQE governs its width: return it unchanged.
+    val adaptive = df.queryExecution.executedPlan.isInstanceOf[
+      org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec]
     val n = df.sparkSession.sparkContext.defaultParallelism
-    if (shuffles || df.rdd.getNumPartitions >= n) df
+    if (adaptive || df.rdd.getNumPartitions >= n) df
     else df.repartition(n, col(byCol))
   }
 

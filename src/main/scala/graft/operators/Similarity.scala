@@ -388,14 +388,12 @@ object Similarity {
     * IVF membership — the candidate-generation side of [[clusterPairs]]).
     * Exposed for stage-level profiling and for callers composing their
     * own candidate joins. */
-  def multiProbeAssignments(index: IvfIndex, vecCol: String,
+  def multiProbeAssignments(index: IvfIndex, idCol: String, vecCol: String,
                             probes: Int): DataFrame = {
     // minParallel (r11): nlist centroid cosines per row on a single-split
     // scan is the same compute-amplified single-task shape as exactPairs;
-    // no-op at real scan parallelism. index.assignments carries the
-    // corpus id column — hash by the first non-cluster column (the id).
-    val corpus0 = index.assignments.drop("cluster")
-    val corpus = Scale.minParallel(corpus0, corpus0.columns.head)
+    // no-op at real scan parallelism. Hash by the corpus id column.
+    val corpus = Scale.minParallel(index.assignments.drop("cluster"), idCol)
     val v = col(vecCol).cast("array<double>")
     // explode_outer + null filter: a plain explode would get
     // size/isnotnull filters inferred beneath it that re-inline (and
@@ -413,7 +411,7 @@ object Similarity {
     val corpus = index.assignments.drop("cluster")
     val asg =
       if (probes <= 1) index.assignments
-      else multiProbeAssignments(index, vecCol, probes)
+      else multiProbeAssignments(index, idCol, vecCol, probes)
     // scoped-cache the NARROW (cluster, id) membership before the
     // self-join: both join sides consume it, and without the cache the
     // multi-probe centroid scoring (the dominant upstream) executes once

@@ -36,7 +36,7 @@ object ProfileSemX {
       idx.assignments.write.format("noop").mode("overwrite").save()
     }
     time("multi-probe asg materialize") {
-      Similarity.multiProbeAssignments(idx, "embedding", 3)
+      Similarity.multiProbeAssignments(idx, "vec_id", "embedding", 3)
         .write.format("noop").mode("overwrite").save()
     }
     val pairs = Similarity.clusterPairs(idx, "vec_id", "embedding", 0.45, 3)

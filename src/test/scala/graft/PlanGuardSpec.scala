@@ -205,7 +205,13 @@ class PlanGuardSpec extends SparkSpec {
     // is the id full-outer (cannot broadcast). hard_negatives: exact-pair
     // base + two GroupedTopK renders (cached subtree prints under both
     // label-join consumers).
-    "llm_dsir_select" -> (11, 0, 0, 2),
+    // dsir 11 → 16: Scale.minParallel in Curation.hashedGramBuckets adds a
+    // REPARTITION_BY_NUM exchange above each single-split documents scan.
+    // The raw gram stream is scoped-cached, so its one repartition prints
+    // under the 3 InMemoryRelation consumers (rawG ⋈ ratio, rawCnt into
+    // the ratio join, rawCnt into n_raw); the target stream is uncached
+    // and prints under tgtCnt and n_tgt: 3 + 2 = 5 printed.
+    "llm_dsir_select" -> (16, 0, 0, 2),
     "llm_dedup_lines" -> (4, 0, 0, 0),
     // round-7: window-digest agg + min-struct canon + islands window; the
     // 1 static SMJ is the planted-construction donor self-join on
@@ -214,7 +220,11 @@ class PlanGuardSpec extends SparkSpec {
     "llm_normalize" -> (1, 0, 0, 0),
     "llm_salted_join" -> (4, 0, 0, 2),
     "llm_snapshot_diff" -> (4, 1, 0, 2),
-    "llm_hard_negatives" -> (7, 0, 2, 6),
+    // hard_negatives 7 → 9: Scale.minParallel in Similarity.exactPairs
+    // adds one REPARTITION_BY_NUM exchange on the streamed side of the
+    // pair cross join; the persisted pair relation prints it under both
+    // InMemoryRelation renders (one execution)
+    "llm_hard_negatives" -> (9, 0, 2, 6),
     // round-6 web suite. pagerank's plan is checkpoint-truncated (the
     // returned frame is the final iteration's LogicalRDD + the rank×N
     // emit) — 3 exchanges. link_stats re-renders the 3-branch synthetic
@@ -297,7 +307,9 @@ class PlanGuardSpec extends SparkSpec {
           (topk < minTopK) -> s"GroupedTopK $topk < $minTopK",
           (pushed < minPushed) -> s"pushed-filter scans $pushed < $minPushed"
         ).collect { case (true, msg) => msg }
-        if (bad.isEmpty) Nil else Seq(s"$name: ${bad.mkString("; ")}")
+        if (bad.isEmpty) Nil
+        else Seq(s"$name: ${bad.mkString("; ")} — actual (Exchange, SMJ, " +
+          s"GroupedTopK, pushed) = ($ex, $smj, $topk, $pushed)")
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }

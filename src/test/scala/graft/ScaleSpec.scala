@@ -7,6 +7,22 @@ import org.apache.spark.sql.functions._
 class ScaleSpec extends SparkSpec {
   import spark.implicits._
 
+  test("minParallel spreads a single-partition scan and leaves an already " +
+    "shuffled input alone without running a job") {
+    val n = spark.sparkContext.defaultParallelism
+    val scan = spark.read.parquet(s"$sf/nation.parquet")
+    assert(scan.rdd.getNumPartitions < n)
+    assert(Scale.minParallel(scan, "n_nationkey").rdd.getNumPartitions == n)
+    // the aggregate's exchange appears only once EnsureRequirements runs,
+    // so the pre-exchange `sparkPlan` does not show it
+    val grouped = scan.groupBy(col("n_regionkey")).agg(count(lit(1)).as("c"))
+    var out: org.apache.spark.sql.DataFrame = null
+    assert(jobsStartedBy {
+      out = Scale.minParallel(grouped, "n_regionkey")
+    } == 0)
+    assert(out eq grouped)
+  }
+
   test("saltedJoin matches plain join results on a skewed key") {
     // 90% of big rows share key 1 (the hot key)
     val big = (1 to 1000).map(i => (if (i <= 900) 1 else i % 50, i))
