@@ -19,6 +19,7 @@ object Verify {
     // sbt classpath NOR the JDK17 add-opens, so both are forwarded.
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
     val builder0 = SparkSession.builder().master(master)
+      .config(graft.engine.Context.codegenConf)
     val builder =
       if (master.startsWith("local-cluster")) builder0
         .config("spark.executor.extraClassPath",

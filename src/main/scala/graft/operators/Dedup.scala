@@ -726,7 +726,7 @@ object Dedup {
     * all three): 4M → 185.9 s / 245 GB mem-spill / 132.8 s GC; 1.5M →
     * 167.2 s / 205 GB / 96.5 s; 750k → 171.3 s / 109 GB / 110.7 s (task
     * overhead starts losing the spill win). The residual spill lives in
-    * the posting collect_list and final reduce aggregates, not this knob.
+    * the pair SUM aggregate, not this knob.
     * Overridable per session (`spark.graft.tfidf.pairIncidencesPerTask`)
     * for A/B probes; np must stay a pure function of the CORPUS within one
     * probe pair so normal/tight runs partition — and sum — identically. */
@@ -815,53 +815,31 @@ object Dedup {
     val norms = persistScoped(s"tfidfN:$idCol:$textCol:$n:$maxDocFreq",
       w.groupBy(col(idCol))
         .agg(sqrt(sum(col("wgt") * col("wgt"))).as("nrm")))
-    // explicit repartition (pair-mass-sized) satisfies the posting
-    // groupBy's clustering requirement, so the aggregate plans WITHOUT a
-    // second exchange — and collect_list loses nothing to the skipped
-    // map-side partial (a list partial is the same bytes as its input).
-    // The pair aggregate below keeps its partial/final split: map-side
-    // combine collapses same-pair contributions within a posting task
-    // (near-dup pairs share many terms), which an explicit repartition
-    // of raw pair rows would forfeit.
+    // explicit repartition (pair-mass-sized) satisfies the self-join's
+    // clustering requirement on the term key, so the join plans WITHOUT a
+    // second exchange. The pair aggregate below keeps its partial/final
+    // split: map-side combine collapses same-pair contributions within a
+    // posting task (near-dup pairs share many terms), which an explicit
+    // repartition of raw pair rows would forfeit.
     val postings = pairParts match {
       case Some(np) => w.repartition(np, col("sh"))
       case None     => w
     }
-    // Pair generation: two plans produce the identical pair stream.
-    // "join" (default) — codegen'd self-join on the term key: both sides
+    // Pair generation: codegen'd self-join on the term key. Both sides
     // read the SAME user-specified repartition (exchange reuse = one
-    // shuffle), the merge join buffers at most df ≤ maxDocFreq rows per
-    // key, and every pair row stays an UnsafeRow end-to-end.
-    // "postings" — collect_list per term + double explode; the list
-    // aggregate is an ObjectHashAggregate (sort-fallback past 128 keys,
-    // never codegen'd) whose per-term JVM arrays churn the old gen.
-    // r10 A/B (MemProbe, hash-identical in all regimes; the ~205 GB x30
-    // mem-spill is the pair SUM aggregate itself, common to both plans):
-    // x30 normal 32c/8g join 149.9 s / 99.8 s GC vs postings 167-173 s /
-    // 113 s GC; x30 tight 3g/8c join 363.8 s vs postings 377.5 s; x10 a
-    // wash (24.2 vs 24.4 s). The join removes the one non-codegen
-    // operator from the hot path — the property that matters more, not
-    // less, on real multi-executor clusters. Conf kept for A/B.
-    val pairGen = df.sparkSession.conf
-      .getOption("spark.graft.tfidf.pairGen").getOrElse("join")
+    // shuffle), the merge join buffers at most df <= maxDocFreq rows per
+    // key, and every pair row stays an UnsafeRow end-to-end. It beat a
+    // collect_list-per-term + double-explode plan (a non-codegen
+    // ObjectHashAggregate) at x30 with identical hashes; the A/B is in
+    // OPTIMIZATION_r10.md.
     val dots =
-      if (pairGen == "postings")
-        postings
-          .groupBy(col("sh"))
-          .agg(collect_list(struct(col(idCol).as("id"), col("wgt"))).as("xs"))
-          .select(explode(col("xs")).as("a"), col("xs"))
-          .select(col("a"), explode(col("xs")).as("b"))
-          .filter(col("a.id") < col("b.id"))
-          .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-          .agg(sum(col("a.wgt") * col("b.wgt")).as("dot"))
-      else
-        postings.select(col("sh"), col(idCol).as("id_a"), col("wgt").as("wa"))
-          .join(
-            postings.select(col("sh").as("shb"), col(idCol).as("id_b"),
-              col("wgt").as("wb")),
-            col("sh") === col("shb") && col("id_a") < col("id_b"))
-          .groupBy(col("id_a"), col("id_b"))
-          .agg(sum(col("wa") * col("wb")).as("dot"))
+      postings.select(col("sh"), col(idCol).as("id_a"), col("wgt").as("wa"))
+        .join(
+          postings.select(col("sh").as("shb"), col(idCol).as("id_b"),
+            col("wgt").as("wb")),
+          col("sh") === col("shb") && col("id_a") < col("id_b"))
+        .groupBy(col("id_a"), col("id_b"))
+        .agg(sum(col("wa") * col("wb")).as("dot"))
     // norm joins: EXPLICIT broadcast of the per-doc norms side. Left to
     // itself the planner picked this locally, but under multi-process
     // executors with a cold posting cache its static size estimate

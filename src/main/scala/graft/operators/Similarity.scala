@@ -432,9 +432,11 @@ object Similarity {
     // and because HashPartitioning(id_a, id_b) satisfies the dedup
     // aggregate's clustering requirement, the distinct plans NO second
     // exchange: this replaces the dedup's own nlist-bound exchange with a
-    // fleet-width one rather than adding a shuffle. Width = the session's
-    // parallelism floor (defaultParallelism scales with the cluster;
-    // shuffle.partitions is the operator floor the session configured).
+    // fleet-width one rather than adding a shuffle (AQE-final plan in
+    // plans/clusterpairs/llm_embed_cluster_recall.txt). Width = the
+    // session's parallelism floor (defaultParallelism scales with the
+    // cluster; shuffle.partitions is the operator floor the session
+    // configured).
     val session = slim.sparkSession
     val np = math.max(session.sparkContext.defaultParallelism,
       session.conf.get("spark.sql.shuffle.partitions").toInt)

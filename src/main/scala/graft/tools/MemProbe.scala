@@ -55,6 +55,7 @@ object MemProbe {
       sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cores]")
     val builder0 = org.apache.spark.sql.SparkSession.builder()
       .master(master)
+      .config(graft.engine.Context.codegenConf)
     val builder = (if (master.startsWith("local-cluster")) builder0
         .config("spark.executor.extraClassPath",
           System.getProperty("java.class.path"))
@@ -140,11 +141,9 @@ object MemProbe {
           "false")
     } else builder).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // A/B knobs for the tfidf pair stage (Dedup.postingPairParts / pairGen)
+    // A/B knob for the tfidf pair stage (Dedup.postingPairParts)
     sys.env.get("SPARK_GRAFT_TFIDF_INC").foreach(v =>
       spark.conf.set("spark.graft.tfidf.pairIncidencesPerTask", v))
-    sys.env.get("SPARK_GRAFT_TFIDF_PAIRGEN").foreach(v =>
-      spark.conf.set("spark.graft.tfidf.pairGen", v))
 
     // probes that target a scale-probe corpus synthesize it on demand
     // (the driver may clean target/ between rounds; the synth is

@@ -15,6 +15,7 @@ object PlanAudit {
         "llm_dedup_minhash", "llm_embed_ann_pairs")
     val spark = SparkSession.builder()
       .master("local[32]")
+      .config(graft.engine.Context.codegenConf)
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")

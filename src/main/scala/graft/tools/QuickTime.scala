@@ -11,6 +11,7 @@ object QuickTime {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = SparkSession.builder().master("local[32]")
+      .config(graft.engine.Context.codegenConf)
       // A/B knob for shuffle/spill compression (core conf, builder-only):
       // guide-§2.3 "measure both" — zstd trades CPU for bytes
       .config("spark.io.compression.codec",
@@ -29,11 +30,9 @@ object QuickTime {
       .config("spark.sql.files.maxPartitionBytes", "4m")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // A/B knobs for the tfidf pair stage (Dedup.postingPairParts / pairGen)
+    // A/B knob for the tfidf pair stage (Dedup.postingPairParts)
     sys.env.get("SPARK_GRAFT_TFIDF_INC").foreach(v =>
       spark.conf.set("spark.graft.tfidf.pairIncidencesPerTask", v))
-    sys.env.get("SPARK_GRAFT_TFIDF_PAIRGEN").foreach(v =>
-      spark.conf.set("spark.graft.tfidf.pairGen", v))
     args.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       def pass(): Double = {

@@ -147,6 +147,7 @@ object ScaleProbe {
     def keep(n: String) = only.isEmpty || only(n)
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = SparkSession.builder().master("local[32]")
+      .config(graft.engine.Context.codegenConf)
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.adaptive.enabled", "true")
       // AQE partition sizing (r10): shuffle.partitions is the FLOOR a

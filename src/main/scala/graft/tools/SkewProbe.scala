@@ -66,6 +66,7 @@ object SkewProbe {
     val outJson = args.headOption.getOrElse("BENCH_SKEW_r08.json")
     val nDocs = if (args.length > 1) args(1).toInt else 12000
     val spark = SparkSession.builder().master("local[32]")
+      .config(graft.engine.Context.codegenConf)
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.adaptive.enabled", "true")
       // AQE partition sizing (r10): shuffle.partitions is the FLOOR a

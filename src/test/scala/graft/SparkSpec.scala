@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session base for all suites — one JVM-wide SparkSession
-  * (getOrCreate), local[4], UTC, AQE on. */
+  * (getOrCreate), local[4], UTC, AQE on, plus `Context.codegenConf`. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf: String = "/root/testdata/sf0.001"
@@ -43,6 +43,9 @@ object SparkSpec {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
+      // the compiled-class cache is JVM-wide: sized here, every suite
+      // reuses the classes earlier suites compiled
+      .config(graft.engine.Context.codegenConf)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
       .config("spark.sql.shuffle.partitions", "4")
