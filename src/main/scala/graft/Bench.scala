@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs the headline queries on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
@@ -81,53 +79,14 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val cpusNum = scala.util.Try(cpus.trim.toInt).toOption
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config(graft.engine.Context.codegenConf)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE partition sizing (r10): shuffle.partitions is the FLOOR a
-      // shuffle can coalesce down to only if it also STARTS higher —
-      // with the initial count pinned at 32, a 30x corpus's pair
-      // aggregate got 32 reduce tasks and spilled hundreds of files
-      // per task (the r9 tfidf fan-in floor). Starting every
-      // coalescible exchange at 256 lets AQE size partitions to the
-      // measured map output (64 MB advisory) in both directions:
-      // small corpora coalesce back to a handful, big shuffles keep
-      // the parallelism their volume needs. Standard AQE discipline.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-      // companion knob: cached plans otherwise pin their UNCOALESCED
-      // initial partitioning (AQE may not change cached-plan output
-      // partitioning by default), so every consumer of a persisted
-      // intermediate would launch 256 tiny tasks per stage
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // runtime join-to-broadcast conversions are capped at 1 MB of
-      // COMPRESSED shuffle bytes (not the 10 MB static default): once
-      // canChangeCachedPlanOutputPartitioning let AQE replan above
-      // persisted intermediates, a ~10 MB-compressed side deserialized
-      // into a hashed relation big enough to OOM the build mid-x30-job
-      // (llm_dedup_prefix). 1 MB compressed ≈ ≤30 MB built — safe on any
-      // executor; broadcasts that matter are pinned at the operator.
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "1048576")
-      // the graft optimizer rules (RewriteWindowTopK) must govern the
-      // measured plans, same as any production session built via
-      // Context.local
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local-bench split sizing: the sf tables are single ~50 MB parquet
-      // files — the 128 MB default would scan them in 1-3 tasks on a
-      // 32-thread box. At cluster scale (many files) this knob is moot.
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.ui.enabled", "false")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.engine.Context.builder(s"local[$cpus]", cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // Warmup: run every headline query once at the smallest SF. Spark keeps
     // each compiled whole-stage class in a JVM-wide cache keyed by its
-    // generated source, sized by Context.codegenConf to hold every headline
+    // generated source, sized by Context.sessionConf to hold every headline
     // class, so plan shapes that recur at the target SF are not compiled
     // again; the pass also JITs the operator code at negligible data cost
     // (first-run JIT otherwise dominates the heavy dedup plans by 3-5×).
@@ -192,10 +151,9 @@ object Bench {
       // cpus gate (r11, per ADVICE): the reference file MUST carry a cpus
       // field matching this run's core count — `.exists`, not `.forall`, so
       // a cpus-less (pre-r10/custom) file never fires the guard on a
-      // low-core scaling run; and a non-numeric SPARK_GRAFT_CPUS (e.g. "*")
-      // is an explicit mismatch instead of a silent catch-all disable.
+      // low-core scaling run.
       val cpusOk = "\"cpus\"\\s*:\\s*([0-9]+)".r.findFirstMatchIn(txt)
-        .exists(m => cpusNum.contains(m.group(1).toInt))
+        .exists(_.group(1).toInt == cpus)
       if (!sfOk || !cpusOk) Map.empty
       else "\"([A-Za-z0-9_]+)\"\\s*:\\s*([0-9]+(?:\\.[0-9]+)?)".r
         .findAllMatchIn(txt)
@@ -320,7 +278,7 @@ object Bench {
     val contended =
       sentinelLast > 2.0 * sentinelFirst || sentinelFirst > 2.0 * sentinelLast
     val line =
-      s"""{"metric":"total","value":${s3(total)},"unit":"sec","queries":$qs,"passes":$ps$psByQuery,"ref_guard_n":$refGuardN,"sentinel_first":${s3(sentinelFirst)},"sentinel_last":${s3(sentinelLast)},"contended":$contended,"cpus":${cpusNum.fold("null")(_.toString)},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${s3(total)},"unit":"sec","queries":$qs,"passes":$ps$psByQuery,"ref_guard_n":$refGuardN,"sentinel_first":${s3(sentinelFirst)},"sentinel_last":${s3(sentinelLast)},"contended":$contended,"cpus":$cpus,"sf":"$sfDir"}"""
     val full = results.map { case (k, (v, p, est, guard)) =>
       "\"" + k + "\":{\"sec\":" + v + ",\"passes\":" + p +
         ",\"est\":\"" + est + "\",\"guard\":\"" + guard + "\"}"

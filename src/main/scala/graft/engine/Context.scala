@@ -108,11 +108,14 @@ final class Context(val spark: SparkSession,
 
 object Context {
 
-  /** Entries every session builder in the project applies, whatever else
-    * it configures, so that each generated class is compiled once per JVM.
+  /** The one definition of a session's configuration. Every session in the
+    * project (`local` below, `Bench`, `Verify`, the mains under
+    * `graft.tools` and the test session) is built from it through
+    * [[builder]], so plan guards, benchmarks and the oracle gate all run
+    * the config users get. The reason for each entry:
     *
-    * - `spark.sql.codegen.cache.maxEntries` sizes Spark's cache of compiled
-    *   classes, keyed by generated source. The cache is static and
+    * - `spark.sql.codegen.cache.maxEntries=4096` sizes Spark's cache of
+    *   compiled classes, keyed by generated source. The cache is static and
     *   JVM-wide, sized from the session that generates code first. At the
     *   default of 100 it cannot hold one tpch pass (~270 distinct
     *   classes), so every pass recompiled every class. One pass of all 209
@@ -122,10 +125,75 @@ object Context {
     *   numbers stages in the order it plans them, which follows the order
     *   sibling stages finish in: with the id in the name, tpch_q11
     *   compiled a second copy of two classes whenever its two aggregate
-    *   stages finished the other way round. Plans still print the id. */
-  val codegenConf: Map[String, String] = Map(
+    *   stages finished the other way round. Plans still print the id.
+    * - `spark.sql.extensions=graft.plans.GraftExtensions` installs the
+    *   GroupedTopK strategy, the window top-k rewrite and its column
+    *   pruning in every session of the JVM, `newSession()` included.
+    * - AQE's initial partition count, 256: AQE sizes coalescible
+    *   exchanges from this starting count down to the 64 MB advisory.
+    *   `shufflePartitions` alone would cap the parallelism of every big
+    *   shuffle, since AQE can only merge partitions, never split them:
+    *   with 32 reducers the x30 tfidf pair aggregate spilled hundreds of
+    *   files per task. 1024 cost ~2 s per query of per-stage
+    *   overhead on iterative shapes (llm_hybrid_retrieval 3.2 s vs 1.8 s),
+    *   and at x30 byte-sized coalescing lands at ≤256 partitions anyway.
+    * - `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true`:
+    *   without it a persisted intermediate (Dedup's scoped caches) keeps
+    *   its uncoalesced initial partitioning, and every consumer launches
+    *   256 tiny tasks per stage (llm_tfidf_pairs at sf0.1: 2.7 s → 19.6 s
+    *   at 1024).
+    * - `spark.sql.adaptive.autoBroadcastJoinThreshold=1048576` caps runtime
+    *   join-to-broadcast conversions at 1 MB of compressed shuffle bytes
+    *   (≤~30 MB built). With cached-plan replanning on, the 10 MB default
+    *   let AQE broadcast a side that deserialized into a hashed relation
+    *   big enough to OOM the build mid-job (llm_dedup_prefix at x30); -1
+    *   is safe but costs 1.4-3.5x on join-heavy sf0.1 rows. Broadcasts
+    *   that matter are pinned at the operator.
+    * - `spark.sql.files.maxPartitionBytes=4m`: each sf table is one parquet
+    *   file (~50 MB at sf0.1), which the 128 MB default scans in 1-3 tasks
+    *   on a 32-thread box. With many files per table it changes nothing.
+    * - `spark.sql.session.timeZone=UTC`, so timestamps render the same on
+    *   every host and in the DuckDB oracle.
+    * - `spark.sql.legacy.parquet.nanosAsLong=true`: events.parquet carries
+    *   TIMESTAMP(NANOS), read as Long ns and converted to a µs timestamp in
+    *   `Tables.events`.
+    * - `spark.ui.enabled=false`: no session serves a UI.
+    * - `spark.sql.shuffle.partitions=shufflePartitions`: the count of
+    *   exchanges AQE does not coalesce, and the floor operators size their
+    *   explicit repartitions from.
+    *
+    * Shuffle and spill compression is left at Spark's lz4. zstd loses on
+    * small exchanges (sf0.1 llm_tfidf_pairs 2.36 → 3.65 s) and wins once
+    * shuffles and spills reach tens of GB (x30 tfidf −20% wall, −59% spill
+    * bytes): set Spark's own `spark.io.compression.codec` on such fleets. */
+  def sessionConf(shufflePartitions: Int): Map[String, String] = Map(
     "spark.sql.codegen.cache.maxEntries" -> "4096",
-    "spark.sql.codegen.useIdInClassName" -> "false")
+    "spark.sql.codegen.useIdInClassName" -> "false",
+    "spark.sql.extensions" -> "graft.plans.GraftExtensions",
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "256",
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "1048576",
+    "spark.sql.files.maxPartitionBytes" -> "4m",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.ui.enabled" -> "false",
+    "spark.sql.shuffle.partitions" -> shufflePartitions.toString)
+
+  /** A builder carrying [[sessionConf]]. A `local-cluster[...]` master
+    * starts executors as fresh JVMs that inherit neither this process's
+    * classpath nor the JDK module options Spark needs, so both are
+    * forwarded; the options are Spark's own list, the one `spark-submit`
+    * injects. */
+  def builder(master: String, shufflePartitions: Int): SparkSession.Builder = {
+    val b = SparkSession.builder().master(master)
+      .config(sessionConf(shufflePartitions))
+    if (master.startsWith("local-cluster")) b
+      .config("spark.executor.extraClassPath",
+        System.getProperty("java.class.path"))
+      .config("spark.executor.extraJavaOptions",
+        org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptions())
+    else b
+  }
 
   /** Single-box bring-up, the analog of running the reference's in-process
     * Scheduler + Executor daemons (reference scheduler.rs:27-72,
@@ -135,45 +203,8 @@ object Context {
   def local(cores: Int = Runtime.getRuntime.availableProcessors(),
             shufflePartitions: Int = 32,
             appName: String = "graft"): Context = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(appName)
-      .config(codegenConf)
-      // library extensions: GroupedTopK strategy + the window-top-k
-      // rewrite rule (plans/GraftExtensions)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE sizes coalescible exchanges from this starting count down to
-      // the 64 MB advisory — `shufflePartitions` alone would CAP the
-      // parallelism of every big shuffle (AQE can only merge, not split;
-      // the r9 x30 probe's pair aggregate spilled hundreds of files per
-      // task because its exchange was pinned at 32 reducers). Standard
-      // AQE discipline: start high, let measured map output decide.
-      .config(
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-      // companion knob: cached plans otherwise pin their UNCOALESCED
-      // initial partitioning (AQE may not change cached-plan output
-      // partitioning by default), so every consumer of a persisted
-      // intermediate would launch 256 tiny tasks per stage
-      .config(
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // runtime join-to-broadcast conversions capped at 1 MB compressed
-      // (see Bench/MemProbe note: a 10 MB-compressed side can deserialize
-      // to a build-OOM-sized hashed relation mid-job); pins still apply
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "1048576")
-      // shuffle/spill compression: lz4 locally, env-overridable. r10 A/B:
-      // zstd LOSES on small-exchange corpora (sf0.1: per-block CPU with no
-      // byte payoff, e.g. llm_tfidf_pairs 2.36→3.65 s min) and WINS once
-      // shuffles/spills reach tens of GB (x30 corpus: tfidf −20% wall,
-      // −59% spill-disk bytes, −44% GC; prefix −30%/−59%/−79%, hashes
-      // identical) — set SPARK_GRAFT_IO_CODEC=zstd on big-shuffle fleets.
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = builder(s"local[$cores]", shufflePartitions)
+      .appName(appName).getOrCreate()
     // getOrCreate may return a pre-existing session whose extensions were
     // fixed at first build — the runtime registration path covers that
     graft.plans.RewriteWindowTopK.register(spark)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines: exact,
@@ -64,11 +64,10 @@ object Dedup {
     lastPersisted.clear()
   }
 
-  /** Broadcast pin that stays subordinate to the session's diagnostic
-    * regime: an explicit broadcast() hint overrides
-    * `spark.sql.autoBroadcastJoinThreshold`, so with the hint unconditional
-    * the MemProbe SPARK_GRAFT_NO_BCAST knob (threshold = -1) could no
-    * longer turn broadcasting off to isolate misestimates — the r8 advisory.
+  /** Broadcast pin that stays subordinate to the session's own threshold:
+    * an explicit broadcast() hint overrides
+    * `spark.sql.autoBroadcastJoinThreshold`, so a session that sets it to
+    * -1 to turn broadcasting off would otherwise still broadcast here.
     * When the session has auto-broadcast fully disabled we honor it and
     * leave the join strategy to the planner; everywhere else the hint pins
     * the per-doc side (see the cold-cache misestimate notes at call sites). */
@@ -726,15 +725,10 @@ object Dedup {
     * all three): 4M → 185.9 s / 245 GB mem-spill / 132.8 s GC; 1.5M →
     * 167.2 s / 205 GB / 96.5 s; 750k → 171.3 s / 109 GB / 110.7 s (task
     * overhead starts losing the spill win). The residual spill lives in
-    * the pair SUM aggregate, not this knob.
-    * Overridable per session (`spark.graft.tfidf.pairIncidencesPerTask`)
-    * for A/B probes; np must stay a pure function of the CORPUS within one
-    * probe pair so normal/tight runs partition — and sum — identically. */
+    * the pair SUM aggregate, not this constant. np is a pure function of
+    * the CORPUS, so normal/tight probe runs partition — and sum —
+    * identically. */
   private val TargetPairIncidencesPerTask = 1500000L
-
-  private def pairIncidencesPerTask(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.tfidf.pairIncidencesPerTask")
-      .map(_.toLong).getOrElse(TargetPairIncidencesPerTask)
 
   /** Posting-bucket partition count sized to the PAIR EXPLOSION (see the
     * r10 note on [[tfidfCosinePairs]]): Σ_t df(t)·(df(t)−1)/2 over the
@@ -757,7 +751,7 @@ object Dedup {
       .head()
     val incidences = if (r.isNullAt(0)) 0.0 else r.getDouble(0)
     val np =
-      math.ceil(incidences / pairIncidencesPerTask(w.sparkSession)).toInt
+      math.ceil(incidences / TargetPairIncidencesPerTask).toInt
     if (np <= session) None else Some(math.min(np, 8192))
   }
 

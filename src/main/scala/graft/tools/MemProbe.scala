@@ -48,74 +48,16 @@ object MemProbe {
     val cores = if (args.length > 3) args(3).toInt else 32
     require(mode == "normal" || mode == "tight", s"bad mode $mode")
     // SPARK_GRAFT_MASTER=local-cluster[...] reruns the battery with
-    // multi-process executors (the Verify.scala wiring): the content
-    // hashes must match the local[] run — multi-process SHUFFLE at 10x
-    // volume returning identical answers.
+    // multi-process executors: the content hashes must match the local[]
+    // run — multi-process SHUFFLE at 10x volume returning identical answers.
     val master =
       sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cores]")
-    val builder0 = org.apache.spark.sql.SparkSession.builder()
-      .master(master)
-      .config(graft.engine.Context.codegenConf)
-    val builder = (if (master.startsWith("local-cluster")) builder0
-        .config("spark.executor.extraClassPath",
-          System.getProperty("java.class.path"))
-        .config("spark.executor.extraJavaOptions",
-          Seq("java.lang", "java.lang.invoke", "java.lang.reflect",
-            "java.io", "java.net", "java.nio", "java.util",
-            "java.util.concurrent", "java.util.concurrent.atomic",
-            "sun.nio.ch", "sun.nio.cs", "sun.security.action",
-            "sun.util.calendar")
-            .map(p => s"--add-opens=java.base/$p=ALL-UNNAMED")
-            .mkString(" "))
-      else builder0)
+    val builder = graft.engine.Context.builder(master, 32)
       // local-cluster executors default to 1g; SPARK_GRAFT_EXEC_MEM
       // sizes them like a real executor (the worker memory in the
       // master string is a capacity cap, not the executor size)
       .config("spark.executor.memory",
         sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "1g"))
-      // diagnostic knob: SPARK_GRAFT_NO_BCAST=1 disables broadcast
-      // joins (isolates planner-side broadcast size misestimates).
-      // Dedup's explicit broadcast() pins on the tfidf norm joins defer
-      // to this: pinBroadcast checks the session threshold and skips the
-      // hint when it is -1, so the knob genuinely reaches every join
-      // (the r8 advisory found the hint silently overriding it)
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        if (sys.env.contains("SPARK_GRAFT_NO_BCAST")) "-1"
-        else "10485760")
-      // A/B knob for shuffle/spill compression (core conf, builder-only):
-      // guide-§2.3 "measure both" — zstd trades CPU for bytes
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE partition sizing (r10): shuffle.partitions is the FLOOR a
-      // shuffle can coalesce down to only if it also STARTS higher —
-      // with the initial count pinned at 32, a 30x corpus's pair
-      // aggregate got 32 reduce tasks and spilled hundreds of files
-      // per task (the r9 tfidf fan-in floor). Starting every
-      // coalescible exchange at 256 lets AQE size partitions to the
-      // measured map output (64 MB advisory) in both directions:
-      // small corpora coalesce back to a handful, big shuffles keep
-      // the parallelism their volume needs. Standard AQE discipline.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-      // companion knob: cached plans otherwise pin their UNCOALESCED
-      // initial partitioning (AQE may not change cached-plan output
-      // partitioning by default), so every consumer of a persisted
-      // intermediate would launch 256 tiny tasks per stage
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // runtime join-to-broadcast conversions are capped at 1 MB of
-      // COMPRESSED shuffle bytes (not the 10 MB static default): once
-      // canChangeCachedPlanOutputPartitioning let AQE replan above
-      // persisted intermediates, a ~10 MB-compressed side deserialized
-      // into a hashed relation big enough to OOM the build mid-x30-job
-      // (llm_dedup_prefix). 1 MB compressed ≈ ≤30 MB built — safe on any
-      // executor; broadcasts that matter are pinned at the operator.
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "1048576")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.ui.enabled", "false")
     val spark = (if (mode == "tight") {
       // squeeze the unified-memory region: execution+storage get 20% of
       // a heap the caller already shrank via SPARK_DRIVER_MEM. 32
@@ -141,9 +83,6 @@ object MemProbe {
           "false")
     } else builder).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // A/B knob for the tfidf pair stage (Dedup.postingPairParts)
-    sys.env.get("SPARK_GRAFT_TFIDF_INC").foreach(v =>
-      spark.conf.set("spark.graft.tfidf.pairIncidencesPerTask", v))
 
     // probes that target a scale-probe corpus synthesize it on demand
     // (the driver may clean target/ between rounds; the synth is

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 
 /** Plan auditor: prints the markers that matter for the 100 TB design
@@ -13,18 +12,7 @@ object PlanAudit {
     val names = if (args.nonEmpty) args.toSeq
       else Seq("tpch_q5", "tpch_q7", "tpch_q8", "tpch_q21",
         "llm_dedup_minhash", "llm_embed_ann_pairs")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config(graft.engine.Context.codegenConf)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      // audit the plans users get: graft optimizer rules active
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.engine.Context.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     names.foreach { name =>

@@ -65,38 +65,7 @@ object SkewProbe {
   def main(args: Array[String]): Unit = {
     val outJson = args.headOption.getOrElse("BENCH_SKEW_r08.json")
     val nDocs = if (args.length > 1) args(1).toInt else 12000
-    val spark = SparkSession.builder().master("local[32]")
-      .config(graft.engine.Context.codegenConf)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE partition sizing (r10): shuffle.partitions is the FLOOR a
-      // shuffle can coalesce down to only if it also STARTS higher —
-      // with the initial count pinned at 32, a 30x corpus's pair
-      // aggregate got 32 reduce tasks and spilled hundreds of files
-      // per task (the r9 tfidf fan-in floor). Starting every
-      // coalescible exchange at 256 lets AQE size partitions to the
-      // measured map output (64 MB advisory) in both directions:
-      // small corpora coalesce back to a handful, big shuffles keep
-      // the parallelism their volume needs. Standard AQE discipline.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-      // companion knob: cached plans otherwise pin their UNCOALESCED
-      // initial partitioning (AQE may not change cached-plan output
-      // partitioning by default), so every consumer of a persisted
-      // intermediate would launch 256 tiny tasks per stage
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // runtime join-to-broadcast conversions are capped at 1 MB of
-      // COMPRESSED shuffle bytes (not the 10 MB static default): once
-      // canChangeCachedPlanOutputPartitioning let AQE replan above
-      // persisted intermediates, a ~10 MB-compressed side deserialized
-      // into a hashed relation big enough to OOM the build mid-x30-job
-      // (llm_dedup_prefix). 1 MB compressed ≈ ≤30 MB built — safe on any
-      // executor; broadcasts that matter are pinned at the operator.
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "1048576")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.engine.Context.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val skewDir = s"target/skew-probe/zipf-$nDocs"

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc job/stage profiler for a named gated query (not part of the
   * driver contract): runs the query under the exact Bench session config
@@ -10,24 +9,11 @@ import org.apache.spark.sql.SparkSession
   * attributing a latency-bound query's cost to its stage chain (guide
   * §1.1/§7.1; the UI is disabled in this sandbox, so this is the
   * programmatic stand-in). Usage: runMain graft.tools.StageProfile <query>
-  * [<query> ...]. Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_INIT_PARTS. */
+  * [<query> ...]. Env: SPARK_GRAFT_SF_DIR. */
 object StageProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config(graft.engine.Context.codegenConf)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS", "256"))
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "1048576")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.engine.Context.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     final case class StageRec(id: Int, name: String, var tasks: Int = 0,

@@ -6,7 +6,7 @@ import org.apache.spark.metrics.source.CodegenMetrics
   * generated-class cache holds the working set. At Spark's default of
   * 100 entries a TPC-H pass (~270 distinct classes) evicts every class
   * before it comes round again, so each pass recompiled all of them;
-  * `Context.codegenConf` sizes the cache for the whole suite. */
+  * `Context.sessionConf` sizes the cache for the whole suite. */
 class CodegenCacheSpec extends SparkSpec {
 
   /** One pass over the 22 TPC-H queries with caches released before each

@@ -9,7 +9,9 @@ import java.nio.file.Files
   * (reference context.rs:34-172 surface). */
 class ContextSpec extends SparkSpec {
 
-  private lazy val ctx = new Context(spark)
+  // its own session: the Context sets its shuffle-partition count there,
+  // not in the session every suite shares
+  private lazy val ctx = new Context(spark.newSession())
 
   private def tmpCsv(content: String, name: String): String = {
     val dir = Files.createTempDirectory("graft-csv")
@@ -104,9 +106,10 @@ class ContextSpec extends SparkSpec {
   }
 
   test("shufflePartitions ctor param reaches session conf") {
-    new Context(spark, shufflePartitions = 16)
-    assert(spark.conf.get("spark.sql.shuffle.partitions") == "16")
-    new Context(spark, shufflePartitions = 4)
-    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    val s = spark.newSession()
+    new Context(s, shufflePartitions = 16)
+    assert(s.conf.get("spark.sql.shuffle.partitions") == "16")
+    new Context(s, shufflePartitions = 4)
+    assert(s.conf.get("spark.sql.shuffle.partitions") == "4")
   }
 }

@@ -8,7 +8,9 @@ import org.apache.spark.sql.functions._
   * (dataframe.rs:30-181), composed through the Context. */
 class GraftFrameSpec extends SparkSpec {
 
-  private lazy val ctx = new Context(spark)
+  // its own session: the Context sets its shuffle-partition count there,
+  // not in the session every suite shares
+  private lazy val ctx = new Context(spark.newSession())
   private def li = GraftFrame(ctx.readParquet(s"$sf/lineitem.parquet"))
   private def ord = GraftFrame(ctx.readParquet(s"$sf/orders.parquet"))
 

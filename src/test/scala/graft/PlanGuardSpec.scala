@@ -181,7 +181,11 @@ class PlanGuardSpec extends SparkSpec {
     "llm_dedup_prefix" -> (36, 1, 0, 0),
     "llm_dedup_ngram" -> (13, 0, 0, 0),
     "llm_corpus_report" -> (3, 0, 0, 0),
-    "llm_ccnet_buckets" -> (79, 0, 0, 0),
+    // ccnet 79 → 78 under the shipped session config: the persisted scored
+    // set reports its AQE-coalesced partitioning, so the n_docs/max_id
+    // scalar aggregate above it needs no SinglePartition exchange
+    // (plans/sessionconf/)
+    "llm_ccnet_buckets" -> (78, 0, 0, 0),
     "llm_bpe_encode" -> (4, 0, 0, 0),
     "llm_embed_pq_recall" -> (14, 1, 8, 4),
     "llm_pipeline_curate_v2" -> (13, 3, 0, 3),

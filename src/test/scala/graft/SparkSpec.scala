@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session base for all suites — one JVM-wide SparkSession
-  * (getOrCreate), local[4], UTC, AQE on, plus `Context.codegenConf`. */
+  * (getOrCreate) on local[4], built from `Context.sessionConf` like every
+  * shipped session, so plan guards pin the plans users get. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf: String = "/root/testdata/sf0.001"
@@ -40,18 +41,10 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = graft.engine.Context.builder("local[4]", 4)
       .appName("graft-test")
-      // the compiled-class cache is JVM-wide: sized here, every suite
-      // reuses the classes earlier suites compiled
-      .config(graft.engine.Context.codegenConf)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
