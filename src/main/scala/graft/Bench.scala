@@ -1,5 +1,7 @@
 package graft
 
+import graft.engine.QueryProfile
+
 /** Benchmark main (driver contract): runs the headline queries on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
@@ -162,29 +164,14 @@ object Bench {
 
     val results = headline.flatMap { name =>
       SparkEntry.queries.get(name).map { fn =>
-        def onePass(): Double = {
-          // COLD scoped caches per pass (r9): Dedup's persistScoped now
-          // includes OUTPUT-sized entries (tfidf qualifying sets), so
-          // without this reps 2+ read rep 1's cached result and the
-          // reported min/median measures a cache fetch, not the operator.
-          // Also kills cross-QUERY sharing (e.g. llm_tfidf_pairs warming
-          // _auto's weight table) — every row is now the solo cold cost.
-          // r8 and earlier tfidf-family rows shared warm weight caches
-          // across reps and read slightly low.
-          graft.operators.Dedup.releaseCaches()
-          spark.sharedState.cacheManager.clearCache()
-          // GC hygiene (r9): dropping cache blocks every pass creates
-          // allocation churn whose collection otherwise lands INSIDE a
-          // neighbor's timed pass — observed as untouched pure-SQL queries
-          // (tpch_q11) jittering 0.7 ↔ 2.3 s between identical runs while
-          // the sentinel stayed flat. Collect outside the timed region.
-          System.gc()
-          val t0 = System.nanoTime()
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-                (System.nanoTime() - t0) / 1e9 }
+        // every pass from COLD caches (r9), so reps 2+ cannot read rep 1's
+        // output-sized persists and no query reads a neighbour's warm
+        // tables: each row is the query's solo cold cost (r8 and earlier
+        // tfidf-family rows shared warm weight caches and read slightly low)
+        def onePass(): Double =
+          try QueryProfile.pass(spark)(fn(spark, sfDir))
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0 }
-        }
         val first = onePass()
         val base = first +: (2 to basePasses).map(_ => onePass())
         // Fast tail (min < 300 ms): JVM/scheduler wobble is a large

@@ -696,14 +696,9 @@ object Dedup {
     * least one shingle; norms are over each document's kept terms. */
   def tfidfWeights(df: DataFrame, idCol: String, textCol: String,
                    n: Int = 3,
-                   maxDocFreq: Option[Int] = Some(500),
-                   cache: Boolean = true): DataFrame = {
-    // cache=false: single-action consumers (the sampled pre-flight
-    // statistic) skip the MEMORY_AND_DISK write — exchange reuse already
-    // dedups the shared shuffle inside one action
-    val tf = if (cache) persistScoped(s"tfidf:$idCol:$textCol:$n",
-        shingleTf(df, idCol, textCol, n))
-      else shingleTf(df, idCol, textCol, n)
+                   maxDocFreq: Option[Int] = Some(500)): DataFrame = {
+    val tf = persistScoped(s"tfidf:$idCol:$textCol:$n",
+      shingleTf(df, idCol, textCol, n))
     val docFreq = tf.groupBy(col("sh")).agg(count(lit(1)).as("df"))
       .filter(maxDocFreq.map(cap => col("df") <= cap).getOrElse(lit(true)))
     val nDocs = tf.agg(countDistinct(col(idCol)).as("n_docs"))
@@ -911,17 +906,6 @@ object Dedup {
       : DataFrame = {
     val (annot, norms) =
       tfidfPrefixParts(df, idCol, textCol, n, threshold, maxDocFreq)
-    tfidfPrefixFromParts(annot, norms, idCol,
-      s"$idCol:$textCol:$n:$maxDocFreq:$threshold", threshold)
-  }
-
-  /** The candidate + verify tail of [[tfidfCosinePairsPrefix]] over
-    * already-built parts — split out so [[tfidfCosinePairsAuto]] can feed
-    * it the SAME annotated table its pre-flight statistic just
-    * materialized instead of rebuilding anything. */
-  private def tfidfPrefixFromParts(annot: DataFrame, norms: DataFrame,
-                                   idCol: String, outKey: String,
-                                   threshold: Double): DataFrame = {
     val pref = annot.filter(col("__keep")).select(col("sh"), col(idCol))
     val cands = pref.select(col("sh"), col(idCol).as("id_a"))
       .join(pref.select(col("sh"), col(idCol).as("id_b")), "sh")
@@ -951,7 +935,8 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("cosine"))
     // output-sized persist before the caller's deterministic global sort —
     // same range-sort double-execution argument as tfidfCosinePairs
-    persistScoped(s"tfidfPOut:$outKey", out)
+    persistScoped(
+      s"tfidfPOut:$idCol:$textCol:$n:$maxDocFreq:$threshold", out)
   }
 
   /** Shared machinery of the prefix-filtered TF-IDF path: per-doc `norms`
@@ -963,32 +948,19 @@ object Dedup {
     * One persisted table serves all three consumers — the candidate join
     * (filter __keep), the exact verify (full rows), and the
     * [[tfidfPrefixMassRatio]] statistic (one count aggregate over
-    * (sh, __keep)) — instead of the r8 layout's separate wn + pref, which
-    * made the statistic pay a second window pass. Linear aggregates + one
-    * per-doc window; NO pair join.
-    *
-    * `tag` namespaces the persistScoped keys so a SAMPLED pre-flight
-    * (see [[tfidfCosinePairsAuto]]) does not evict the full-corpus caches
-    * its selected branch is about to build. */
+    * (sh, __keep)). Linear aggregates + one per-doc window; NO pair join. */
   private def tfidfPrefixParts(df: DataFrame, idCol: String,
                                textCol: String, n: Int, threshold: Double,
-                               maxDocFreq: Option[Int], tag: String = "",
-                               cache: Boolean = true)
+                               maxDocFreq: Option[Int])
       : (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
     require(threshold > 0 && threshold <= 1,
       s"threshold=$threshold must be in (0, 1] for the prefix bound")
-    // same key layout as tfidfCosinePairs (tag "" ⇒ the SAME key): the two
-    // paths' weight tables are plan-identical, so whichever runs first
-    // warms the other — the auto path's branches share it for free.
-    // cache=false (the sampled pre-flight): every part is consumed by ONE
-    // action, so persisting would only add MEMORY_AND_DISK writes —
-    // exchange reuse dedups w's two consumers within the action.
-    def scoped(key: String, d: DataFrame): DataFrame =
-      if (cache) persistScoped(key, d) else d
-    val w = scoped(s"tfidfW$tag:$idCol:$textCol:$n:$maxDocFreq",
-      tfidfWeights(df, idCol, textCol, n, maxDocFreq, cache))
-    val norms = scoped(s"tfidfN$tag:$idCol:$textCol:$n:$maxDocFreq",
+    // same keys as tfidfCosinePairs: the two paths' weight tables are
+    // plan-identical, so whichever runs first warms the other
+    val w = persistScoped(s"tfidfW:$idCol:$textCol:$n:$maxDocFreq",
+      tfidfWeights(df, idCol, textCol, n, maxDocFreq))
+    val norms = persistScoped(s"tfidfN:$idCol:$textCol:$n:$maxDocFreq",
       w.groupBy(col(idCol))
         .agg(sqrt(sum(col("wgt") * col("wgt"))).as("nrm")))
     val wn = w.join(norms, idCol)
@@ -999,8 +971,8 @@ object Dedup {
       .orderBy(col("mw").desc, col("sh").asc)
     val sufBound = sum(col("nw") * col("mw"))
       .over(byDoc.rowsBetween(Window.currentRow, Window.unboundedFollowing))
-    val annot = scoped(
-      s"tfidfA$tag:$idCol:$textCol:$n:$maxDocFreq:$threshold",
+    val annot = persistScoped(
+      s"tfidfA:$idCol:$textCol:$n:$maxDocFreq:$threshold",
       wn.join(maxw, "sh")
         // − 1e-6: covers the round(·,6) threshold slack (5e-7) plus float
         // error — see the docstring; a larger epsilon only adds candidates
@@ -1009,8 +981,9 @@ object Dedup {
     (annot, norms)
   }
 
-  /** The cheap corpus-skew statistic behind [[tfidfCosinePairsAuto]]:
-    * the fraction of posting-list PAIR MASS surviving the prefix filter,
+  /** The exact corpus-skew statistic that [[tfidfCosinePairsAuto]]'s
+    * sampled pre-flight estimates (SkewProbe and SkewProbeSpec read it as
+    * the reference): the fraction of posting-list PAIR MASS surviving the prefix filter,
     * Σ_t df_pref(t)² / Σ_t df(t)². Pair mass is exactly the number of
     * in-bucket ordered pairs each path's candidate join generates, so
     * the ratio predicts the prefix path's candidate-stage saving
@@ -1019,9 +992,23 @@ object Dedup {
     * doubles). 1.0 when the corpus has no kept terms. */
   def tfidfPrefixMassRatio(df: DataFrame, idCol: String, textCol: String,
                            n: Int = 3, threshold: Double = 0.5,
-                           maxDocFreq: Option[Int] = Some(500)): Double =
-    massRatioOf(
-      tfidfPrefixParts(df, idCol, textCol, n, threshold, maxDocFreq)._1)
+                           maxDocFreq: Option[Int] = Some(500)): Double = {
+    val (annot, _) =
+      tfidfPrefixParts(df, idCol, textCol, n, threshold, maxDocFreq)
+    // both pair masses in ONE aggregate: per-term total and
+    // prefix-surviving counts, then Σc² / Σcp². Double sums — Σ df² can
+    // exceed Long range on an uncapped 100 TB corpus (df up to N ⇒ df² up
+    // to 10¹⁸ per term).
+    val r = annot.groupBy(col("sh"))
+      .agg(count(lit(1)).as("c"),
+        sum(when(col("__keep"), 1L).otherwise(0L)).as("cp"))
+      .agg(sum(col("c").cast("double") * col("c")).as("tot"),
+        sum(col("cp").cast("double") * col("cp")).as("pre"))
+      .head()
+    val total = if (r.isNullAt(0)) 0.0 else r.getDouble(0)
+    if (total == 0.0) 1.0
+    else (if (r.isNullAt(1)) 0.0 else r.getDouble(1)) / total
+  }
 
   /** The SAMPLED pre-flight statistic exactly as [[tfidfCosinePairsAuto]]
     * computes it (public so SkewProbeSpec pins the production computation,
@@ -1029,13 +1016,12 @@ object Dedup {
     * (`xxhash64(id) mod m = 0`), doc-frequency cap SCALED to the sample
     * (`max(1, cap/m)` — an unscaled cap keeps exactly the hot terms the
     * full statistic drops and flips the decision; see
-    * [[tfidfCosinePairsAuto]]), persist-free single-action plan under its
-    * own cache tag. */
+    * [[tfidfCosinePairsAuto]]), persist-free single-action plan. */
   def tfidfPrefixMassRatioSampled(df: DataFrame, idCol: String,
                                   textCol: String, n: Int = 3,
                                   threshold: Double = 0.5,
                                   maxDocFreq: Option[Int] = Some(500),
-                                  m: Int = 8): Double = {
+                                  m: Int = TfidfAutoSampleMod): Double = {
     val stat = df.filter(pmod(xxhash64(col(idCol)), lit(m.toLong)) === 0)
     val sampleCap = maxDocFreq.map(c => math.max(1, c / m))
     // FUSED chain (r10): the unfused route (tfidfPrefixParts) pays ~11
@@ -1052,7 +1038,7 @@ object Dedup {
     //    window's per-row __keep bit collapses to "the first k sorted
     //    positions" with k from one running-sum pass over each doc's
     //    sorted term array — no window, no sort exchange.
-    // Same mathematics as massRatioOf∘tfidfPrefixParts on the same sample
+    // Same mathematics as tfidfPrefixMassRatio on the same sample
     // (Σ df_pref² / Σ df² under the sample-scaled cap) up to float
     // summation order — immaterial against the two-orders-of-magnitude
     // regime separation SkewProbeSpec pins.
@@ -1113,21 +1099,13 @@ object Dedup {
     else (if (r.isNullAt(0)) 0.0 else r.getDouble(0)) / total
   }
 
-  /** Both pair masses in ONE aggregate over the annotated posting table:
-    * per-term total count and prefix-surviving count, then Σc² / Σcp².
-    * Double sums — Σ df² can exceed Long range on an uncapped
-    * 100 TB corpus (df up to N ⇒ df² up to 10¹⁸ per term). */
-  private def massRatioOf(annot: DataFrame): Double = {
-    val r = annot.groupBy(col("sh"))
-      .agg(count(lit(1)).as("c"),
-        sum(when(col("__keep"), 1L).otherwise(0L)).as("cp"))
-      .agg(sum(col("c").cast("double") * col("c")).as("tot"),
-        sum(col("cp").cast("double") * col("cp")).as("pre"))
-      .head()
-    val total = if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-    if (total == 0.0) 1.0
-    else (if (r.isNullAt(1)) 0.0 else r.getDouble(1)) / total
-  }
+  /** [[tfidfCosinePairsAuto]]'s default cutoff: the prefix path runs when
+    * it keeps at most this share of the posting pair mass. SkewProbe and
+    * SkewProbeSpec check it separates the measured regimes. */
+  private[graft] val TfidfAutoMassRatioCutoff = 0.35
+
+  /** The auto path's pre-flight samples 1 document in this many. */
+  private[graft] val TfidfAutoSampleMod = 8
 
   /** Selection rule frozen from the round-8 skew probe (committed
     * artifact BENCH_SKEW_r08.json): run [[tfidfCosinePairsPrefix]] when
@@ -1140,8 +1118,8 @@ object Dedup {
     * emit the identical exact pair set, so a mis-prediction costs only
     * time, never correctness.
     *
-    * The pre-flight is a deterministic 1-in-`statSampleMod` document
-    * sample by default (`xxhash64(id) mod m = 0` — stable across runs and
+    * The pre-flight is a deterministic 1-in-[[TfidfAutoSampleMod]]
+    * document sample (`xxhash64(id) mod m = 0` — stable across runs and
     * engines, no RNG): pair mass is a ratio of Σ df² sums dominated by
     * hot terms whose doc frequencies scale uniformly under document
     * sampling, and the measured regimes sit two orders of magnitude apart
@@ -1149,8 +1127,8 @@ object Dedup {
     * SkewProbeSpec pins that the sampled estimator lands on the exact
     * statistic's side of the cutoff on both corpora. An empty sample
     * (tiny corpus) yields ratio 1.0 ⇒ the plain path, the right call at
-    * tiny scale anyway. Sampled parts live under their own cache tag and
-    * share nothing with the branches. Measured decision cost (cold,
+    * tiny scale anyway. The sampled statistic persists nothing and shares
+    * nothing with the branches. Measured decision cost (cold,
     * min-of-3): a FIXED ~1.5–3 s floor — mostly stage-launch latency for
     * the statistic's ~8-stage chain, data-independent at small corpora
     * (AQE off saves nothing; m=32 halves it) — which reads 2.27× plain at
@@ -1162,21 +1140,6 @@ object Dedup {
     * chosen branch directly; the wrapper exists for corpora big enough
     * that a wrong branch costs minutes.
     *
-    * `statSampleMod = 1` opts into the exact full-corpus statistic, which
-    * shares its scoped caches with the branches: the annotated posting
-    * table it materializes IS the prefix branch's input (selected ⇒ the
-    * branch runs only its candidate + verify tail), and the weight/norm
-    * tables are the plain branch's inputs. History, honestly: r9 first
-    * shipped this sharing as the default because under the pre-r9 bench
-    * discipline (warm scoped caches across passes) it measured ≤1.15×
-    * the selected branch — but under the honest cold-cache-per-pass
-    * discipline the full statistic's residual (the wn join + maxw
-    * aggregate + suffix-bound window + posting-sized cache write that
-    * PLAIN never consumes) costs ≈1× the plain branch's entire solo time
-    * on the near-uniform corpus (measured: auto 5.4–6.0 s vs plain
-    * ~2.6 s cold at sf0.1). Sharing only pays when PREFIX wins; sampling
-    * is cheap on both sides, so sampled is the default.
-    *
     * EAGER by design: CONSTRUCTING this DataFrame runs Spark jobs (the
     * posting-table build + one mass aggregate) to make the plan-shape
     * decision, and the selection is frozen at construction — callers
@@ -1184,43 +1147,24 @@ object Dedup {
     * a source that mutates between construction and action keeps the
     * originally selected branch (both branches stay exact regardless).
     * Since r10 [[tfidfCosinePairs]] is eager too (its pair-shuffle sizing
-    * statistic); the sampled pre-flight here stays uncached/tagged so the
-    * two eager steps never fight over scoped caches. */
+    * statistic); the sampled pre-flight here stays uncached so the two
+    * eager steps never fight over scoped caches. */
   def tfidfCosinePairsAuto(df: DataFrame, idCol: String, textCol: String,
                            n: Int = 3, threshold: Double = 0.5,
                            maxDocFreq: Option[Int] = Some(500),
-                           massRatioCutoff: Double = 0.35,
-                           statSampleMod: Int = 8): DataFrame = {
-    if (statSampleMod > 1) {
-      // sampled statistic with the cap SCALED to the sample: the cap is
-      // defined against full-corpus doc counts, and a term with full df D
-      // shows sampled df ≈ D/m — an unscaled cap keeps exactly the hot
-      // terms the full statistic drops, and those low-weight terms sit in
-      // the prunable tail, dragging the sampled ratio across the cutoff
-      // (observed on the bench corpus: unscaled-cap sample read below the
-      // cutoff vs the exact 0.539 and mis-selected the prefix path)
-      if (tfidfPrefixMassRatioSampled(df, idCol, textCol, n, threshold,
-          maxDocFreq, statSampleMod) <= massRatioCutoff)
-        tfidfCosinePairsPrefix(df, idCol, textCol, n, threshold, maxDocFreq)
-      else tfidfCosinePairs(df, idCol, textCol, n, threshold, maxDocFreq)
-    } else {
-      val (annot, norms) =
-        tfidfPrefixParts(df, idCol, textCol, n, threshold, maxDocFreq)
-      if (massRatioOf(annot) <= massRatioCutoff)
-        // the statistic's annot/norms ARE the branch's inputs — no rebuild
-        tfidfPrefixFromParts(annot, norms, idCol,
-          s"$idCol:$textCol:$n:$maxDocFreq:$threshold", threshold)
-      else {
-        // plain shares the weight + norm caches (same scoped keys) but
-        // never reads the annotated table — release its posting-sized
-        // cache now rather than holding it until the next scoped call
-        // (at production scale that's a corpus-sized MEMORY_AND_DISK
-        // entry competing with the pair join for executor storage)
-        annot.unpersist(blocking = false)
-        tfidfCosinePairs(df, idCol, textCol, n, threshold, maxDocFreq)
-      }
-    }
-  }
+                           massRatioCutoff: Double = TfidfAutoMassRatioCutoff)
+      : DataFrame =
+    // sampled statistic with the cap SCALED to the sample: the cap is
+    // defined against full-corpus doc counts, and a term with full df D
+    // shows sampled df ≈ D/m — an unscaled cap keeps exactly the hot
+    // terms the full statistic drops, and those low-weight terms sit in
+    // the prunable tail, dragging the sampled ratio across the cutoff
+    // (observed on the bench corpus: unscaled-cap sample read below the
+    // cutoff vs the exact 0.539 and mis-selected the prefix path)
+    if (tfidfPrefixMassRatioSampled(df, idCol, textCol, n, threshold,
+        maxDocFreq) <= massRatioCutoff)
+      tfidfCosinePairsPrefix(df, idCol, textCol, n, threshold, maxDocFreq)
+    else tfidfCosinePairs(df, idCol, textCol, n, threshold, maxDocFreq)
 
   /** [[shingles]] with term frequencies: one row per (id, shingleHash, tf)
     * where tf counts the shingle's occurrences within the document (the

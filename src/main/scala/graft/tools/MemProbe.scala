@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import graft.engine.QueryProfile
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Memory-pressure probe: run the heaviest scale-probe queries on the
@@ -8,11 +9,9 @@ import org.apache.spark.sql.functions._
   * paths a 100 TB job depends on actually engage — hash-agg spill,
   * sort/WindowExec spill, the GroupedTopK per-partition valve — and
   * prove the contract "spill, never OOM, same answer":
-  *  - per query: wall-clock, bytes spilled (memory + disk, from a
-  *    TaskEnd listener), peak execution memory, and an ORDER-INSENSITIVE
-  *    content hash of the full result (sum of per-row xxhash64 over the
-  *    canonical JSON of the name-sorted columns — partitioning- and
-  *    config-independent for the deterministic gated queries);
+  *  - per query: wall-clock, bytes spilled (memory + disk), peak
+  *    execution memory and task JVM GC time (from QueryProfile), and an
+  *    ORDER-INSENSITIVE [[contentHash]] of the full result;
   *  - run twice by the harness: `normal` (the usual 8g heap / default
   *    spark.memory.fraction) and `tight` (small heap via
   *    SPARK_DRIVER_MEM + fraction 0.2). The merged artifact asserts
@@ -40,6 +39,19 @@ object MemProbe {
     "llm_dedup_minhash", "llm_dedup_substring", "llm_bpe_encode",
     "llm_winnow", "llm_hits", "llm_lm_kneser_ney",
     "events_dedup_window", "llm_domain_cap", "llm_dedup_exact")
+
+  /** Order-insensitive content hash of a result: the sum of per-row
+    * xxhash64 over the canonical JSON of the name-sorted columns, so it is
+    * partitioning- and config-independent for the deterministic gated
+    * queries (pmod before the sum: ANSI mode would overflow a raw sum). */
+  private[graft] def contentHash(df: DataFrame): Long = {
+    val cols = df.columns.sorted.map(col).toSeq
+    val h = df
+      .select(pmod(xxhash64(to_json(struct(cols: _*))), lit(1000000007L))
+        .as("__h"))
+      .agg(sum(col("__h"))).head()
+    if (h.isNullAt(0)) 0L else h.getLong(0)
+  }
 
   def main(args: Array[String]): Unit = {
     val outJson = args(0)
@@ -99,26 +111,6 @@ object MemProbe {
       ScaleProbe.synth(spark, src, dataDir, synthR.get)
     }
 
-    val spilledMem = new java.util.concurrent.atomic.AtomicLong(0)
-    val spilledDisk = new java.util.concurrent.atomic.AtomicLong(0)
-    val peakExec = new java.util.concurrent.atomic.AtomicLong(0)
-    // task-attributed JVM GC time: under the tight budget this separates
-    // "slow because spilling to disk" from "slow because the collector is
-    // thrashing a too-small heap" (the r8 BPE-encode 2.4x question)
-    val gcMs = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          spilledMem.addAndGet(m.memoryBytesSpilled)
-          spilledDisk.addAndGet(m.diskBytesSpilled)
-          gcMs.addAndGet(m.jvmGCTime)
-          peakExec.accumulateAndGet(m.peakExecutionMemory, Math.max(_, _))
-          ()
-        }
-      }
-    })
-
     def s3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
@@ -138,37 +130,31 @@ object MemProbe {
       // tight budget a stale MEMORY_AND_DISK posting table competes with
       // this query's execution memory and distorts its spill reading
       // (within-query persists are the operator's own design and stay)
-      graft.operators.Dedup.releaseCaches()
-      spark.sharedState.cacheManager.clearCache()
+      QueryProfile.cold(spark)
       // collect the dropped blocks before measuring: under the tight
       // budget a pending collection otherwise counts against this query's
       // gc_sec and distorts the spill-vs-GC attribution
       System.gc()
-      spilledMem.set(0); spilledDisk.set(0); peakExec.set(0); gcMs.set(0)
       val fn = graft.SparkEntry.queries(n)
-      val t0 = System.nanoTime()
-      val outcome =
-        try {
-          val df = fn(spark, dataDir)
-          val cols = df.columns.sorted.map(col).toSeq
-          // order-insensitive content hash; config-independent for the
-          // deterministic gated queries (sum over per-row xxhash64)
-          // pmod before the sum: ANSI mode would overflow a raw sum
-          val h = df.select(
-              pmod(xxhash64(to_json(struct(cols: _*))), lit(1000000007L))
-                .as("__h"))
-            .agg(sum(col("__h"))).head()
-          Right(if (h.isNullAt(0)) 0L else h.getLong(0))
-        } catch { case e: Throwable => Left(e) }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // listener delivery is async; drain before reading the counters
-      org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
+      var sec = 0.0
+      var outcome: Either[Throwable, Long] = null
+      // task-attributed JVM GC time (gc_sec): under the tight budget this
+      // separates "slow because spilling to disk" from "slow because the
+      // collector is thrashing a too-small heap" (the r8 BPE-encode 2.4x
+      // question)
+      val prof = QueryProfile.run(spark) {
+        val t0 = System.nanoTime()
+        outcome =
+          try Right(contentHash(fn(spark, dataDir)))
+          catch { case e: Throwable => Left(e) }
+        sec = (System.nanoTime() - t0) / 1e9
+      }
       outcome match {
         case Right(hash) =>
-          val sm = spilledMem.get; val sd = spilledDisk.get
-          val gc = gcMs.get / 1e3
-          println(f"[memprobe:$mode] $n%-26s ${sec}%7.2fs  spillMem ${sm / 1e6}%9.1fMB  spillDisk ${sd / 1e6}%9.1fMB  peakExec ${peakExec.get / 1e6}%8.1fMB  gc ${gc}%6.2fs  hash $hash")
-          s""""$n":{"sec":${s3(sec)},"hash":"$hash","spill_mem_mb":${s3(sm / 1e6)},"spill_disk_mb":${s3(sd / 1e6)},"peak_exec_mb":${s3(peakExec.get / 1e6)},"gc_sec":${s3(gc)},"oom":false}"""
+          val sm = prof.memorySpillBytes; val sd = prof.diskSpillBytes
+          val pe = prof.peakExecBytes; val gc = prof.gcMs / 1e3
+          println(f"[memprobe:$mode] $n%-26s ${sec}%7.2fs  spillMem ${sm / 1e6}%9.1fMB  spillDisk ${sd / 1e6}%9.1fMB  peakExec ${pe / 1e6}%8.1fMB  gc ${gc}%6.2fs  hash $hash")
+          s""""$n":{"sec":${s3(sec)},"hash":"$hash","spill_mem_mb":${s3(sm / 1e6)},"spill_disk_mb":${s3(sd / 1e6)},"peak_exec_mb":${s3(pe / 1e6)},"gc_sec":${s3(gc)},"oom":false}"""
         case Left(e) =>
           // an executor-thread OOM often surfaces wrapped in a generic
           // SparkException (INTERNAL_ERROR / stage-failure text) with no

@@ -12,8 +12,7 @@ object PlanExplain {
     val sf = args(0)
     val name = args(1)
     val spark = graft.engine.Context.local().spark
-    graft.operators.Dedup.releaseCaches()
-    spark.sharedState.cacheManager.clearCache()
+    graft.engine.QueryProfile.cold(spark)
     val df = SparkEntry.queries(name)(spark, sf)
     val sb = new StringBuilder
     sb.append("==== explain(formatted) " + name + " ====\n")

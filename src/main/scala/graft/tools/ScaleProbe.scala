@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.engine.QueryProfile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -157,24 +158,11 @@ object ScaleProbe {
     synth(spark, src, gateDir, gateR)
     if (r2 > 0) synth(spark, src, r2Dir, r2)
 
-    def time(name: String, dir: String): Double = {
-      // COLD scoped caches per pass (r9): Dedup's persistScoped now
-      // includes OUTPUT-sized entries (the tfidf qualifying sets), so
-      // without this a min-of-3 rep 2/3 reads the cached result of rep 1
-      // and the "min" measures a cache fetch, not the operator (observed:
-      // llm_tfidf_pairs x30 0.57 s vs the honest ~146 s). Each timed pass
-      // now rebuilds everything the query builds.
-      graft.operators.Dedup.releaseCaches()
-      spark.sharedState.cacheManager.clearCache()
-      // GC hygiene (r9, same as Bench): collect the dropped cache blocks
-      // outside the timed region so their collection doesn't splash into
-      // this pass's reading
-      System.gc()
-      val fn = graft.SparkEntry.queries(name)
-      val t0 = System.nanoTime()
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    // COLD caches per pass (r9): without them a min-of-3 rep 2/3 read the
+    // cached result of rep 1 (llm_tfidf_pairs x30 0.57 s vs the honest
+    // ~146 s)
+    def time(name: String, dir: String): Double =
+      QueryProfile.pass(spark)(graft.SparkEntry.queries(name)(spark, dir))
     /** Gate columns (…_ok / recall_full booleans) must be all-true. */
     def gateCheck(name: String, dir: String): (Boolean, String) = {
       val df = graft.SparkEntry.queries(name)(spark, dir)

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.engine.QueryProfile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -62,6 +63,16 @@ object SkewProbe {
     done.createNewFile(); ()
   }
 
+  /** (pair count, order-insensitive hash) of an (id_a, id_b, cosine) pair
+    * set: the sum of per-pair xxhash64 (pmod before the sum: ANSI mode
+    * makes a raw xxhash64 sum overflow). */
+  private[graft] def pairHash(df: DataFrame): (Long, Long) = {
+    val r = df.agg(count(lit(1)),
+      sum(pmod(xxhash64(col("id_a"), col("id_b"),
+        col("cosine").cast("string")), lit(1000000007L)))).head()
+    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+  }
+
   def main(args: Array[String]): Unit = {
     val outJson = args.headOption.getOrElse("BENCH_SKEW_r08.json")
     val nDocs = if (args.length > 1) args(1).toInt else 12000
@@ -91,31 +102,15 @@ object SkewProbe {
     def autoB() = Dedup.tfidfCosinePairsAuto(bench, "doc_id", "text",
       n = 3, threshold = 0.5)
 
-    def time1(mk: () => DataFrame): Double = {
-      Dedup.releaseCaches()
-      spark.sharedState.cacheManager.clearCache()
-      // GC hygiene (r9, same as Bench): collect dropped cache blocks
-      // outside the timed region
-      System.gc()
-      val t0 = System.nanoTime()
-      mk().write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def time1(mk: () => DataFrame): Double = QueryProfile.pass(spark)(mk())
     def min3(mk: () => DataFrame): Double =
       Seq(time1(mk), time1(mk), time1(mk)).min
-    def contentHash(df: DataFrame): (Long, Long) = {
-      // pmod before the sum: ANSI mode makes a raw xxhash64 sum overflow
-      val r = df.agg(count(lit(1)),
-        sum(pmod(xxhash64(col("id_a"), col("id_b"),
-          col("cosine").cast("string")), lit(1000000007L)))).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
 
     // warmup both plan shapes on the small corpus
     time1(plainB); time1(prefB)
 
-    val (nPlainS, hPlainS) = contentHash(plainS())
-    val (nPrefS, hPrefS) = contentHash(prefS())
+    val (nPlainS, hPlainS) = pairHash(plainS())
+    val (nPrefS, hPrefS) = pairHash(prefS())
     val equalS = nPlainS == nPrefS && hPlainS == hPrefS
     val ratioSkew = Dedup.tfidfPrefixMassRatio(skew, "doc_id", "text",
       n = 1, threshold = 0.5)
@@ -132,17 +127,19 @@ object SkewProbe {
     println(f"[skew] skew corpus:  plain ${tPlainS}%6.2fs  prefix ${tPrefS}%6.2fs  auto ${tAutoS}%6.2fs  massRatio ${ratioSkew}%6.4f  pairs $nPlainS  equal=$equalS")
     println(f"[skew] bench corpus: plain ${tPlainB}%6.2fs  prefix ${tPrefB}%6.2fs  auto ${tAutoB}%6.2fs  massRatio ${ratioBench}%6.4f")
 
+    val cutoff = Dedup.TfidfAutoMassRatioCutoff
     val note = "Topical corpus, " + nDocs + " docs = rare topic token x10 " +
       "+ 50 Zipf(1) background tokens, every 5th doc a near-copy. massRatio = " +
       "prefix-surviving posting pair mass / total (Dedup." +
-      "tfidfPrefixMassRatio). The auto cutoff 0.35 must separate the " +
-      "two measured regimes with margin; prefix_wins_skew and " +
+      "tfidfPrefixMassRatio). The auto cutoff " + cutoff + " must " +
+      "separate the two measured regimes with margin; prefix_wins_skew and " +
       "equal_outputs must both be true. Timing: min-of-3 with scoped " +
       "caches cleared + System.gc() before every pass (each reading is " +
       "the solo cold cost). auto_sec on BOTH corpora carries the " +
-      "pre-flight-overhead criterion: auto (sampled 1-in-8 statistic " +
+      "pre-flight-overhead criterion: auto (sampled 1-in-" +
+      Dedup.TfidfAutoSampleMod + " statistic " +
       "since r9) must read within ~1.2x the selected branch's solo time."
-    val json = s"""{"probe":"tfidf-skew-crossover","n_docs":$nDocs,"note":"$note","skew":{"plain_sec":${s3(tPlainS)},"prefix_sec":${s3(tPrefS)},"auto_sec":${s3(tAutoS)},"mass_ratio":${s3(ratioSkew)},"pairs":$nPlainS,"equal_outputs":$equalS,"prefix_wins":${tPrefS < tPlainS}},"bench":{"plain_sec":${s3(tPlainB)},"prefix_sec":${s3(tPrefB)},"auto_sec":${s3(tAutoB)},"mass_ratio":${s3(ratioBench)},"plain_wins":${tPlainB < tPrefB}},"auto_cutoff":0.35,"cutoff_separates":${ratioSkew <= 0.35 && ratioBench > 0.35}}"""
+    val json = s"""{"probe":"tfidf-skew-crossover","n_docs":$nDocs,"note":"$note","skew":{"plain_sec":${s3(tPlainS)},"prefix_sec":${s3(tPrefS)},"auto_sec":${s3(tAutoS)},"mass_ratio":${s3(ratioSkew)},"pairs":$nPlainS,"equal_outputs":$equalS,"prefix_wins":${tPrefS < tPlainS}},"bench":{"plain_sec":${s3(tPlainB)},"prefix_sec":${s3(tPrefB)},"auto_sec":${s3(tAutoB)},"mass_ratio":${s3(ratioBench)},"plain_wins":${tPlainB < tPrefB}},"auto_cutoff":$cutoff,"cutoff_separates":${ratioSkew <= cutoff && ratioBench > cutoff}}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson), json)
     println(json)
     spark.stop()

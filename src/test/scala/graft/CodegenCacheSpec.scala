@@ -13,8 +13,7 @@ class CodegenCacheSpec extends SparkSpec {
     * query, as a benchmark pass runs them. Returns each query's rows. */
   private def tpchPass(): Seq[Seq[String]] =
     (1 to 22).map { i =>
-      graft.operators.Dedup.releaseCaches()
-      spark.sharedState.cacheManager.clearCache()
+      graft.engine.QueryProfile.cold(spark)
       SparkEntry.queries(s"tpch_q$i")(spark, sf)
         .collect().map(_.toString).toSeq.sorted
     }

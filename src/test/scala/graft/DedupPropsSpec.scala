@@ -55,11 +55,11 @@ class DedupPropsSpec extends SparkSpec {
       val df = docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text")
       for (t <- Seq(0.3, 0.5, 0.8)) {
-        graft.operators.Dedup.releaseCaches()
+        graft.engine.QueryProfile.cold(spark)
         val plain = Dedup.tfidfCosinePairs(df, "doc_id", "text", 3, t)
           .collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-        graft.operators.Dedup.releaseCaches()
+        graft.engine.QueryProfile.cold(spark)
         val pref = Dedup.tfidfCosinePairsPrefix(df, "doc_id", "text", 3, t)
           .collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet

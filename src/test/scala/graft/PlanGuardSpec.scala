@@ -294,8 +294,7 @@ class PlanGuardSpec extends SparkSpec {
   test("plan fingerprints hold for the headline set: exchange and " +
     "sort-merge-join counts bounded, top-k fusion and filter pushdown " +
     "present") {
-    graft.operators.Dedup.releaseCaches()
-    spark.sharedState.cacheManager.clearCache()
+    graft.engine.QueryProfile.cold(spark)
     val offenders = fingerprints.flatMap {
       case (name, (maxEx, maxSmj, minTopK, minPushed)) =>
         val plan = SparkEntry.queries(name)(spark, sf)
@@ -327,8 +326,7 @@ class PlanGuardSpec extends SparkSpec {
         // absorb _auto's pre-built caches) — reset to a known cache state
         // for these so each bound is tight and order-independent
         if (name.startsWith("llm_tfidf_pairs")) {
-          graft.operators.Dedup.releaseCaches()
-          spark.sharedState.cacheManager.clearCache()
+          graft.engine.QueryProfile.cold(spark)
         }
         val plan = fn(spark, sf).queryExecution.executedPlan.toString
         val cart = "CartesianProduct".r.findAllIn(plan).length

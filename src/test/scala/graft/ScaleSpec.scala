@@ -1,5 +1,6 @@
 package graft
 
+import graft.engine.QueryProfile
 import graft.operators.Scale
 import org.apache.spark.sql.functions._
 
@@ -17,9 +18,9 @@ class ScaleSpec extends SparkSpec {
     // so the pre-exchange `sparkPlan` does not show it
     val grouped = scan.groupBy(col("n_regionkey")).agg(count(lit(1)).as("c"))
     var out: org.apache.spark.sql.DataFrame = null
-    assert(jobsStartedBy {
+    assert(QueryProfile.run(spark) {
       out = Scale.minParallel(grouped, "n_regionkey")
-    } == 0)
+    }.jobs.isEmpty)
     assert(out eq grouped)
   }
 
@@ -75,7 +76,8 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("writeSharded: per-file cap, disjoint ordered ranges, lossless") {
-    import graft.operators.Scale
+    import graft.engine.QueryProfile
+import graft.operators.Scale
     val dir = java.nio.file.Files.createTempDirectory("shard-spec")
     try {
       val keyed = (1 to 1200).map(i => (i.toLong, s"p$i")).toDF("k", "p")

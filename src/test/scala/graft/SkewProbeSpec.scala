@@ -1,6 +1,8 @@
 package graft
 
+import graft.engine.QueryProfile
 import graft.operators.Dedup
+import graft.tools.SkewProbe.pairHash
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -20,7 +22,7 @@ import org.apache.spark.sql.functions._
   * Pinned properties:
   *  1. the EXACT mass-ratio statistic separates the regimes across the
   *     frozen 0.35 cutoff with margin;
-  *  2. the SAMPLED pre-flight (statSampleMod = 8, what
+  *  2. the SAMPLED pre-flight (1-in-TfidfAutoSampleMod documents, what
   *     tfidfCosinePairsAuto actually runs since r9) agrees with the
   *     exact statistic's side of the cutoff on both corpora;
   *  3. plain and prefix outputs are equal on BOTH corpora (count +
@@ -32,7 +34,7 @@ import org.apache.spark.sql.functions._
 class SkewProbeSpec extends SparkSpec {
 
   private val nDocs = 1200
-  private val cutoff = 0.35
+  private val cutoff = Dedup.TfidfAutoMassRatioCutoff
 
   /** Topical Zipf corpus, the SkewProbe construction at spec size:
     * topic token ×10 + 30 Zipf(1) background tokens over vocab v;
@@ -70,31 +72,19 @@ class SkewProbeSpec extends SparkSpec {
           ' ')""").as("text"))
   }
 
-  private def contentHash(df: DataFrame): (Long, Long) = {
-    val r = df.agg(count(lit(1)),
-      sum(pmod(xxhash64(col("id_a"), col("id_b"),
-        col("cosine").cast("string")), lit(1000000007L)))).head()
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-  }
-
-  private def fresh(): Unit = {
-    Dedup.releaseCaches()
-    spark.sharedState.cacheManager.clearCache()
-  }
-
   /** The sampled statistic exactly as tfidfCosinePairsAuto computes it —
     * the PRODUCTION method (sample + scaled cap + persist-free), not a
     * replica that could drift. */
-  private def sampledRatio(df: DataFrame, mod: Int): Double =
+  private def sampledRatio(df: DataFrame): Double =
     Dedup.tfidfPrefixMassRatioSampled(df, "doc_id", "text", n = 1,
-      threshold = 0.5, m = mod)
+      threshold = 0.5)
 
   test("exact mass-ratio statistic separates the skew and uniform " +
     "regimes across the frozen 0.35 cutoff with margin") {
-    fresh()
+    QueryProfile.cold(spark)
     val rSkew = Dedup.tfidfPrefixMassRatio(skewDocs, "doc_id", "text",
       n = 1, threshold = 0.5)
-    fresh()
+    QueryProfile.cold(spark)
     val rUni = Dedup.tfidfPrefixMassRatio(uniformDocs, "doc_id", "text",
       n = 1, threshold = 0.5)
     assert(rSkew <= cutoff / 2,
@@ -105,12 +95,12 @@ class SkewProbeSpec extends SparkSpec {
 
   test("sampled pre-flight statistic (statSampleMod=8) lands on the same " +
     "side of the cutoff as the exact statistic on both corpora") {
-    fresh()
-    assert(sampledRatio(skewDocs, 8) <= cutoff,
+    QueryProfile.cold(spark)
+    assert(sampledRatio(skewDocs) <= cutoff,
       "sampled statistic no longer selects the prefix path on the " +
         "skew corpus")
-    fresh()
-    assert(sampledRatio(uniformDocs, 8) > cutoff,
+    QueryProfile.cold(spark)
+    assert(sampledRatio(uniformDocs) > cutoff,
       "sampled statistic no longer selects the plain path on the " +
         "uniform corpus")
   }
@@ -118,16 +108,16 @@ class SkewProbeSpec extends SparkSpec {
   test("plain, prefix, and auto emit the identical exact pair set on " +
     "both corpora (lossless prefix; a mis-prediction costs only time)") {
     for (docs <- Seq(skewDocs, uniformDocs)) {
-      fresh()
-      val plain = contentHash(
+      QueryProfile.cold(spark)
+      val plain = pairHash(
         Dedup.tfidfCosinePairs(docs, "doc_id", "text", n = 1,
           threshold = 0.5))
-      fresh()
-      val pref = contentHash(
+      QueryProfile.cold(spark)
+      val pref = pairHash(
         Dedup.tfidfCosinePairsPrefix(docs, "doc_id", "text", n = 1,
           threshold = 0.5))
-      fresh()
-      val auto = contentHash(
+      QueryProfile.cold(spark)
+      val auto = pairHash(
         Dedup.tfidfCosinePairsAuto(docs, "doc_id", "text", n = 1,
           threshold = 0.5))
       assert(plain._1 > 0, "degenerate corpus: no qualifying pairs")

@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import graft.engine.QueryProfile
+import graft.tools.MemProbe.contentHash
 
 /** In-suite twin of the MemProbe artifact's "spill, never OOM, same
   * answer" contract: force the row-buffer spill surfaces Spark exposes
@@ -12,7 +11,8 @@ import org.apache.spark.sql.functions._
   * (`spark.sql.TungstenAggregate.testFallbackStartsAt`, the hook Spark's
   * own AggregationQuerySuite uses) — plus broadcast disabled so the join
   * queries actually route through SMJ, then assert each query's
-  * order-insensitive content hash equals its default-conf baseline.
+  * order-insensitive content hash (MemProbe's) equals its default-conf
+  * baseline.
   *
   * MEMPROBE_r08/r09 prove the same contract empirically at 10-30x volume
   * under a 3 GB heap; this spec pins the spill CODE PATHS (external
@@ -61,59 +61,34 @@ class SpillParitySpec extends SparkSpec {
     "spark.sql.TungstenAggregate.testFallbackStartsAt" -> "2,100",
     "spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
-  /** MemProbe's order-insensitive content hash (sum of per-row xxhash64
-    * over the canonical JSON of the name-sorted columns). */
-  private def contentHash(df: DataFrame): Long = {
-    val cols = df.columns.sorted.map(col).toSeq
-    val h = df
-      .select(pmod(xxhash64(to_json(struct(cols: _*))), lit(1000000007L))
-        .as("__h"))
-      .agg(sum(col("__h"))).head()
-    if (h.isNullAt(0)) 0L else h.getLong(0)
-  }
-
-  private def cold(): Unit = {
-    graft.operators.Dedup.releaseCaches()
-    spark.sharedState.cacheManager.clearCache()
-  }
-
   test("forced-spill confs leave every target query's content hash unchanged") {
     val saved = tightConfs.keys.map { k =>
       k -> scala.util.Try(spark.conf.get(k)).toOption
     }.toMap
-    val spilledDisk = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) { spilledDisk.addAndGet(m.diskBytesSpilled); () }
-      }
-    }
     try {
       val baseline = targets.map { n =>
-        cold()
+        QueryProfile.cold(spark)
         n -> contentHash(SparkEntry.queries(n)(spark, spillSf))
       }
       tightConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-      spark.sparkContext.addSparkListener(listener)
-      val mismatches = baseline.flatMap { case (n, want) =>
-        cold()
-        val got = contentHash(SparkEntry.queries(n)(spark, spillSf))
-        if (got == want) None else Some(s"$n: baseline $want != tight $got")
+      val tight = QueryProfile.run(spark) {
+        val mismatches = baseline.flatMap { case (n, want) =>
+          QueryProfile.cold(spark)
+          val got = contentHash(SparkEntry.queries(n)(spark, spillSf))
+          if (got == want) None else Some(s"$n: baseline $want != tight $got")
+        }
+        assert(mismatches.isEmpty,
+          s"hash parity broke under forced spill: ${mismatches.mkString("; ")}")
       }
-      assert(mismatches.isEmpty,
-        s"hash parity broke under forced spill: ${mismatches.mkString("; ")}")
-      // listener delivery is async — drain before reading the counter
-      org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext)
-      assert(spilledDisk.get > 0,
+      assert(tight.diskSpillBytes > 0,
         "forced-spill confs produced zero disk spill — the thresholds no " +
           "longer reach the external sorters (conf names drifted?)")
     } finally {
-      spark.sparkContext.removeSparkListener(listener)
       saved.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)
         case (k, None) => spark.conf.unset(k)
       }
-      cold()
+      QueryProfile.cold(spark)
     }
   }
 
@@ -127,11 +102,12 @@ class SpillParitySpec extends SparkSpec {
     }.toMap
     try {
       val baseline = names.map { n =>
-        cold(); n -> contentHash(SparkEntry.queries(n)(spark, spillSf))
+        QueryProfile.cold(spark)
+        n -> contentHash(SparkEntry.queries(n)(spark, spillSf))
       }
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
       val mismatches = baseline.flatMap { case (n, want) =>
-        cold()
+        QueryProfile.cold(spark)
         val got = contentHash(SparkEntry.queries(n)(spark, spillSf))
         if (got == want) None else Some(s"$n: baseline $want != forced $got")
       }
@@ -142,7 +118,7 @@ class SpillParitySpec extends SparkSpec {
         case (k, Some(v)) => spark.conf.set(k, v)
         case (k, None) => spark.conf.unset(k)
       }
-      cold()
+      QueryProfile.cold(spark)
     }
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import graft.engine.QueryProfile
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.TimestampType
@@ -28,11 +29,11 @@ class TablesSpec extends SparkSpec {
 
   test("after the first access, fresh Tables instances start no Spark job") {
     names.foreach(n => table(Tables(spark, sf), n).schema)
-    val jobs = jobsStartedBy {
+    val jobs = QueryProfile.run(spark) {
       names.foreach(n => table(Tables(spark, sf), n).schema)
       Tables(spark, sf).registerAll()
-    }
-    assert(jobs == 0)
+    }.jobs
+    assert(jobs.isEmpty)
   }
 
   test("the memoized schema equals the inferred one, nullability included") {
@@ -76,8 +77,8 @@ class TablesSpec extends SparkSpec {
     val (df0, v0) = ts()
     try {
       spark.conf.set(key, (!before.contains("true")).toString)
-      assert(jobsStartedBy(Tables(spark, sf).events) > 0)
-      assert(jobsStartedBy(Tables(spark, sf).events) == 0)
+      assert(QueryProfile.run(spark)(Tables(spark, sf).events).jobs.nonEmpty)
+      assert(QueryProfile.run(spark)(Tables(spark, sf).events).jobs.isEmpty)
       val (df1, v1) = ts()
       assert(df0.schema("ts").dataType == TimestampType)
       assert(df1.schema("ts").dataType == TimestampType)
