@@ -514,7 +514,16 @@ object Dedup {
     // repeated call releases the previous call's blocks (see persistScoped)
     val sh = persistScoped(s"ngram:$idCol:$textCol:$n", shingles(df, idCol, textCol, n))
     val sizes = shingleSizes(sh, idCol)
-    val common = commonCounts(sh, idCol, textCol, n, maxDocFreq)
+    jaccardAbove(commonCounts(sh, idCol, textCol, n, maxDocFreq), sizes,
+      idCol, threshold)
+  }
+
+  /** The exact Jaccard verifier every n-gram pair operator ends in:
+    * attach both set sizes (`sizes`: idCol, sh_n) to the per-pair
+    * intersection counts (`common`: id_a, id_b, common) and keep pairs
+    * with |A∩B| / (|A|+|B|-|A∩B|) ≥ threshold. */
+  private def jaccardAbove(common: DataFrame, sizes: DataFrame, idCol: String,
+                           threshold: Double): DataFrame =
     common
       .join(sizes.select(col(idCol).as("id_a"), col("sh_n").as("n_a")), "id_a")
       .join(sizes.select(col(idCol).as("id_b"), col("sh_n").as("n_b")), "id_b")
@@ -523,7 +532,17 @@ object Dedup {
           (col("n_a") + col("n_b") - col("common")).cast("double"))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
+
+  /** Shared-shingle counts for candidate pairs (id_a, id_b), driven FROM
+    * the candidate set: `cands ⋈ sh(id_a) ⋈ sh(id_b, sh)`, so intersection
+    * work is proportional to |candidates| × shingles-per-doc. */
+  private def sharedShingles(cands: DataFrame, sh: DataFrame,
+                             idCol: String): DataFrame =
+    cands
+      .join(sh.select(col(idCol).as("id_a"), col("sh")), Seq("id_a"))
+      .join(sh.select(col(idCol).as("id_b"), col("sh")), Seq("id_b", "sh"))
+      .groupBy(col("id_a"), col("id_b"))
+      .agg(count(lit(1)).as("common"))
 
   /** Per-pair shared-shingle counts via posting lists: group ids per
     * shingle once, emit in-bucket pairs, count.
@@ -1287,29 +1306,11 @@ object Dedup {
     val shCommon = persistScoped(s"prefix-keep:$idCol:$textCol:$n",
       sh.join(docFreq.filter(col("sh_df") >= 2).select(col("sh")),
         Seq("sh"), "left_semi"))
-    val common = cands
-      .join(shCommon.select(col(idCol).as("id_a"), col("sh")), "id_a")
-      .join(shCommon.select(col(idCol).as("id_b"), col("sh")),
-        Seq("id_b", "sh"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("common"))
-    common
-      .join(sizes.select(col(idCol).as("id_a"), col("sh_n").as("n_a")), "id_a")
-      .join(sizes.select(col(idCol).as("id_b"), col("sh_n").as("n_b")), "id_b")
-      .withColumn("jaccard",
-        col("common").cast("double") /
-          (col("n_a") + col("n_b") - col("common")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    jaccardAbove(sharedShingles(cands, shCommon, idCol), sizes, idCol,
+      threshold)
   }
 
   // --- MinHash + LSH ------------------------------------------------------
-
-  /** k-permutation MinHash signature per id: one groupBy with k
-    * partial-aggregating mins over double-hashed families. */
-  def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-                        n: Int = 3, k: Int = 64): DataFrame =
-    signaturesFromShingles(shingles(df, idCol, textCol, n), idCol, k)
 
   /** k INDEPENDENT min-wise families: mh_i = min over shingles of
     * xxhash64(i, sh). Deliberately NOT the cheaper Kirsch–Mitzenmacher
@@ -1384,19 +1385,7 @@ object Dedup {
     val sig = signaturesFromShingles(sh, idCol, k)
     val cands = lshCandidates(sig, idCol, k, bands)
     val sizes = shingleSizes(sh, idCol)
-    val common = cands
-      .join(sh.select(col(idCol).as("id_a"), col("sh")), Seq("id_a"))
-      .join(sh.select(col(idCol).as("id_b"), col("sh")), Seq("id_b", "sh"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("common"))
-    common
-      .join(sizes.select(col(idCol).as("id_a"), col("sh_n").as("n_a")), "id_a")
-      .join(sizes.select(col(idCol).as("id_b"), col("sh_n").as("n_b")), "id_b")
-      .withColumn("jaccard",
-        col("common").cast("double") /
-          (col("n_a") + col("n_b") - col("common")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    jaccardAbove(sharedShingles(cands, sh, idCol), sizes, idCol, threshold)
   }
 
   // --- near-dup clusters → kept set ---------------------------------------

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -115,41 +115,48 @@ object Multimodal {
         out
     }
 
-  /** Effective codec batch size: the session conf
-    * `spark.graft.multimodal.batchSize` (when set) overrides the per-call
-    * default — the fleet-wide operational knob for sizing codec batches,
-    * and the hook SpillParitySpec uses to force the batch seam down to a
-    * few rows in CI (batch boundaries must never change results).
-    * Resolved DRIVER-side (session confs are not readable inside
-    * mapPartitions closures on executors). */
-  private def effBatch(df: DataFrame, batchSize: Int): Int =
-    scala.util.Try(
-      df.sparkSession.conf.get("spark.graft.multimodal.batchSize").toInt)
-      .getOrElse(batchSize)
-
-  /** Batched feature extraction over the binary column: partition-local,
+  /** The batch seam every decode kernel runs through: partition-local,
     * batch-at-a-time iteration (the exact shape of an Arrow/Pandas-UDF
-    * bridge: the decoder sees `batchSize` payloads per call, amortizing
-    * codec setup), preserving partitioning — no shuffle. */
-  def extractFeatures(df: DataFrame, idCol: String, binCol: String,
-                      dim: Int = 64, batchSize: Int = 256): DataFrame = {
-    val idField = df.schema(idCol)
-    val outSchema = featureSchema(idField, dim)
+    * bridge: the decoder sees a batch of payloads per call, amortizing
+    * codec setup), preserving partitioning — no shuffle. Each output row
+    * is the input's `idCol` value followed by `f(payload)`, typed by
+    * `outFields`.
+    *
+    * A batch is 256 payloads unless the session conf
+    * `spark.graft.multimodal.batchSize` overrides it — the fleet-wide
+    * operational knob for sizing codec batches, and the hook SpillParitySpec
+    * and ImageSpec use to force the seam down to a few rows (batch
+    * boundaries must never change results). Resolved DRIVER-side (session
+    * confs are not readable inside mapPartitions closures on executors). */
+  private def decodeEach(df: DataFrame, idCol: String, binCol: String,
+                         outFields: Seq[StructField])(
+                          f: Array[Byte] => Seq[Any]): DataFrame = {
     val idIx = df.schema.fieldIndex(idCol)
     val binIx = df.schema.fieldIndex(binCol)
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    val bs = effBatch(df, batchSize)
+    implicit val enc =
+      RowEncoder.encoderFor(StructType(df.schema(idCol) +: outFields))
+    val bs = scala.util.Try(
+      df.sparkSession.conf.get("spark.graft.multimodal.batchSize").toInt)
+      .getOrElse(256)
     df.mapPartitions { it =>
       it.grouped(bs).flatMap { batch =>
         // one decoder invocation per batch — swap point for a JNI codec
         batch.map { row =>
-          val payload = row.getAs[Array[Byte]](binIx)
-          val f = decodeFeatures(payload, dim)
-          Row(row.get(idIx), if (f == null) null else f.toSeq)
+          Row.fromSeq(row.get(idIx) +: f(row.getAs[Array[Byte]](binIx)))
         }
       }
     }
   }
+
+  /** Batched feature extraction over the binary column (see
+    * [[decodeEach]]). */
+  def extractFeatures(df: DataFrame, idCol: String, binCol: String,
+                      dim: Int = 64): DataFrame =
+    decodeEach(df, idCol, binCol,
+        featureSchema(df.schema(idCol), dim).tail) { payload =>
+      val f = decodeFeatures(payload, dim)
+      Seq(if (f == null) null else f.toSeq)
+    }
 
   /** Pixel-statistics schema for [[imageStats]]: everything integral, so
     * the DuckDB oracle recomputes each field exactly from the gradient
@@ -169,43 +176,31 @@ object Multimodal {
     * sums, '|'-joined — stripe of row y is y·8 div h). All integer
     * arithmetic over genuinely decoded pixels; a payload the decoder
     * rejects yields NULL stats. Partition-local batches, no shuffle. */
-  def imageStats(df: DataFrame, idCol: String, binCol: String,
-                 batchSize: Int = 256): DataFrame = {
-    val outSchema = statsSchema(df.schema(idCol))
-    val idIx = df.schema.fieldIndex(idCol)
-    val binIx = df.schema.fieldIndex(binCol)
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    val bs = effBatch(df, batchSize)
-    df.mapPartitions { it =>
-      it.grouped(bs).flatMap { batch =>
-        batch.map { row =>
-          decodeGray(row.getAs[Array[Byte]](binIx)) match {
-            case None =>
-              Row(row.get(idIx), null, null, null, null, null, null, null)
-            case Some((w, h, px)) =>
-              var sum = 0L; var mn = 255; var mx = 0
-              val stripes = new Array[Long](8)
-              var y = 0
-              while (y < h) {
-                val s = y * 8 / h
-                var x = 0
-                while (x < w) {
-                  val g = px(y * w + x)
-                  sum += g
-                  if (g < mn) mn = g
-                  if (g > mx) mx = g
-                  stripes(s) += g
-                  x += 1
-                }
-                y += 1
-              }
-              Row(row.get(idIx), w, h, w.toLong * h, sum, mn, mx,
-                stripes.mkString("|"))
+  def imageStats(df: DataFrame, idCol: String, binCol: String): DataFrame =
+    decodeEach(df, idCol, binCol,
+        statsSchema(df.schema(idCol)).tail) { payload =>
+      decodeGray(payload) match {
+        case None => Seq.fill(7)(null)
+        case Some((w, h, px)) =>
+          var sum = 0L; var mn = 255; var mx = 0
+          val stripes = new Array[Long](8)
+          var y = 0
+          while (y < h) {
+            val s = y * 8 / h
+            var x = 0
+            while (x < w) {
+              val g = px(y * w + x)
+              sum += g
+              if (g < mn) mn = g
+              if (g > mx) mx = g
+              stripes(s) += g
+              x += 1
+            }
+            y += 1
           }
-        }
+          Seq(w, h, w.toLong * h, sum, mn, mx, stripes.mkString("|"))
       }
     }
-  }
 
   /** REAL nearest-neighbor resample: decode, sample src pixel
     * (x·srcW div tW, y·srcH div tH) for each target pixel, re-encode as
@@ -215,28 +210,16 @@ object Multimodal {
     * inputs, the pixel values). Undecodable payloads pass through as
     * NULL. Partition-local batches, no shuffle. */
   def resizeImage(df: DataFrame, idCol: String, binCol: String,
-                  targetW: Int, targetH: Int,
-                  batchSize: Int = 256): DataFrame = {
+                  targetW: Int, targetH: Int): DataFrame = {
     require(targetW > 0 && targetH > 0, "target dims must be positive")
-    val idField = df.schema(idCol)
-    val outSchema = StructType(Seq(idField,
-      StructField("content", BinaryType, nullable = true)))
-    val idIx = df.schema.fieldIndex(idCol)
-    val binIx = df.schema.fieldIndex(binCol)
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    val bs = effBatch(df, batchSize)
-    df.mapPartitions { it =>
-      it.grouped(bs).flatMap { batch =>
-        batch.map { row =>
-          decodeGray(row.getAs[Array[Byte]](binIx)) match {
-            case None => Row(row.get(idIx), null)
-            case Some((w, h, px)) =>
-              val out = graft.expressions.MediaHeaders.buildPngFromPixels(
-                targetW, targetH,
-                (x, y) => px((y * h / targetH) * w + (x * w / targetW)))
-              Row(row.get(idIx), out)
-          }
-        }
+    decodeEach(df, idCol, binCol,
+        Seq(StructField("content", BinaryType, nullable = true))) { payload =>
+      decodeGray(payload) match {
+        case None => Seq(null)
+        case Some((w, h, px)) =>
+          Seq(graft.expressions.MediaHeaders.buildPngFromPixels(
+            targetW, targetH,
+            (x, y) => px((y * h / targetH) * w + (x * w / targetW))))
       }
     }
   }
@@ -277,9 +260,8 @@ object Multimodal {
     * amplitude sums, bucket of sample i is i·8 div n). All integer
     * arithmetic over genuinely decoded samples; undecodable payloads
     * yield NULL stats. Partition-local batches, no shuffle. */
-  def audioStats(df: DataFrame, idCol: String, binCol: String,
-                 batchSize: Int = 256): DataFrame = {
-    val outSchema = StructType(Seq(df.schema(idCol),
+  def audioStats(df: DataFrame, idCol: String, binCol: String): DataFrame =
+    decodeEach(df, idCol, binCol, Seq(
       StructField("sample_rate_hz", IntegerType, nullable = true),
       StructField("channels", IntegerType, nullable = true),
       StructField("n_samples", LongType, nullable = true),
@@ -287,40 +269,28 @@ object Multimodal {
       StructField("sum_sq", LongType, nullable = true),
       StructField("min_amp", IntegerType, nullable = true),
       StructField("max_amp", IntegerType, nullable = true),
-      StructField("bucket_sig", StringType, nullable = true)))
-    val idIx = df.schema.fieldIndex(idCol)
-    val binIx = df.schema.fieldIndex(binCol)
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    val bs = effBatch(df, batchSize)
-    df.mapPartitions { it =>
-      it.grouped(bs).flatMap { batch =>
-        batch.map { row =>
-          decodePcm16(row.getAs[Array[Byte]](binIx)) match {
-            case None =>
-              Row(row.get(idIx), null, null, null, null, null, null, null,
-                null)
-            case Some((rate, ch, s)) =>
-              var sum = 0L; var sq = 0L
-              var mn = Int.MaxValue; var mx = Int.MinValue
-              val buckets = new Array[Long](8)
-              val n = s.length
-              var i = 0
-              while (i < n) {
-                val v = s(i)
-                sum += v; sq += v.toLong * v
-                if (v < mn) mn = v
-                if (v > mx) mx = v
-                buckets(i * 8 / n) += v
-                i += 1
-              }
-              Row(row.get(idIx), rate, ch, n.toLong, sum, sq,
-                if (n == 0) null else mn, if (n == 0) null else mx,
-                buckets.mkString("|"))
+      StructField("bucket_sig", StringType, nullable = true))) { payload =>
+      decodePcm16(payload) match {
+        case None => Seq.fill(8)(null)
+        case Some((rate, ch, s)) =>
+          var sum = 0L; var sq = 0L
+          var mn = Int.MaxValue; var mx = Int.MinValue
+          val buckets = new Array[Long](8)
+          val n = s.length
+          var i = 0
+          while (i < n) {
+            val v = s(i)
+            sum += v; sq += v.toLong * v
+            if (v < mn) mn = v
+            if (v > mx) mx = v
+            buckets(i * 8 / n) += v
+            i += 1
           }
-        }
+          Seq(rate, ch, n.toLong, sum, sq,
+            if (n == 0) null else mn, if (n == 0) null else mx,
+            buckets.mkString("|"))
       }
     }
-  }
 
   /** Perceptual audio fingerprint over decoded PCM: the sample stream is
     * split into 65 equal time buckets (bucket of sample i is i·65 div n)
@@ -331,43 +301,35 @@ object Multimodal {
     * on the SAMPLES, not the container header, so remastered/relabeled
     * copies of one recording hash identically. Output column `simhash` —
     * [[Dedup.simhashPairs]]'s pigeonhole block join applies verbatim. */
-  def audioHash(df: DataFrame, idCol: String, binCol: String,
-                batchSize: Int = 256): DataFrame = {
-    val outSchema = StructType(Seq(df.schema(idCol),
-      StructField("simhash", LongType, nullable = true)))
-    val idIx = df.schema.fieldIndex(idCol)
-    val binIx = df.schema.fieldIndex(binCol)
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    val bs = effBatch(df, batchSize)
-    df.mapPartitions { it =>
-      it.grouped(bs).flatMap { batch =>
-        batch.map { row =>
-          decodePcm16(row.getAs[Array[Byte]](binIx)) match {
-            case Some((_, _, s)) if s.length >= 65 =>
-              val sums = new Array[Long](65)
-              val counts = new Array[Long](65)
-              val n = s.length
-              var i = 0
-              while (i < n) {
-                val b = (i.toLong * 65 / n).toInt
-                sums(b) += s(i); counts(b) += 1
-                i += 1
-              }
-              var bits = 0L
-              var b = 0
-              while (b < 64) {
-                // mean(b+1) > mean(b) ⟺ sum(b+1)·n(b) > sum(b)·n(b+1)
-                if (sums(b + 1) * counts(b) > sums(b) * counts(b + 1))
-                  bits |= (1L << b)
-                b += 1
-              }
-              Row(row.get(idIx), bits)
-            case _ => Row(row.get(idIx), null)
+  def audioHash(df: DataFrame, idCol: String, binCol: String): DataFrame =
+    decodeEach(df, idCol, binCol, simhashFields) { payload =>
+      decodePcm16(payload) match {
+        case Some((_, _, s)) if s.length >= 65 =>
+          val sums = new Array[Long](65)
+          val counts = new Array[Long](65)
+          val n = s.length
+          var i = 0
+          while (i < n) {
+            val b = (i.toLong * 65 / n).toInt
+            sums(b) += s(i); counts(b) += 1
+            i += 1
           }
-        }
+          var bits = 0L
+          var b = 0
+          while (b < 64) {
+            // mean(b+1) > mean(b) ⟺ sum(b+1)·n(b) > sum(b)·n(b+1)
+            if (sums(b + 1) * counts(b) > sums(b) * counts(b + 1))
+              bits |= (1L << b)
+            b += 1
+          }
+          Seq(bits)
+        case _ => Seq(null)
       }
     }
-  }
+
+  /** Output field of the two perceptual hashes ([[audioHash]], [[dHash]]). */
+  private val simhashFields =
+    Seq(StructField("simhash", LongType, nullable = true))
 
   /** Perceptual dHash (difference hash) over decoded pixels: resample to
     * 9×8 (nearest-neighbor, same integer mapping as [[resizeImage]]),
@@ -377,38 +339,26 @@ object Multimodal {
     * 16-bit-block pigeonhole join applies verbatim — image near-dup
     * candidate generation rides the existing Hamming-blocking machinery.
     * Undecodable payloads yield NULL. */
-  def dHash(df: DataFrame, idCol: String, binCol: String,
-            batchSize: Int = 256): DataFrame = {
-    val outSchema = StructType(Seq(df.schema(idCol),
-      StructField("simhash", LongType, nullable = true)))
-    val idIx = df.schema.fieldIndex(idCol)
-    val binIx = df.schema.fieldIndex(binCol)
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    val bs = effBatch(df, batchSize)
-    df.mapPartitions { it =>
-      it.grouped(bs).flatMap { batch =>
-        batch.map { row =>
-          decodeGray(row.getAs[Array[Byte]](binIx)) match {
-            case None => Row(row.get(idIx), null)
-            case Some((w, h, px)) =>
-              def g(x: Int, y: Int): Int =
-                px((y * h / 8) * w + (x * w / 9))
-              var bits = 0L
-              var y = 0
-              while (y < 8) {
-                var x = 0
-                while (x < 8) {
-                  if (g(x + 1, y) > g(x, y)) bits |= (1L << (y * 8 + x))
-                  x += 1
-                }
-                y += 1
-              }
-              Row(row.get(idIx), bits)
+  def dHash(df: DataFrame, idCol: String, binCol: String): DataFrame =
+    decodeEach(df, idCol, binCol, simhashFields) { payload =>
+      decodeGray(payload) match {
+        case None => Seq(null)
+        case Some((w, h, px)) =>
+          def g(x: Int, y: Int): Int =
+            px((y * h / 8) * w + (x * w / 9))
+          var bits = 0L
+          var y = 0
+          while (y < 8) {
+            var x = 0
+            while (x < 8) {
+              if (g(x + 1, y) > g(x, y)) bits |= (1L << (y * 8 + x))
+              x += 1
+            }
+            y += 1
           }
-        }
+          Seq(bits)
       }
     }
-  }
 
   /** STUB frame sampler: every video payload yields `frames` byte slices
     * (deterministic offsets). Real plumbing under test: one-to-many

@@ -45,12 +45,6 @@ object Similarity {
   private def fastCosine(df: DataFrame)(a: Column, b: Column): Column =
     graft.expressions.VectorCosine.vecCosine(df.sparkSession, a, b)
 
-  def dotProduct(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (p, q) => p * q), lit(0.0), _ + _)
-
-  def l2Norm(a: Column): Column =
-    sqrt(aggregate(zip_with(a, a, (p, q) => p * q), lit(0.0), _ + _))
-
   /** Per-row centroid scores as ONE array<struct<c:double, i:int>> column
     * (cosine of `v` against every centroid, index attached for
     * argmax/top-probe selection). Two regimes:

@@ -1,8 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, TimestampNTZType, TimestampType}
 
 /** Temporal joins for event-stream and time-series pipelines — operators
   * Spark lacks natively, composed from existing shuffle/window machinery so
@@ -53,80 +54,25 @@ object Temporal {
                toleranceUs: Option[Long] = None): DataFrame = {
     require(direction == "backward" || direction == "forward",
       s"asof direction must be backward|forward, got $direction")
-    // tsLeft travels as __ts (renamed back at the end), so exclude it here —
-    // otherwise the final rename would create a duplicate column.
-    val leftPayload =
-      left.columns.filterNot(c => by.contains(c) || c == tsLeft).toSeq
-    val rightPayload =
-      right.columns.filterNot(c => by.contains(c) || c == tsRight).toSeq
-    val matched = (rightPayload :+ tsRight).map(c => s"matched_$c")
-    require(!leftPayload.exists(matched.contains),
-      s"left columns collide with matched_* output names: $matched")
-
-    val tsType = left.schema(tsLeft).dataType
-    // The whole right payload travels as ONE struct (__r): the running
-    // last(ignoreNulls) then skips left rows (whole-struct null) but can
-    // never skip a NULL FIELD of a matched right row — per-column lasts
-    // would silently backfill a null payload value from an older right
-    // row, mixing fields of different right rows in one output row.
-    val rStruct = struct(
-      rightPayload.map(c => col(c).as(s"matched_$c")) :+
-        col(tsRight).as(s"matched_$tsRight"): _*)
-    val rStructType = right.select(rStruct.as("__r")).schema("__r").dataType
-    // Identical schemas for unionByName: by ++ __ts ++ __tag ++ left payload
-    // (null on right rows) ++ __r struct (null on left rows).
-    val lSide = left.select(
-      by.map(col) ++
-        Seq(col(tsLeft).cast(tsType).as("__ts"), lit(1).as("__tag")) ++
-        leftPayload.map(col) :+
-        lit(null).cast(rStructType).as("__r"): _*)
-    val rSide = right.select(
-      by.map(col) ++
-        Seq(col(tsRight).cast(tsType).as("__ts"), lit(0).as("__tag")) ++
-        leftPayload.map(c =>
-          lit(null).cast(left.schema(c).dataType).as(c)) :+
-        rStruct.as("__r"): _*)
-
-    // Backward: ascending time, right rows (__tag 0) sort before left rows at
-    // equal ts so ties match inclusively; the running `last` is then the most
-    // recent right row at-or-before each left row. Forward mirrors it on
-    // descending time.
-    val ordered =
-      if (direction == "backward")
-        Window.partitionBy(by.map(col): _*)
-          .orderBy(col("__ts").asc, col("__tag").asc)
-      else
-        Window.partitionBy(by.map(col): _*)
-          .orderBy(col("__ts").desc, col("__tag").asc)
-    val w = ordered.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    val withMatch = lSide.unionByName(rSide)
-      .withColumn("__r", last(col("__r"), ignoreNulls = true).over(w))
+    val in = new AsofInput(left, right, by, tsLeft, tsRight)
+    val withMatch = in.tagged.withColumn("__r",
+      last(col("__r"), ignoreNulls = true)
+        .over(in.window(backward = direction == "backward")))
     // tolerance: null out matches farther than the cap. Works on the raw
     // time value (µs for timestamps, the column's unit for integrals).
-    def asLong(c: Column): Column = tsType match {
-      case org.apache.spark.sql.types.TimestampType => unix_micros(c)
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        unix_micros(c.cast("timestamp"))
-      case _ => c.cast("long")
-    }
     val bounded = toleranceUs match {
       case None => withMatch
       case Some(tol) =>
         val mts = col("__r").getField(s"matched_$tsRight")
         val gap =
-          if (direction == "backward") asLong(col("__ts")) - asLong(mts)
-          else asLong(mts) - asLong(col("__ts"))
+          if (direction == "backward") in.asLong(col("__ts")) - in.asLong(mts)
+          else in.asLong(mts) - in.asLong(col("__ts"))
         // one whole-struct null drops the entire match atomically
         withMatch.withColumn("__r",
           when(mts.isNotNull && gap <= tol, col("__r"))
-            .otherwise(lit(null).cast(rStructType)))
+            .otherwise(lit(null).cast(in.rStructType)))
     }
-    bounded
-      .filter(col("__tag") === 1)
-      .withColumnRenamed("__ts", tsLeft)
-      .select((by ++ leftPayload ++ Seq(tsLeft)).map(col) ++
-        matched.map(c => col("__r").getField(c).as(c)): _*)
+    in.finish(bounded)
   }
 
   /** As-of join, direction "nearest" (the pandas `merge_asof` third
@@ -144,67 +90,96 @@ object Temporal {
   def asofJoinNearest(left: DataFrame, right: DataFrame, by: Seq[String],
                       tsLeft: String, tsRight: String,
                       toleranceUs: Option[Long] = None): DataFrame = {
-    val leftPayload =
-      left.columns.filterNot(c => by.contains(c) || c == tsLeft).toSeq
-    val rightPayload =
-      right.columns.filterNot(c => by.contains(c) || c == tsRight).toSeq
-    val matched = (rightPayload :+ tsRight).map(c => s"matched_$c")
-    require(!leftPayload.exists(matched.contains),
-      s"left columns collide with matched_* output names: $matched")
-
-    val tsType = left.schema(tsLeft).dataType
-    // Right payload as ONE struct — see asofJoin: per-column lasts would
-    // backfill null payload fields from older right rows.
-    val rStruct = struct(
-      rightPayload.map(c => col(c).as(s"matched_$c")) :+
-        col(tsRight).as(s"matched_$tsRight"): _*)
-    val rStructType = right.select(rStruct.as("__r")).schema("__r").dataType
-    val lSide = left.select(
-      by.map(col) ++
-        Seq(col(tsLeft).cast(tsType).as("__ts"), lit(1).as("__tag")) ++
-        leftPayload.map(col) :+
-        lit(null).cast(rStructType).as("__r"): _*)
-    val rSide = right.select(
-      by.map(col) ++
-        Seq(col(tsRight).cast(tsType).as("__ts"), lit(0).as("__tag")) ++
-        leftPayload.map(c =>
-          lit(null).cast(left.schema(c).dataType).as(c)) :+
-        rStruct.as("__r"): _*)
-
-    val wB = Window.partitionBy(by.map(col): _*)
-      .orderBy(col("__ts").asc, col("__tag").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wF = Window.partitionBy(by.map(col): _*)
-      .orderBy(col("__ts").desc, col("__tag").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    val both = lSide.unionByName(rSide)
-      .withColumn("__b", last(col("__r"), ignoreNulls = true).over(wB))
-      .withColumn("__f", last(col("__r"), ignoreNulls = true).over(wF))
-    def asLong(c: Column): Column = tsType match {
-      case org.apache.spark.sql.types.TimestampType => unix_micros(c)
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        unix_micros(c.cast("timestamp"))
-      case _ => c.cast("long")
-    }
+    val in = new AsofInput(left, right, by, tsLeft, tsRight)
+    val both = in.tagged
+      .withColumn("__b",
+        last(col("__r"), ignoreNulls = true).over(in.window(backward = true)))
+      .withColumn("__f",
+        last(col("__r"), ignoreNulls = true).over(in.window(backward = false)))
     val bts = col("__b").getField(s"matched_$tsRight")
     val fts = col("__f").getField(s"matched_$tsRight")
-    val gapB = asLong(col("__ts")) - asLong(bts)
-    val gapF = asLong(fts) - asLong(col("__ts"))
+    val gapB = in.asLong(col("__ts")) - in.asLong(bts)
+    val gapF = in.asLong(fts) - in.asLong(col("__ts"))
     val inTol = (g: Column) =>
       toleranceUs.map(t => g <= t).getOrElse(lit(true))
     // true → take the backward candidate; pandas ties go backward
     val pickB = bts.isNotNull && inTol(gapB) &&
       (fts.isNull || !inTol(gapF) || gapB <= gapF)
     val pickF = fts.isNotNull && inTol(gapF) && !pickB
-    val chosen = both.withColumn("__r",
+    in.finish(both.withColumn("__r",
       when(pickB, col("__b")).when(pickF, col("__f"))
-        .otherwise(lit(null).cast(rStructType)))
-    chosen
-      .filter(col("__tag") === 1)
-      .withColumnRenamed("__ts", tsLeft)
-      .select((by ++ leftPayload ++ Seq(tsLeft)).map(col) ++
-        matched.map(c => col("__r").getField(c).as(c)): _*)
+        .otherwise(lit(null).cast(in.rStructType))))
+  }
+
+  /** The as-of prelude and epilogue both directions share. `tagged` is
+    * left ∪ right with identical schemas for unionByName: by ++ __ts ++
+    * __tag (1 = left, 0 = right) ++ left payload (null on right rows) ++
+    * the __r struct of matched_* right columns (null on left rows).
+    *
+    * The whole right payload travels as ONE struct (__r): the running
+    * last(ignoreNulls) then skips left rows (whole-struct null) but can
+    * never skip a NULL FIELD of a matched right row — per-column lasts
+    * would silently backfill a null payload value from an older right
+    * row, mixing fields of different right rows in one output row. */
+  private final class AsofInput(left: DataFrame, right: DataFrame,
+                                by: Seq[String], tsLeft: String,
+                                tsRight: String) {
+    // tsLeft travels as __ts (renamed back at the end), so exclude it here —
+    // otherwise the final rename would create a duplicate column.
+    private val leftPayload =
+      left.columns.filterNot(c => by.contains(c) || c == tsLeft).toSeq
+    private val rightPayload =
+      right.columns.filterNot(c => by.contains(c) || c == tsRight).toSeq
+    private val matched = (rightPayload :+ tsRight).map(c => s"matched_$c")
+    require(!leftPayload.exists(matched.contains),
+      s"left columns collide with matched_* output names: $matched")
+
+    private val tsType = left.schema(tsLeft).dataType
+    private val rStruct = struct(
+      rightPayload.map(c => col(c).as(s"matched_$c")) :+
+        col(tsRight).as(s"matched_$tsRight"): _*)
+    val rStructType: DataType =
+      right.select(rStruct.as("__r")).schema("__r").dataType
+    val tagged: DataFrame = {
+      val lSide = left.select(
+        by.map(col) ++
+          Seq(col(tsLeft).cast(tsType).as("__ts"), lit(1).as("__tag")) ++
+          leftPayload.map(col) :+
+          lit(null).cast(rStructType).as("__r"): _*)
+      val rSide = right.select(
+        by.map(col) ++
+          Seq(col(tsRight).cast(tsType).as("__ts"), lit(0).as("__tag")) ++
+          leftPayload.map(c =>
+            lit(null).cast(left.schema(c).dataType).as(c)) :+
+          rStruct.as("__r"): _*)
+      lSide.unionByName(rSide)
+    }
+
+    /** Running frame per `by` key. Backward: ascending time, right rows
+      * (__tag 0) sort before left rows at equal ts so ties match
+      * inclusively; the running `last` is then the most recent right row
+      * at-or-before each left row. Forward mirrors it on descending time. */
+    def window(backward: Boolean): WindowSpec =
+      Window.partitionBy(by.map(col): _*)
+        .orderBy(if (backward) col("__ts").asc else col("__ts").desc,
+          col("__tag").asc)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+    /** The raw time value: µs for timestamps, the column's own unit for
+      * integrals — what `toleranceUs` is measured in. */
+    def asLong(c: Column): Column = tsType match {
+      case TimestampType => unix_micros(c)
+      case TimestampNTZType => unix_micros(c.cast("timestamp"))
+      case _ => c.cast("long")
+    }
+
+    /** Keep the left rows, restore tsLeft and unpack the chosen __r. */
+    def finish(withR: DataFrame): DataFrame =
+      withR
+        .filter(col("__tag") === 1)
+        .withColumnRenamed("__ts", tsLeft)
+        .select((by ++ leftPayload ++ Seq(tsLeft)).map(col) ++
+          matched.map(c => col("__r").getField(c).as(c)): _*)
   }
 
   /** Point-in-interval join via overlap binning. `pointExpr`, `startExpr`,

@@ -1258,9 +1258,8 @@ object OpsLlm extends Suite {
   //    a boolean flips and the hash diverges. ------------------------------
   private val compressRatio: Q = (s, dir) => {
     val t = Tables(s, dir)
-    graft.expressions.DeflateRatio.register(s)
     def ratio(c: org.apache.spark.sql.Column) =
-      call_function(graft.expressions.DeflateRatio.name, c)
+      graft.expressions.DeflateRatio.deflateRatio(s, c)
     val scored = t.documents.select(col("doc_id"),
       ratio(col("text")).as("r1"),
       ratio(concat(col("text"), col("text"), col("text"), col("text")))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.expressions.MediaHeaders
@@ -233,6 +233,47 @@ class ImageSpec extends SparkSpec {
     val minHd = (for (i <- hs.indices; j <- (i + 1) until hs.size)
       yield java.lang.Long.bitCount(hs(i) ^ hs(j))).min
     assert(minHd > 3, s"audio group fingerprints too close: $minHd")
+  }
+
+  test("every batch-seam kernel returns the same rows with " +
+    "spark.graft.multimodal.batchSize at 1 and 3 as at the default") {
+    import spark.implicits._
+    // images, audio and garbage in ONE partition, so 1- and 3-payload
+    // batches cut the partition at different rows than the default does
+    val payloads = Seq(
+      MediaHeaders.buildPngGradient(19, 11, 4, 3, 200),
+      MediaHeaders.buildPngGradient(31, 17, 5, 2, 90),
+      MediaHeaders.buildPngNoise(24, 18, seed = 7, shift = 0),
+      MediaHeaders.buildPngNoise(24, 18, seed = 8, shift = 8),
+      MediaHeaders.buildWavTone(8000, 200, 7, 60000),
+      MediaHeaders.buildWavTone(8000, 400, 3700, 100),
+      MediaHeaders.buildWavTone(44100, 400, 9100, 100),
+      "garbage".getBytes)
+    val df = payloads.zipWithIndex.map { case (p, i) => (i.toLong, p) }
+      .toDF("id", "bin").repartition(1)
+    val kernels = Seq[(String, DataFrame => DataFrame)](
+      "extractFeatures" -> (Multimodal.extractFeatures(_, "id", "bin", 8)),
+      "imageStats" -> (Multimodal.imageStats(_, "id", "bin")),
+      "resizeImage" -> (Multimodal.resizeImage(_, "id", "bin", 12, 10)),
+      "audioStats" -> (Multimodal.audioStats(_, "id", "bin")),
+      "audioHash" -> (Multimodal.audioHash(_, "id", "bin")),
+      "dHash" -> (Multimodal.dHash(_, "id", "bin")))
+    // binary cells compare by content, not by array identity
+    def rowsOf(k: DataFrame => DataFrame) =
+      k(df).orderBy("id").collect().toSeq.map(_.toSeq.map {
+        case b: Array[Byte] => b.toSeq
+        case v => v
+      })
+    val key = "spark.graft.multimodal.batchSize"
+    val default = kernels.map { case (n, k) => n -> rowsOf(k) }
+    assert(default.forall(_._2.size == payloads.size))
+    try {
+      for (bs <- Seq("1", "3")) {
+        spark.conf.set(key, bs)
+        for (((n, k), (_, want)) <- kernels.zip(default))
+          assert(rowsOf(k) == want, s"$n at batchSize=$bs")
+      }
+    } finally spark.conf.unset(key)
   }
 
   test("truncated payloads fail BOTH decoders (magic intact, header " +

@@ -393,8 +393,12 @@ class LlmOpsSpec extends SparkSpec {
         p % 20 + 16, p % 12 + 16, p % 5 + 1, p % 3 + 1, p % 200)
     })
     val imgs = docs.select(col("doc_id"), mkPng(col("doc_id")).as("content"))
-    val feats = Multimodal.extractFeatures(imgs, "doc_id", "content",
-      dim = 8, batchSize = 3)
+    // 3-payload codec batches: the seam resolves its batch size when the
+    // DataFrame is built, so the conf only needs to hold across this call
+    spark.conf.set("spark.graft.multimodal.batchSize", "3")
+    val feats =
+      try Multimodal.extractFeatures(imgs, "doc_id", "content", dim = 8)
+      finally spark.conf.unset("spark.graft.multimodal.batchSize")
     val rows = feats.collect()
     assert(rows.length == docs.count())
     assert(rows.forall(_.getSeq[Float](1).length == 8))

@@ -55,10 +55,15 @@ class SpillParitySpec extends SparkSpec {
     "spark.sql.sortMergeJoinExec.buffer.in.memory.threshold" -> "256",
     "spark.sql.sortMergeJoinExec.buffer.spill.threshold" -> "512",
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "128",
-    // (skipRows, fallbackStartsAtRows): hash-agg switches to sort-based
-    // merge after 100 groups per partition — the controlled-fallback hook
-    // Spark's own AggregationQuerySuite uses
-    "spark.sql.TungstenAggregate.testFallbackStartsAt" -> "2,100",
+    // (skipRows, fallbackStartsAtRows): hash-agg spills its map to a
+    // sort-based merge every 1000 input rows per partition — the
+    // controlled-fallback hook Spark's own AggregationQuerySuite uses.
+    // Every fallback writes one spill file and the final merge opens them
+    // all at once (~2 MB of read-ahead each): at 100 rows the kneser_ney
+    // and tpch_q18 tasks merged up to 783 and 600 files and OOM'd a 4 GB
+    // heap; at 1000 the worst task merges 79, and kneser_ney, tpch_q18
+    // and dedup_substring still spill to disk
+    "spark.sql.TungstenAggregate.testFallbackStartsAt" -> "2,1000",
     "spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
   test("forced-spill confs leave every target query's content hash unchanged") {
