@@ -439,31 +439,6 @@ object Curation {
     lit(1.0) / (lit(1.0) + exp(-z))
   }
 
-  /** Distributed batch-gradient training for the logistic quality
-    * classifier: full-batch gradient descent, each iteration ONE
-    * map-side-combined aggregation pass (Σ (σ(z)−y)·fᵢ per feature plus
-    * the bias term); the driver holds only the weight vector — the same
-    * bounded-driver-state contract as the k-means trainer. Deterministic:
-    * zero init, fixed iteration count and rate, no sampling. Returns
-    * (weights, bias). */
-  def logisticTrain(df: DataFrame, featCols: Seq[String], labelCol: String,
-                    iters: Int = 20, lr: Double = 1.0): (Seq[Double], Double) = {
-    require(iters > 0 && lr > 0, s"need iters>0, lr>0; got $iters/$lr")
-    var w = Seq.fill(featCols.size)(0.0)
-    var b = 0.0
-    for (_ <- 1 to iters) {
-      val p = logisticScore(featCols.map(col), w, b)
-      val err = p - col(labelCol).cast("double")
-      val aggs = featCols.map(c => sum(err * col(c))) ++
-        Seq(sum(err), count(lit(1)))
-      val r = df.agg(aggs.head, aggs.tail: _*).head()
-      val n = r.getLong(featCols.size + 1).toDouble
-      w = w.zipWithIndex.map { case (wi, i) => wi - lr * r.getDouble(i) / n }
-      b = b - lr * r.getDouble(featCols.size) / n
-    }
-    (w, b)
-  }
-
   /** Corpus collocations by pointwise mutual information — phrase mining
     * for vocabulary/tokenizer design and boilerplate discovery (a bigram
     * whose PMI is high is a unit; one that merely rides frequent unigrams

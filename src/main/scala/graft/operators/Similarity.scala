@@ -199,6 +199,31 @@ object Similarity {
       .filter(col("cosine") >= threshold)
   }
 
+  /** Driver-local Lloyd iterations seeded with the first `k` points: each
+    * round assigns every point to `nearest(point, centroids)`, then moves
+    * each centroid to the mean of its points (summed in point order);
+    * clusters left empty keep their previous centroid. */
+  private def lloyd(points: Array[Array[Double]], k: Int, iters: Int)(
+      nearest: (Array[Double], Array[Array[Double]]) => Int)
+      : Array[Array[Double]] = {
+    val dim = points.head.length
+    var cents = points.take(k).map(_.clone())
+    for (_ <- 1 to iters) {
+      val sums = Array.fill(cents.length)(new Array[Double](dim))
+      val counts = new Array[Long](cents.length)
+      points.foreach { x =>
+        val best = nearest(x, cents)
+        counts(best) += 1
+        var d = 0
+        while (d < dim) { sums(best)(d) += x(d); d += 1 }
+      }
+      cents = cents.zipWithIndex.map { case (old, j) =>
+        if (counts(j) == 0) old else sums(j).map(_ / counts(j))
+      }
+    }
+    cents
+  }
+
   // --- IVF (inverted-file) ANN ---------------------------------------------
 
   /** IVF index: corpus rows labeled with their nearest-centroid cluster,
@@ -211,14 +236,12 @@ object Similarity {
       assignments.write.partitionBy("cluster").mode("overwrite").parquet(path)
   }
 
-  /** Build an IVF index with deterministic, DataFrame-native spherical
-    * k-means: centroids initialize from a seeded hash-order sample and each
-    * Lloyd iteration is one broadcast-centroid assignment pass (argmax
-    * cosine, fused VectorCosine kernels) plus one per-dimension partial
-    * aggregation. Only the centroid matrix (nlist × dim doubles) ever
-    * reaches the driver — corpus-sized data stays distributed, so the same
-    * code runs unchanged at 100 TB. Empty clusters keep their previous
-    * centroid. */
+  /** Build an IVF index with deterministic spherical k-means: centroids
+    * initialize from a seeded hash-order sample, Lloyd iterations run
+    * driver-locally on that bounded sample, and the full corpus is
+    * assigned in one distributed argmax-cosine pass (fused VectorCosine
+    * kernels), so the same code runs unchanged at 100 TB. Empty clusters
+    * keep their previous centroid. */
   def ivfIndex(corpus: DataFrame, idCol: String, vecCol: String,
                nlist: Int = 64, iters: Int = 3, seed: Long = 42L,
                maxTrainRows: Int = 25600): IvfIndex = {
@@ -245,30 +268,17 @@ object Similarity {
     // Intentional for tiny corpora; callers sizing nlist from N must also
     // keep nlist <= maxTrainRows or the cell count silently stops
     // growing with the corpus (see semanticDedupIvf's explicit clamp).
-    var centroids: Array[Array[Double]] = train.take(nlist).map(_.clone())
-    for (_ <- 1 to iters) {
-      // argmax assignment (ties to the higher index, mirroring the
-      // distributed struct-max tie-break), then plain mean update;
-      // clusters left empty keep their previous centroid
-      val dim = train.head.length
-      val sums = Array.fill(centroids.length)(new Array[Double](dim))
-      val counts = new Array[Long](centroids.length)
-      train.foreach { x =>
-        var best = 0; var bestC = Double.NegativeInfinity
-        var i = 0
-        while (i < centroids.length) {
-          val c = cosArr(x, centroids(i))
-          if (c >= bestC) { bestC = c; best = i }
-          i += 1
-        }
-        counts(best) += 1
-        var j = 0
-        while (j < dim) { sums(best)(j) += x(j); j += 1 }
+    // argmax-cosine assignment, ties to the higher index (mirroring the
+    // distributed struct-max tie-break)
+    val centroids = lloyd(train, nlist, iters) { (x, cents) =>
+      var best = 0; var bestC = Double.NegativeInfinity
+      var i = 0
+      while (i < cents.length) {
+        val c = cosArr(x, cents(i))
+        if (c >= bestC) { bestC = c; best = i }
+        i += 1
       }
-      centroids = centroids.zipWithIndex.map { case (old, i) =>
-        if (counts(i) == 0) old
-        else sums(i).map(_ / counts(i))
-      }
+      best
     }
     // distributed one-pass assignment: argmax over (cosine, index) structs;
     // struct ordering picks the max cosine (ties break to the higher index
@@ -300,51 +310,6 @@ object Similarity {
           typedLit(q.toSeq)).as("cosine"))
       .orderBy(col("cosine").desc, col(idCol))
       .limit(k)
-  }
-
-  /** ANN top-k for a BATCH of queries through an IVF index: each query's
-    * probe clusters are computed driver-side over the small centroid
-    * matrix, the (query → cluster) probe map is broadcast, and one hash
-    * join restricts scoring to probed clusters — corpus-side work is
-    * proportional to Σ probed-cluster sizes, never a full cross join. The
-    * per-query top-k is the same bounded-heap GroupedTopK operator as
-    * topKBatch — k rows per query survive the shuffle, never a full sort of
-    * the probed-cluster scores. */
-  def ivfTopKBatch(index: IvfIndex, idCol: String, vecCol: String,
-                   queries: DataFrame, qIdCol: String, qVecCol: String,
-                   k: Int, nprobe: Int = 4): DataFrame = {
-    val spark = index.assignments.sparkSession
-    // query batches are small by definition (same contract as topKBatch's
-    // broadcast) — collecting them to plan the probe map is the IVF analog
-    // of broadcasting the query side
-    val qRows = queries.select(col(qIdCol), col(qVecCol).cast("array<double>"))
-      .collect()
-    val probeRows = qRows.flatMap { r =>
-      val qid = r.get(0)
-      val qv = r.getSeq[Double](1).toArray
-      index.centroids.zipWithIndex
-        .map { case (c, i) => (cosArr(qv, c), i) }
-        .sortBy(-_._1).take(nprobe)
-        .map { case (_, cl) =>
-          org.apache.spark.sql.Row(qid, cl, qv.toSeq) }
-    }
-    val probeSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("query_id",
-        queries.schema(qIdCol).dataType),
-      org.apache.spark.sql.types.StructField("cluster",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("__q",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.DoubleType))))
-    val probes = spark.createDataFrame(
-      spark.sparkContext.parallelize(probeRows.toSeq), probeSchema)
-    val scored = index.assignments
-      .join(broadcast(probes), Seq("cluster"))
-      .select(col("query_id"), col(idCol),
-        fastCosine(index.assignments)(col(vecCol).cast("array<double>"),
-          col("__q")).as("cosine"))
-    graft.plans.GroupedTopK(scored, Seq("query_id"),
-      Seq(col("cosine").desc, col(idCol).asc), k)
   }
 
   /** Exact all-pairs above a cosine threshold — the quadratic baseline the
@@ -661,30 +626,19 @@ object Similarity {
                        iters: Int): Array[Array[Double]] = {
     require(points.nonEmpty, "kmeansL2: no training points")
     val dim = points.head.length
-    var cents = points.take(k).map(_.clone())
-    for (_ <- 1 to iters) {
-      val sums = Array.fill(cents.length)(new Array[Double](dim))
-      val counts = new Array[Long](cents.length)
-      points.foreach { x =>
-        var best = 0; var bestD = Double.MaxValue
-        var j = 0
-        while (j < cents.length) {
-          var dist = 0.0; var d = 0
-          while (d < dim) {
-            val diff = x(d) - cents(j)(d); dist += diff * diff; d += 1
-          }
-          if (dist < bestD) { bestD = dist; best = j }
-          j += 1
+    lloyd(points, k, iters) { (x, cents) =>
+      var best = 0; var bestD = Double.MaxValue
+      var j = 0
+      while (j < cents.length) {
+        var dist = 0.0; var d = 0
+        while (d < dim) {
+          val diff = x(d) - cents(j)(d); dist += diff * diff; d += 1
         }
-        counts(best) += 1
-        var d = 0
-        while (d < dim) { sums(best)(d) += x(d); d += 1 }
+        if (dist < bestD) { bestD = dist; best = j }
+        j += 1
       }
-      cents = cents.zipWithIndex.map { case (old, j) =>
-        if (counts(j) == 0) old else sums(j).map(_ / counts(j))
-      }
+      best
     }
-    cents
   }
 
   /** L2-normalize an array<double> column (one norm computation per row,

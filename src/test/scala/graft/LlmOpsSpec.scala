@@ -345,21 +345,6 @@ class LlmOpsSpec extends SparkSpec {
     val probed = Similarity.ivfTopKForQuery(idx, "vec_id", "embedding",
       q, "q", 10, nprobe = 4).collect().map(_.getLong(0)).toSet
     assert(probed.intersect(exact.toSet).size >= 3)
-
-    // batch probing at nprobe = nlist equals per-query exact for each query
-    val qBatch = emb.filter($"vec_id".isin(0L, 7L))
-      .select($"vec_id".as("qid"), $"embedding")
-    val batchOut = Similarity.ivfTopKBatch(idx, "vec_id", "embedding",
-      qBatch, "qid", "embedding", k = 10, nprobe = 8)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .groupBy(_._1).view
-      .mapValues(_.sortBy(t => (-t._3, t._2)).map(_._2).toSeq).toMap
-    assert(batchOut(0L) == exact)
-    val exact7 = Similarity.topKForQuery(corpus, "vec_id", "embedding",
-      emb.filter($"vec_id" === 7).select($"embedding".as("q")), "q", 10)
-      .collect().map(_.getLong(0)).toSeq
-    assert(batchOut(7L) == exact7)
   }
 
   test("brute-force topK returns self-similar ordering") {

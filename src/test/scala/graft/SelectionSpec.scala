@@ -232,24 +232,6 @@ class SelectionSpec extends SparkSpec {
     assert(math.abs(got(1) - 0.5) < 1e-12) // f1 + f2 = 0
   }
 
-  test("logisticTrain separates a planted linearly-separable corpus") {
-    val rows = (0 until 200).map { i =>
-      val y = i % 2
-      // class 1 sits at f≈1, class 0 at f≈0, tiny deterministic jitter
-      val f = y + (i % 7 - 3) * 0.02
-      (f, 1.0, y)
-    }
-    val df = rows.toDF("f", "one", "y")
-    val (w, b) = graft.operators.Curation.logisticTrain(
-      df, Seq("f"), "y", iters = 50, lr = 2.0)
-    val acc = df.select(
-        ((graft.operators.Curation.logisticScore(
-          Seq(col("f")), w, b) >= 0.5).cast("int") === col("y"))
-          .cast("int").as("ok"))
-      .agg(avg(col("ok"))).head().getDouble(0)
-    assert(acc == 1.0, s"expected perfect separation, got acc=$acc w=$w b=$b")
-  }
-
   // ---- Kneser–Ney --------------------------------------------------------
 
   test("bigramKneserNey matches the hand-computed value on a tiny corpus") {

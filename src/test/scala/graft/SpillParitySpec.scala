@@ -5,14 +5,14 @@ import graft.tools.MemProbe.contentHash
 
 /** In-suite twin of the MemProbe artifact's "spill, never OOM, same
   * answer" contract: force the row-buffer spill surfaces Spark exposes
-  * as SESSION-dynamic confs down to a few hundred rows — WindowExec /
-  * SortMergeJoin external arrays, ObjectHashAggregate sort fallback, and
+  * as SESSION-dynamic confs down to tens or hundreds of rows — WindowExec
+  * / SortMergeJoin external arrays, ObjectHashAggregate sort fallback, and
   * HashAggregate's controlled sort-based fallback
   * (`spark.sql.TungstenAggregate.testFallbackStartsAt`, the hook Spark's
   * own AggregationQuerySuite uses) — plus broadcast disabled so the join
   * queries actually route through SMJ, then assert each query's
   * order-insensitive content hash (MemProbe's) equals its default-conf
-  * baseline.
+  * baseline and each query wrote disk spill.
   *
   * MEMPROBE_r08/r09 prove the same contract empirically at 10-30x volume
   * under a 3 GB heap; this spec pins the spill CODE PATHS (external
@@ -28,14 +28,22 @@ import graft.tools.MemProbe.contentHash
   */
 class SpillParitySpec extends SparkSpec {
 
-  /** One query per spill surface (all hash-exact gated queries):
-    * hash-agg fallback (dedup_exact, kneser_ney), WindowExec buffer
-    * (events_dedup_window), sort+window (dedup_substring), SMJ spill with
-    * broadcast off (tpch_q18 — every join routes through SMJ under
-    * threshold −1). */
+  /** Hash-exact gated queries, each of which writes disk spill under
+    * [[tightConfs]] at sf0.01. Measured one surface's confs at a time, with
+    * the most spill files one task merges in brackets:
+    *  - llm_lm_kneser_ney, tpch_q18, llm_dedup_substring: hash-agg
+    *    fallback (79, 60, 2). tpch_q18's SMJ buffers hold at most 7 rows
+    *    per order key, below any threshold here.
+    *  - llm_dedup_minhash: hash-agg fallback (27) and the SMJ buffer of
+    *    its candidate joins (25).
+    *  - op_window_analytic: the WindowExec buffer (6), with lag/lead and
+    *    growing first/last/nth_value frames read across the spill files.
+    * No gated query writes disk spill through the ObjectHashAggregate
+    * fallback or a session window buffer at sf0.01: those confs stay for
+    * hash parity only. */
   private val targets = Seq(
-    "llm_dedup_exact", "llm_lm_kneser_ney", "events_dedup_window",
-    "llm_dedup_substring", "tpch_q18")
+    "llm_lm_kneser_ney", "tpch_q18", "llm_dedup_substring",
+    "llm_dedup_minhash", "op_window_analytic")
 
   /** The spec runs its queries at sf0.01 (not the suite-default sf0.001)
     * so real partitions cross the lowered thresholds. Threshold choice is
@@ -44,16 +52,17 @@ class SpillParitySpec extends SparkSpec {
     * ~MB read-ahead buffers — a first cut at 8/16 rows turned one large
     * window partition into thousands of spill files and OOM'd the JVM in
     * the spill READERS, which is the opposite of the contract under test.
-    * 256/512 keeps file counts in the tens while still forcing the
-    * in-memory→external-sorter handoff and real disk spills. */
+    * The window buffer spills every 128 rows, so op_window_analytic's
+    * ~380-row return-flag partitions spill; the SMJ buffer every 32 rows,
+    * so only the dedup candidate joins' shared buckets spill. */
   private val spillSf = "/root/testdata/sf0.01"
   private val tightConfs = Map(
-    "spark.sql.windowExec.buffer.in.memory.threshold" -> "256",
-    "spark.sql.windowExec.buffer.spill.threshold" -> "512",
+    "spark.sql.windowExec.buffer.in.memory.threshold" -> "64",
+    "spark.sql.windowExec.buffer.spill.threshold" -> "128",
     "spark.sql.sessionWindow.buffer.in.memory.threshold" -> "256",
     "spark.sql.sessionWindow.buffer.spill.threshold" -> "512",
-    "spark.sql.sortMergeJoinExec.buffer.in.memory.threshold" -> "256",
-    "spark.sql.sortMergeJoinExec.buffer.spill.threshold" -> "512",
+    "spark.sql.sortMergeJoinExec.buffer.in.memory.threshold" -> "16",
+    "spark.sql.sortMergeJoinExec.buffer.spill.threshold" -> "32",
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "128",
     // (skipRows, fallbackStartsAtRows): hash-agg spills its map to a
     // sort-based merge every 1000 input rows per partition — the
@@ -61,47 +70,27 @@ class SpillParitySpec extends SparkSpec {
     // Every fallback writes one spill file and the final merge opens them
     // all at once (~2 MB of read-ahead each): at 100 rows the kneser_ney
     // and tpch_q18 tasks merged up to 783 and 600 files and OOM'd a 4 GB
-    // heap; at 1000 the worst task merges 79, and kneser_ney, tpch_q18
-    // and dedup_substring still spill to disk
+    // heap; at 1000 the worst task merges 79
     "spark.sql.TungstenAggregate.testFallbackStartsAt" -> "2,1000",
-    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    // both thresholds: AQE re-plans a shuffle join whose side is under
+    // its own threshold as a broadcast, so the static one alone leaves
+    // the joins broadcast and the SMJ buffers unused
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
 
   test("forced-spill confs leave every target query's content hash unchanged") {
-    val saved = tightConfs.keys.map { k =>
-      k -> scala.util.Try(spark.conf.get(k)).toOption
-    }.toMap
-    try {
-      val baseline = targets.map { n =>
-        QueryProfile.cold(spark)
-        n -> contentHash(SparkEntry.queries(n)(spark, spillSf))
-      }
-      tightConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-      val tight = QueryProfile.run(spark) {
-        val mismatches = baseline.flatMap { case (n, want) =>
-          QueryProfile.cold(spark)
-          val got = contentHash(SparkEntry.queries(n)(spark, spillSf))
-          if (got == want) None else Some(s"$n: baseline $want != tight $got")
-        }
-        assert(mismatches.isEmpty,
-          s"hash parity broke under forced spill: ${mismatches.mkString("; ")}")
-      }
-      assert(tight.diskSpillBytes > 0,
-        "forced-spill confs produced zero disk spill — the thresholds no " +
-          "longer reach the external sorters (conf names drifted?)")
-    } finally {
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-      QueryProfile.cold(spark)
-    }
+    val profiles = parityUnder(tightConfs, targets)
+    val silent = targets.filter(n => profiles(n).diskSpillBytes == 0)
+    assert(silent.isEmpty,
+      s"forced-spill confs produced zero disk spill for ${silent.mkString(", ")}" +
+        " — the thresholds no longer reach their external sorters " +
+        "(conf names drifted, or the query's plan changed?)")
   }
 
-  /** Parity under a pathological valve/batch conf, shared by the two
-    * custom-kernel tests below: baseline hashes at default confs, then
-    * the same queries with `confs` applied. */
-  private def parityUnder(confs: Map[String, String],
-                          names: Seq[String]): Unit = {
+  /** Parity under forced confs: baseline hashes at default confs, then the
+    * same queries with `confs` applied, each profiled on its own. */
+  private def parityUnder(confs: Map[String, String], names: Seq[String])
+      : Map[String, QueryProfile.Profile] = {
     val saved = confs.keys.map { k =>
       k -> scala.util.Try(spark.conf.get(k)).toOption
     }.toMap
@@ -111,13 +100,21 @@ class SpillParitySpec extends SparkSpec {
         n -> contentHash(SparkEntry.queries(n)(spark, spillSf))
       }
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      val mismatches = baseline.flatMap { case (n, want) =>
+      val forced = baseline.map { case (n, want) =>
         QueryProfile.cold(spark)
-        val got = contentHash(SparkEntry.queries(n)(spark, spillSf))
-        if (got == want) None else Some(s"$n: baseline $want != forced $got")
+        var got = 0L
+        val profile = QueryProfile.run(spark) {
+          got = contentHash(SparkEntry.queries(n)(spark, spillSf))
+        }
+        (n, want, got, profile)
+      }
+      val mismatches = forced.collect {
+        case (n, want, got, _) if got != want =>
+          s"$n: baseline $want != forced $got"
       }
       assert(mismatches.isEmpty,
         s"hash parity broke: ${mismatches.mkString("; ")}")
+      forced.map { case (n, _, _, profile) => n -> profile }.toMap
     } finally {
       saved.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)
