@@ -128,7 +128,8 @@ object Context {
     *   stages finished the other way round. Plans still print the id.
     * - `spark.sql.extensions=graft.plans.GraftExtensions` installs the
     *   GroupedTopK strategy, the window top-k rewrite and its column
-    *   pruning in every session of the JVM, `newSession()` included.
+    *   pruning, and the single-split scan strategy in every session of
+    *   the JVM, `newSession()` included.
     * - AQE's initial partition count, 256: AQE sizes coalescible
     *   exchanges from this starting count down to the 64 MB advisory.
     *   `shufflePartitions` alone would cap the parallelism of every big
@@ -152,6 +153,9 @@ object Context {
     * - `spark.sql.files.maxPartitionBytes=4m`: each sf table is one parquet
     *   file (~50 MB at sf0.1), which the 128 MB default scans in 1-3 tasks
     *   on a 32-thread box. With many files per table it changes nothing.
+    *   A file of at most 4 MB (with the default 4 MB `openCostInBytes`) is
+    *   one split, and [[graft.plans.SingleSplitScanStrategy]] plans its
+    *   scan as one partition, with no exchange above it.
     * - `spark.sql.session.timeZone=UTC`, so timestamps render the same on
     *   every host and in the DuckDB oracle.
     * - `spark.sql.legacy.parquet.nanosAsLong=true`: events.parquet carries

@@ -31,12 +31,19 @@ object Scale {
     * key's rows co-located, so per-key float aggregations keep their
     * single-partition summation order (oracle determinism). */
   def minParallel(df: DataFrame, byCol: String): DataFrame = {
-    // Shuffle-free inputs ONLY: reading .rdd.getNumPartitions of an
+    // Non-adaptive inputs ONLY: reading .rdd.getNumPartitions of an
     // adaptive plan would materialize its AQE query stages (i.e. eagerly
-    // run jobs at construction). The executed plan is adaptive exactly
-    // when the input shuffles — including the exchanges EnsureRequirements
-    // inserts, which the pre-exchange `sparkPlan` does not show yet — and
-    // then AQE governs its width: return it unchanged.
+    // run jobs at construction). The executed plan is adaptive when it
+    // has an exchange or an operator that requires a distribution (an
+    // aggregate, window, join or sort) — including the exchanges
+    // EnsureRequirements inserts, which the pre-exchange `sparkPlan` does
+    // not show yet. Such an input is returned unchanged. Usually AQE then
+    // governs its width; over a one-split scan
+    // (graft.plans.SingleSplitScanExec) nothing shuffles and the width
+    // stays 1. No gated call site (exactPairs, multiProbeAssignments,
+    // bitextMine, hashedGramBuckets) falls in that case at sf0.01: all
+    // 14 calls of a Verify pass get a non-adaptive one-partition input
+    // (a scan, filter or projection) and repartition it.
     val adaptive = df.queryExecution.executedPlan.isInstanceOf[
       org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec]
     val n = df.sparkSession.sparkContext.defaultParallelism

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.SparkSessionExtensions
@@ -85,6 +85,9 @@ case class GroupedTopKExec(keys: Seq[Expression], order: Seq[SortOrder],
 
   override def nodeName: String =
     if (partial) "GroupedTopKPartial" else "GroupedTopK"
+
+  // both phases keep every row in its input partition
+  override def outputPartitioning: Partitioning = child.outputPartitioning
 
   override def requiredChildDistribution: Seq[Distribution] =
     if (partial) super.requiredChildDistribution
@@ -224,10 +227,15 @@ case class GroupedTopKExec(keys: Seq[Expression], order: Seq[SortOrder],
 }
 
 /** Session-extensions installer for config-time registration:
-  * `spark.sql.extensions=graft.plans.GraftExtensions`. */
+  * `spark.sql.extensions=graft.plans.GraftExtensions`. It installs the
+  * [[GroupedTopK]] strategy, the window top-k rewrite and its column
+  * pruning, and [[SingleSplitScanStrategy]], which plans a file scan of
+  * exactly one split as one partition so that no exchange is planned
+  * above it for an aggregate, window, distinct, top-k or global sort. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => GroupedTopKStrategy)
+    ext.injectPlannerStrategy(_ => SingleSplitScanStrategy)
     ext.injectOptimizerRule(_ => RewriteWindowTopK)
     // runs inside the operator-optimization fixed point, so it alternates
     // with ColumnPruning until wide payloads are gone below the heaps

@@ -14,8 +14,9 @@ class ScaleSpec extends SparkSpec {
     val scan = spark.read.parquet(s"$sf/nation.parquet")
     assert(scan.rdd.getNumPartitions < n)
     assert(Scale.minParallel(scan, "n_nationkey").rdd.getNumPartitions == n)
-    // the aggregate's exchange appears only once EnsureRequirements runs,
-    // so the pre-exchange `sparkPlan` does not show it
+    // the aggregate makes the executed plan adaptive; over this one-split
+    // scan EnsureRequirements adds no exchange, so nothing shuffles and
+    // the width stays 1, and minParallel returns the input as it is
     val grouped = scan.groupBy(col("n_regionkey")).agg(count(lit(1)).as("c"))
     var out: org.apache.spark.sql.DataFrame = null
     assert(QueryProfile.run(spark) {

@@ -30,11 +30,13 @@ class SpillParitySpec extends SparkSpec {
 
   /** Hash-exact gated queries, each of which writes disk spill under
     * [[tightConfs]] at sf0.01. Measured one surface's confs at a time, with
-    * the most spill files one task merges in brackets:
+    * the most spill files one task writes in brackets (a one-split scan's
+    * partial and final aggregates share one task, so a task can hold two
+    * spilling sorters):
     *  - llm_lm_kneser_ney, tpch_q18, llm_dedup_substring: hash-agg
-    *    fallback (79, 60, 2). tpch_q18's SMJ buffers hold at most 7 rows
+    *    fallback (132, 75, 2). tpch_q18's SMJ buffers hold at most 7 rows
     *    per order key, below any threshold here.
-    *  - llm_dedup_minhash: hash-agg fallback (27) and the SMJ buffer of
+    *  - llm_dedup_minhash: hash-agg fallback (54) and the SMJ buffer of
     *    its candidate joins (25).
     *  - op_window_analytic: the WindowExec buffer (6), with lag/lead and
     *    growing first/last/nth_value frames read across the spill files.
@@ -70,7 +72,7 @@ class SpillParitySpec extends SparkSpec {
     // Every fallback writes one spill file and the final merge opens them
     // all at once (~2 MB of read-ahead each): at 100 rows the kneser_ney
     // and tpch_q18 tasks merged up to 783 and 600 files and OOM'd a 4 GB
-    // heap; at 1000 the worst task merges 79
+    // heap; at 1000 the worst task writes 132
     "spark.sql.TungstenAggregate.testFallbackStartsAt" -> "2,1000",
     // both thresholds: AQE re-plans a shuffle join whose side is under
     // its own threshold as a broadcast, so the static one alone leaves
@@ -85,6 +87,24 @@ class SpillParitySpec extends SparkSpec {
       s"forced-spill confs produced zero disk spill for ${silent.mkString(", ")}" +
         " — the thresholds no longer reach their external sorters " +
         "(conf names drifted, or the query's plan changed?)")
+  }
+
+  /** [[tightConfs]]' SMJ buffer thresholds alone, with broadcast off so
+    * the joins stay sort-merge joins. */
+  private val smjConfs = tightConfs.filter { case (k, _) =>
+    k.startsWith("spark.sql.sortMergeJoinExec.") ||
+      k.endsWith("autoBroadcastJoinThreshold")
+  }
+
+  test("the SMJ buffer alone spills llm_dedup_minhash's candidate joins") {
+    // the test above sums every surface's spill per query, so a minhash
+    // query whose hash-agg fallback spills would pass it even with the SMJ
+    // buffer silent; this one pins the SMJ surface on its own
+    val profile = parityUnder(smjConfs, Seq("llm_dedup_minhash"))
+    assert(profile("llm_dedup_minhash").diskSpillBytes > 0,
+      "the SMJ buffer thresholds no longer reach llm_dedup_minhash's " +
+        "sort-merge joins (conf names drifted, or its joins stopped " +
+        "being sort-merge joins?)")
   }
 
   /** Parity under forced confs: baseline hashes at default confs, then the
