@@ -128,8 +128,9 @@ object Context {
     *   stages finished the other way round. Plans still print the id.
     * - `spark.sql.extensions=graft.plans.GraftExtensions` installs the
     *   GroupedTopK strategy, the window top-k rewrite and its column
-    *   pruning, and the single-split scan strategy in every session of
-    *   the JVM, `newSession()` included.
+    *   pruning, the single-split scan strategy and the eight `graft_*`
+    *   SQL functions in every session of the JVM, `newSession()`
+    *   included. It is the only way the engine installs itself.
     * - AQE's initial partition count, 256: AQE sizes coalescible
     *   exchanges from this starting count down to the 64 MB advisory.
     *   `shufflePartitions` alone would cap the parallelism of every big
@@ -209,9 +210,6 @@ object Context {
             appName: String = "graft"): Context = {
     val spark = builder(s"local[$cores]", shufflePartitions)
       .appName(appName).getOrCreate()
-    // getOrCreate may return a pre-existing session whose extensions were
-    // fixed at first build — the runtime registration path covers that
-    graft.plans.RewriteWindowTopK.register(spark)
     new Context(spark, shufflePartitions)
   }
 }

@@ -2,8 +2,7 @@ package graft.expressions
 
 import java.util.zip.Deflater
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -93,17 +92,12 @@ object DeflateRatio {
     compressed.toDouble / bytes.length
   }
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier(name)))
-      reg.createOrReplaceTempFunction(name, { exprs =>
-        require(exprs.length == 1, s"$name takes 1 argument")
-        DeflateRatio(exprs.head)
-      }, "built-in")
+  /** SQL builder, installed under [[name]] by
+    * [[graft.plans.GraftExtensions]]. */
+  val builder: Seq[Expression] => Expression = { exprs =>
+    require(exprs.length == 1, s"$name takes 1 argument")
+    DeflateRatio(exprs.head)
   }
 
-  def deflateRatio(spark: SparkSession, c: Column): Column = {
-    register(spark)
-    call_function(name, c)
-  }
+  def deflateRatio(c: Column): Column = call_function(name, c)
 }

@@ -2,8 +2,6 @@ package graft.expressions
 
 import java.util.zip.{CRC32, Deflater}
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
@@ -432,37 +430,33 @@ object MediaHeaders {
           "(png|jpeg|wav|png_grad|jpeg_grad|png_noise|wav_tone)")
     }
 
-  // ---- registration (same registry path as VectorCosine) -----------------
+  // ---- SQL builders, installed by graft.plans.GraftExtensions ------------
 
   val kindName = "graft_media_kind"
   val fieldName = "graft_media_field"
   val buildName = "graft_media_build"
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def put(name: String)(builder: Seq[Expression] => Expression): Unit =
-      if (!reg.functionExists(FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, builder, "built-in")
-    put(kindName) { exprs =>
-      require(exprs.length == 1, s"$kindName takes 1 argument")
-      MediaKind(exprs.head)
+  val kindBuilder: Seq[Expression] => Expression = { exprs =>
+    require(exprs.length == 1, s"$kindName takes 1 argument")
+    MediaKind(exprs.head)
+  }
+
+  val fieldBuilder: Seq[Expression] => Expression = { exprs =>
+    require(exprs.length == 2, s"$fieldName takes (binary, 'field')")
+    val field = exprs(1) match {
+      case Literal(s: UTF8String, StringType) => s.toString
+      case other => throw new IllegalArgumentException(
+        s"$fieldName field must be a string literal, got $other")
     }
-    put(fieldName) { exprs =>
-      require(exprs.length == 2, s"$fieldName takes (binary, 'field')")
-      val field = exprs(1) match {
-        case Literal(s: UTF8String, StringType) => s.toString
-        case other => throw new IllegalArgumentException(
-          s"$fieldName field must be a string literal, got $other")
-      }
-      require(fieldNames.contains(field),
-        s"unknown media field '$field' (${fieldNames.keys.mkString("|")})")
-      MediaField(exprs.head, field)
-    }
-    put(buildName) { exprs =>
-      require(exprs.length == 5 || exprs.length == 6,
-        s"$buildName takes (kind, p1, p2, p3, p4[, p5])")
-      BuildMedia(exprs)
-    }
+    require(fieldNames.contains(field),
+      s"unknown media field '$field' (${fieldNames.keys.mkString("|")})")
+    MediaField(exprs.head, field)
+  }
+
+  val buildBuilder: Seq[Expression] => Expression = { exprs =>
+    require(exprs.length == 5 || exprs.length == 6,
+      s"$buildName takes (kind, p1, p2, p3, p4[, p5])")
+    BuildMedia(exprs)
   }
 }
 

@@ -2,7 +2,7 @@ package graft.expressions
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, XXH64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -128,32 +128,22 @@ object MinHashSig {
 
   val name = "graft_minhash_sig"
 
-  /** Register in the session function registry (idempotent, guarded like
-    * [[VectorCosine.register]]). The analyzer wraps a registry-built
+  /** SQL builder, installed under [[name]] by
+    * [[graft.plans.GraftExtensions]]. The analyzer wraps a registry-built
     * AggregateFunction in AggregateExpression automatically, so
     * `call_function` usage in `.agg(...)` just works. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-      reg.createOrReplaceTempFunction(
-        name,
-        { exprs =>
-          require(exprs.length == 2, s"$name takes (shingle, k) arguments")
-          val k = exprs(1) match {
-            case Literal(v: Int, IntegerType) => v
-            case other => throw new IllegalArgumentException(
-              s"$name k must be an integer literal, got $other")
-          }
-          MinHashSig(exprs.head, k)
-        },
-        "built-in")
+  val builder: Seq[Expression] => Expression = { exprs =>
+    require(exprs.length == 2, s"$name takes (shingle, k) arguments")
+    val k = exprs(1) match {
+      case Literal(v: Int, IntegerType) => v
+      case other => throw new IllegalArgumentException(
+        s"$name k must be an integer literal, got $other")
+    }
+    MinHashSig(exprs.head, k)
   }
 
-  /** Column builder: `minhashSig(spark, col("sh"), 64)` aggregates to an
+  /** Column builder: `minhashSig(col("sh"), 64)` aggregates to an
     * `array<bigint>` of the k family minima. */
-  def minhashSig(spark: SparkSession, sh: Column, k: Int): Column = {
-    register(spark)
+  def minhashSig(sh: Column, k: Int): Column =
     call_function(name, sh, org.apache.spark.sql.functions.lit(k))
-  }
 }

@@ -2,8 +2,7 @@ package graft.expressions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -61,28 +60,24 @@ object UnicodeNormalize {
 
   val name = "graft_unicode_normalize"
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier(name)))
-      reg.createOrReplaceTempFunction(name, { exprs =>
-        require(exprs.length == 2, s"$name takes (text, form)")
-        val form = exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v, StringType)
-            if v != null => v.toString
-          case other => throw new IllegalArgumentException(
-            s"$name: form must be a string literal, got $other")
-        }
-        UnicodeNormalize(exprs.head, form)
-      }, "built-in")
+  /** SQL builder, installed under [[name]] by
+    * [[graft.plans.GraftExtensions]]. */
+  val builder: Seq[Expression] => Expression = { exprs =>
+    require(exprs.length == 2, s"$name takes (text, form)")
+    val form = exprs(1) match {
+      case org.apache.spark.sql.catalyst.expressions.Literal(v, StringType)
+        if v != null => v.toString
+      case other => throw new IllegalArgumentException(
+        s"$name: form must be a string literal, got $other")
+    }
+    UnicodeNormalize(exprs.head, form)
   }
 
   /** Canonical composition — é as one codepoint, etc. */
-  def nfc(spark: SparkSession, c: Column): Column = {
-    register(spark); call_function(name, c, org.apache.spark.sql.functions.lit("NFC"))
-  }
+  def nfc(c: Column): Column =
+    call_function(name, c, org.apache.spark.sql.functions.lit("NFC"))
 
   /** Compatibility composition — fullwidth→ASCII, ligatures expanded. */
-  def nfkc(spark: SparkSession, c: Column): Column = {
-    register(spark); call_function(name, c, org.apache.spark.sql.functions.lit("NFKC"))
-  }
+  def nfkc(c: Column): Column =
+    call_function(name, c, org.apache.spark.sql.functions.lit("NFKC"))
 }

@@ -1,6 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -120,27 +120,14 @@ object VectorCosine {
 
   val name = "graft_vec_cosine"
 
-  /** Register in the session function registry (idempotent), the same
-    * registration path the reference uses for its function registry
-    * (reference functions.rs:304-397). Registration is guarded by an
-    * existence check so repeated column builds don't spam the log with
-    * `replaced a previously registered function` warnings. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-      reg.createOrReplaceTempFunction(
-        name,
-        { exprs =>
-          require(exprs.length == 2, s"$name takes 2 arguments")
-          VectorCosine(exprs.head, exprs(1))
-        },
-        "built-in")
+  /** SQL builder, installed under [[name]] in every session by
+    * [[graft.plans.GraftExtensions]], as the reference installs its
+    * functions in the session state (reference functions.rs:304-397). */
+  val builder: Seq[Expression] => Expression = { exprs =>
+    require(exprs.length == 2, s"$name takes 2 arguments")
+    VectorCosine(exprs.head, exprs(1))
   }
 
-  /** Column builder: registers on the session and resolves by name. */
-  def vecCosine(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function(name, a, b)
-  }
+  /** Column builder: resolves by name through [[builder]]. */
+  def vecCosine(a: Column, b: Column): Column = call_function(name, a, b)
 }

@@ -1,6 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -94,23 +94,12 @@ object VectorDotInt {
 
   val name = "graft_vec_dot_int"
 
-  /** Idempotent session-registry registration (same guarded path as
-    * VectorCosine). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-      reg.createOrReplaceTempFunction(
-        name,
-        { exprs =>
-          require(exprs.length == 2, s"$name takes 2 arguments")
-          VectorDotInt(exprs.head, exprs(1))
-        },
-        "built-in")
+  /** SQL builder, installed under [[name]] by
+    * [[graft.plans.GraftExtensions]]. */
+  val builder: Seq[Expression] => Expression = { exprs =>
+    require(exprs.length == 2, s"$name takes 2 arguments")
+    VectorDotInt(exprs.head, exprs(1))
   }
 
-  def vecDotInt(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function(name, a, b)
-  }
+  def vecDotInt(a: Column, b: Column): Column = call_function(name, a, b)
 }

@@ -107,11 +107,6 @@ object Dedup {
     graft.plans.GroupedTopK(df, keyCols,
       Seq(better.desc, col(idCol).asc), 1)
 
-  /** Exact dedup modulo case/punctuation/whitespace via md5 fingerprint. */
-  def byFingerprint(df: DataFrame, textCol: String, idCol: String): DataFrame =
-    exact(df.withColumn("fp", TextAnalysis.fingerprint(col(textCol))),
-          Seq("fp"), idCol).drop("fp")
-
   /** Incremental exact dedup — the daily-ingest shape: survivors of a NEW
     * batch against an already-curated corpus. Within-batch exact dedup
     * first (min-`idCol` survivor per key tuple), then an anti-join against
@@ -1326,8 +1321,7 @@ object Dedup {
     * unpacked to the mh_i schema downstream banding expects. */
   private def signaturesFromShingles(sh: DataFrame, idCol: String,
                                      k: Int): DataFrame = {
-    val sig = graft.expressions.MinHashSig
-      .minhashSig(sh.sparkSession, col("sh"), k).as("mh")
+    val sig = graft.expressions.MinHashSig.minhashSig(col("sh"), k).as("mh")
     sh.groupBy(col(idCol)).agg(sig)
       .select(col(idCol) +:
         (0 until k).map(i => col("mh").getItem(i).as(s"mh_$i")): _*)

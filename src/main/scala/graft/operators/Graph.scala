@@ -76,19 +76,11 @@ object Graph {
     * parallel edges count once per occurrence, self-loops are legal
     * (callers wanting the classic self-loop-free chain filter upstream).
     * Driver state: N and |seeds| (two longs) + one dangling-mass double
-    * per iteration (+ one L1-delta double when `epsilon` is set).
-    *
-    * `epsilon`: optional convergence early-exit — after each round the L1
-    * delta ‖rank′ − rank‖₁ (one more join + agg → ONE driver double) stops
-    * the loop when it drops below ε, with `iters` as the hard cap. At
-    * 100 TB a converged graph stops paying for the remaining rounds;
-    * with ε unset (the default, and what every gated oracle uses) the
-    * iteration count is exact and fixed. */
+    * per iteration. The loop runs exactly `iters` rounds. */
   def pageRank(nodes: DataFrame, edges: DataFrame, idCol: String,
                srcCol: String, dstCol: String,
                iters: Int = 5, damping: Double = 0.85,
-               teleport: Option[DataFrame] = None,
-               epsilon: Option[Double] = None): DataFrame = {
+               teleport: Option[DataFrame] = None): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(damping > 0 && damping < 1,
       s"damping must be in (0,1), got $damping")
@@ -125,28 +117,19 @@ object Graph {
 
     var ranks = teleP.select(col(idCol), col("__tv").as("__r"))
       .localCheckpoint()
-    var converged = false
-    for (_ <- 1 to iters if !converged) {
+    for (_ <- 1 to iters) {
       val dm = dangling.join(ranks, idCol)
         .agg(coalesce(sum(col("__r")), lit(0.0))).head.getDouble(0)
       val contribs = e.join(ranks, e("__src") === ranks(idCol))
         .groupBy(col("__dst").as(idCol))
         .agg(sum(col("__r") / col("__odeg")).as("__c"))
-      val next = teleP.join(contribs, Seq(idCol), "left")
+      ranks = teleP.join(contribs, Seq(idCol), "left")
         .select(col(idCol),
           (lit(1.0 - damping) * col("__tv") +
             lit(damping) * (coalesce(col("__c"), lit(0.0)) +
               lit(dm) * col("__tv")))
             .as("__r"))
         .localCheckpoint()
-      epsilon.foreach { eps =>
-        val delta = ranks
-          .join(next.select(col(idCol), col("__r").as("__r2")), idCol)
-          .agg(coalesce(sum(abs(col("__r2") - col("__r"))), lit(0.0)))
-          .head.getDouble(0)
-        if (delta < eps) converged = true
-      }
-      ranks = next
     }
     ranks.select(col(idCol), col("__r").as("rank"))
   }
@@ -165,15 +148,10 @@ object Graph {
     * shuffles, localCheckpoint lineage cuts. Returns
     * (`idCol`, authority, hub). Contract as pageRank's; the graph must
     * contain at least one edge between `nodes` members (otherwise the
-    * normalizer is zero and HITS is undefined).
-    *
-    * `epsilon`: optional convergence early-exit on the AUTHORITY vector's
-    * L1 delta per full iteration (one extra join + agg → one driver
-    * double) — same semantics as [[pageRank]]'s: `iters` stays the hard
-    * cap, unset (default, all gated oracles) keeps the count exact. */
+    * normalizer is zero and HITS is undefined). The loop runs exactly
+    * `iters` rounds. */
   def hits(nodes: DataFrame, edges: DataFrame, idCol: String,
-           srcCol: String, dstCol: String, iters: Int = 5,
-           epsilon: Option[Double] = None): DataFrame = {
+           srcCol: String, dstCol: String, iters: Int = 5): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val ids = nodes.select(col(idCol))
     val n = ids.count()
@@ -183,9 +161,7 @@ object Graph {
 
     var auth = ids.withColumn("__s", lit(1.0 / n)).localCheckpoint()
     var hub = auth
-    var converged = false
-    for (_ <- 1 to iters if !converged) {
-      val prevAuth = auth
+    for (_ <- 1 to iters) {
       // checkpoint the RAW contribution table, then derive both the
       // normalizer and the normalized vector from the checkpoint — the
       // heavy edge join executes exactly once per half-step (computing
@@ -207,13 +183,6 @@ object Graph {
       hub = ids.join(hRaw, Seq(idCol), "left")
         .select(col(idCol),
           (coalesce(col("__raw"), lit(0.0)) / lit(hTot)).as("__s"))
-      epsilon.foreach { eps =>
-        val delta = prevAuth
-          .join(auth.select(col(idCol), col("__s").as("__s2")), idCol)
-          .agg(coalesce(sum(abs(col("__s2") - col("__s"))), lit(0.0)))
-          .head.getDouble(0)
-        if (delta < eps) converged = true
-      }
     }
     auth.select(col(idCol), col("__s").as("authority"))
       .join(hub.select(col(idCol), col("__s").as("hub")), Seq(idCol))

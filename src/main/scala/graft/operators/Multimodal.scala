@@ -6,17 +6,16 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing: image/audio/video as opaque `binary` columns
-  * with a typed metadata struct, processed in partition-local batches.
+  * with a typed metadata struct, processed by a partition-local map.
   *
   * Image decode is REAL: the JDK's own codecs (javax.imageio — PNG and
   * JPEG readers/writers ship with every JVM) run inside the
-  * partition-local `mapPartitions` batch seam, so pixel statistics,
+  * partition-local `mapPartitions` decode seam, so pixel statistics,
   * resampling, and perceptual hashing operate on genuinely decoded
   * rasters. The Spark-side contract is unchanged from the earlier stub
-  * generation: schema-first output, batch-at-a-time iteration (the shape
-  * an Arrow/Pandas-UDF or JNI codec bridge plugs into), partition
-  * preservation — no shuffle, no driver involvement, which is what lets
-  * the same decode kernel run over 100 TB of payloads as a pure map.
+  * generation: schema-first output, partition preservation — no shuffle,
+  * no driver involvement, which is what lets the same decode kernel run
+  * over 100 TB of payloads as a pure map.
   * A payload the decoder rejects yields NULL stats, never a throw.
   */
 object Multimodal {
@@ -115,19 +114,10 @@ object Multimodal {
         out
     }
 
-  /** The batch seam every decode kernel runs through: partition-local,
-    * batch-at-a-time iteration (the exact shape of an Arrow/Pandas-UDF
-    * bridge: the decoder sees a batch of payloads per call, amortizing
-    * codec setup), preserving partitioning — no shuffle. Each output row
-    * is the input's `idCol` value followed by `f(payload)`, typed by
-    * `outFields`.
-    *
-    * A batch is 256 payloads unless the session conf
-    * `spark.graft.multimodal.batchSize` overrides it — the fleet-wide
-    * operational knob for sizing codec batches, and the hook SpillParitySpec
-    * and ImageSpec use to force the seam down to a few rows (batch
-    * boundaries must never change results). Resolved DRIVER-side (session
-    * confs are not readable inside mapPartitions closures on executors). */
+  /** The decode seam every decode kernel runs through: a partition-local
+    * map, one `f` call per payload, preserving partitioning — no shuffle.
+    * Each output row is the input's `idCol` value followed by
+    * `f(payload)`, typed by `outFields`. */
   private def decodeEach(df: DataFrame, idCol: String, binCol: String,
                          outFields: Seq[StructField])(
                           f: Array[Byte] => Seq[Any]): DataFrame = {
@@ -135,20 +125,12 @@ object Multimodal {
     val binIx = df.schema.fieldIndex(binCol)
     implicit val enc =
       RowEncoder.encoderFor(StructType(df.schema(idCol) +: outFields))
-    val bs = scala.util.Try(
-      df.sparkSession.conf.get("spark.graft.multimodal.batchSize").toInt)
-      .getOrElse(256)
-    df.mapPartitions { it =>
-      it.grouped(bs).flatMap { batch =>
-        // one decoder invocation per batch — swap point for a JNI codec
-        batch.map { row =>
-          Row.fromSeq(row.get(idIx) +: f(row.getAs[Array[Byte]](binIx)))
-        }
-      }
-    }
+    df.mapPartitions(_.map { row =>
+      Row.fromSeq(row.get(idIx) +: f(row.getAs[Array[Byte]](binIx)))
+    })
   }
 
-  /** Batched feature extraction over the binary column (see
+  /** Feature extraction over the binary column (see
     * [[decodeEach]]). */
   def extractFeatures(df: DataFrame, idCol: String, binCol: String,
                       dim: Int = 64): DataFrame =
@@ -175,7 +157,7 @@ object Multimodal {
     * sum/min/max, and an 8-stripe row-profile signature (per-stripe gray
     * sums, '|'-joined — stripe of row y is y·8 div h). All integer
     * arithmetic over genuinely decoded pixels; a payload the decoder
-    * rejects yields NULL stats. Partition-local batches, no shuffle. */
+    * rejects yields NULL stats. Partition-local, no shuffle. */
   def imageStats(df: DataFrame, idCol: String, binCol: String): DataFrame =
     decodeEach(df, idCol, binCol,
         statsSchema(df.schema(idCol)).tail) { payload =>
@@ -208,7 +190,7 @@ object Multimodal {
     * decode→transform→encode round trip whose output raster is
     * recomputable arithmetic (both the index mapping and, for gradient
     * inputs, the pixel values). Undecodable payloads pass through as
-    * NULL. Partition-local batches, no shuffle. */
+    * NULL. Partition-local, no shuffle. */
   def resizeImage(df: DataFrame, idCol: String, binCol: String,
                   targetW: Int, targetH: Int): DataFrame = {
     require(targetW > 0 && targetH > 0, "target dims must be positive")
@@ -259,7 +241,7 @@ object Multimodal {
     * min / max, and an 8-bucket time-profile signature (per-bucket
     * amplitude sums, bucket of sample i is i·8 div n). All integer
     * arithmetic over genuinely decoded samples; undecodable payloads
-    * yield NULL stats. Partition-local batches, no shuffle. */
+    * yield NULL stats. Partition-local, no shuffle. */
   def audioStats(df: DataFrame, idCol: String, binCol: String): DataFrame =
     decodeEach(df, idCol, binCol, Seq(
       StructField("sample_rate_hz", IntegerType, nullable = true),

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.expressions.VectorCosine.vecCosine
+
 /** Similarity search over an embedding column (`array<float>`):
   * brute-force cosine top-k as the exact baseline and a bit-sampled
   * random-hyperplane LSH as the scale path. All arithmetic runs through
@@ -42,9 +44,6 @@ object Similarity {
     if (d == 0) 0.0 else dot / d
   }
 
-  private def fastCosine(df: DataFrame)(a: Column, b: Column): Column =
-    graft.expressions.VectorCosine.vecCosine(df.sparkSession, a, b)
-
   /** Per-row centroid scores as ONE array<struct<c:double, i:int>> column
     * (cosine of `v` against every centroid, index attached for
     * argmax/top-probe selection). Two regimes:
@@ -72,13 +71,12 @@ object Similarity {
     * in the literal regime (0/0) vs 0.0 in the matrix regime — both
     * orderings rank every cell equal, so argmax still agrees (highest
     * index wins the tie on either side). */
-  private[graft] def centroidScores(df: DataFrame,
-                             centroids: Array[Array[Double]],
-                             v: Column,
-                             forceLiteral: Boolean = false): Column =
+  private[graft] def centroidScores(centroids: Array[Array[Double]],
+                                    v: Column,
+                                    forceLiteral: Boolean = false): Column =
     if (centroids.length <= 64 || forceLiteral) {
       array(centroids.zipWithIndex.map { case (c, i) =>
-        struct(fastCosine(df)(v, typedLit(c.toSeq)).as("c"),
+        struct(vecCosine(v, typedLit(c.toSeq)).as("c"),
           lit(i).as("i"))
       }: _*)
     } else {
@@ -106,7 +104,7 @@ object Similarity {
       .crossJoin(broadcast(query.select(col(qCol).cast("array<double>")
         .as("__q"))))
       .select(col(idCol),
-        fastCosine(corpus)(col(vecCol), col("__q")).as("cosine"))
+        vecCosine(col(vecCol), col("__q")).as("cosine"))
       .orderBy(col("cosine").desc, col(idCol))
       .limit(k)
   }
@@ -124,7 +122,7 @@ object Similarity {
       .crossJoin(broadcast(queries.select(col(qIdCol).as("query_id"),
         col(qVecCol).cast("array<double>").as("__q"))))
       .select(col("query_id"), col(idCol),
-        fastCosine(corpus)(col(vecCol), col("__q")).as("cosine"))
+        vecCosine(col(vecCol), col("__q")).as("cosine"))
     graft.plans.GroupedTopK(scored, Seq("query_id"),
       Seq(col("cosine").desc, col(idCol).asc), k)
   }
@@ -195,7 +193,7 @@ object Similarity {
       .join(corpus.select(col(idCol).as("id_a"), col(vecCol).as("va")), "id_a")
       .join(corpus.select(col(idCol).as("id_b"), col(vecCol).as("vb")), "id_b")
       .select(col("id_a"), col("id_b"),
-        fastCosine(corpus)(col("va"), col("vb")).as("cosine"))
+        vecCosine(col("va"), col("vb")).as("cosine"))
       .filter(col("cosine") >= threshold)
   }
 
@@ -285,7 +283,7 @@ object Similarity {
     // deterministically); plan size stays O(1) in nlist past 64 cells
     // (centroidScores HOF regime)
     val assigned = corpus.withColumn("cluster",
-      array_max(centroidScores(corpus, centroids, v)).getField("i"))
+      array_max(centroidScores(centroids, v)).getField("i"))
     IvfIndex(assigned, centroids)
   }
 
@@ -306,7 +304,7 @@ object Similarity {
     index.assignments
       .filter(col("cluster").isin(probes.toSeq: _*))
       .select(col(idCol),
-        fastCosine(index.assignments)(col(vecCol).cast("array<double>"),
+        vecCosine(col(vecCol).cast("array<double>"),
           typedLit(q.toSeq)).as("cosine"))
       .orderBy(col("cosine").desc, col(idCol))
       .limit(k)
@@ -327,7 +325,7 @@ object Similarity {
     a.crossJoin(b)
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
-        fastCosine(corpus)(col("va"), col("vb")).as("cosine"))
+        vecCosine(col("va"), col("vb")).as("cosine"))
       .filter(col("cosine") >= threshold)
   }
 
@@ -360,7 +358,7 @@ object Similarity {
     corpus.withColumn("cluster",
         explode_outer(transform(
           slice(reverse(array_sort(
-            centroidScores(corpus, index.centroids, v))), 1, probes),
+            centroidScores(index.centroids, v))), 1, probes),
           s => s.getField("i"))))
       .filter(col("cluster").isNotNull)
   }
@@ -408,7 +406,7 @@ object Similarity {
     val vb = corpus.select(col(idCol).as("id_b"), col(vecCol).as("vb"))
     cands.join(va, "id_a").join(vb, "id_b")
       .select(col("id_a"), col("id_b"),
-        fastCosine(corpus)(col("va"), col("vb")).as("cosine"))
+        vecCosine(col("va"), col("vb")).as("cosine"))
       .filter(col("cosine") >= threshold)
   }
 
@@ -519,7 +517,7 @@ object Similarity {
     val r = right.select(col(idCol).as("dst"), col(vecCol).as("__vr"))
     val pairs = Dedup.reuse(s"bitext:pairs:$k",
       l.crossJoin(r).select(col("src"), col("dst"),
-        fastCosine(left)(col("__vl"), col("__vr")).as("__c")))
+        vecCosine(col("__vl"), col("__vr")).as("__c")))
     val nnL = graft.plans.GroupedTopK(pairs, Seq("src"),
         Seq(col("__c").desc, col("dst").asc), k)
       .groupBy(col("src")).agg(round(avg(col("__c")), 6).as("__al"))
@@ -762,13 +760,11 @@ object Similarity {
                             threshold: Double): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"threshold=$threshold must be in (0, 1]")
-    val spark = corpus.sparkSession
     val e = evalSet.select(col(idCol).as("eval_id"), col(vecCol).as("__ev"))
     val scored = corpus.select(col(idCol), col(vecCol).as("__cv"))
       .crossJoin(broadcast(e))
       .select(col(idCol), col("eval_id"),
-        round(graft.expressions.VectorCosine.vecCosine(spark,
-          col("__cv"), col("__ev")), 6).as("cosine"))
+        round(vecCosine(col("__cv"), col("__ev")), 6).as("cosine"))
     graft.plans.GroupedTopK(scored, Seq(idCol),
         Seq(col("cosine").desc, col("eval_id").asc), 1)
       .filter(col("cosine") >= threshold)

@@ -104,15 +104,6 @@ object TextAnalysis {
     * whitespace. */
   def fingerprint(c: Column): Column = md5(normalized(c))
 
-  /** 64-bit rolling fingerprint over normalized tokens — order-sensitive,
-    * cheap to band/bucket on. A chained-hash fold (acc, token) → xxhash64:
-    * overflow-free under ANSI mode (a polynomial multiply would throw),
-    * expressed with the built-in higher-order aggregate so it stays
-    * distributed and codegen-adjacent. */
-  def rollingFingerprint(c: Column): Column =
-    aggregate(split(normalized(c), " "), lit(1469598103934665603L),
-      (acc, w) => xxhash64(acc, w))
-
   /** URL canonicalization for crawl-level dedup — the FIRST dedup pass a
     * web corpus runs, before any content is fetched or compared: two
     * fetches of the same canonical URL are the same document regardless

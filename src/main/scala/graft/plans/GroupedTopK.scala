@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
@@ -9,7 +9,6 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.SparkSessionExtensions
 
 /** Whole-operator extension demo (SURVEY §7 preference (c)): per-key top-k
   * as a first-class plan node — logical node, planner strategy, and a
@@ -24,10 +23,9 @@ import org.apache.spark.sql.SparkSessionExtensions
   * requiredChildDistribution (cluster by keys) means the shuffle itself is
   * identical; only the post-shuffle work changes.
   *
-  * Registration: strategies injectable at session-build time via
-  * [[GraftExtensions]] (`spark.sql.extensions`) or at runtime through
-  * `spark.experimental.extraStrategies` (what [[GroupedTopK.apply]] does),
-  * both public Spark extension points.
+  * Registration: [[GraftExtensions]] (`spark.sql.extensions`) injects the
+  * strategy, the window top-k rewrite and the column pruning when the
+  * session is built; nothing registers them at runtime.
   */
 case class GroupedTopKPlan(keys: Seq[Expression], order: Seq[SortOrder],
                            k: Int, child: LogicalPlan) extends UnaryNode {
@@ -226,44 +224,14 @@ case class GroupedTopKExec(keys: Seq[Expression], order: Seq[SortOrder],
       newChild: SparkPlan): GroupedTopKExec = copy(child = newChild)
 }
 
-/** Session-extensions installer for config-time registration:
-  * `spark.sql.extensions=graft.plans.GraftExtensions`. It installs the
-  * [[GroupedTopK]] strategy, the window top-k rewrite and its column
-  * pruning, and [[SingleSplitScanStrategy]], which plans a file scan of
-  * exactly one split as one partition so that no exchange is planned
-  * above it for an aggregate, window, distinct, top-k or global sort. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectPlannerStrategy(_ => GroupedTopKStrategy)
-    ext.injectPlannerStrategy(_ => SingleSplitScanStrategy)
-    ext.injectOptimizerRule(_ => RewriteWindowTopK)
-    // runs inside the operator-optimization fixed point, so it alternates
-    // with ColumnPruning until wide payloads are gone below the heaps
-    ext.injectOptimizerRule(_ => PruneGroupedTopK)
-  }
-}
-
 object GroupedTopK {
 
-  /** Ensure the strategy is active on an existing session (idempotent).
-    * Also activates [[PruneGroupedTopK]] so runtime-registered sessions
-    * prune columns through the node (the extraOptimizations batch runs
-    * after Catalyst's ColumnPruning has stacked a Project above it). */
-  def register(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(GroupedTopKStrategy))
-      spark.experimental.extraStrategies = cur :+ GroupedTopKStrategy
-    val opts = spark.experimental.extraOptimizations
-    if (!opts.contains(PruneGroupedTopK))
-      spark.experimental.extraOptimizations = opts :+ PruneGroupedTopK
-  }
-
   /** Top `k` rows per distinct value of `keyCols`, ranked by `orderBy`
-    * (pass `.desc`/`.asc` columns; bare columns default ascending). */
+    * (pass `.desc`/`.asc` columns; bare columns default ascending). The
+    * session's [[GraftExtensions]] plan the node. */
   def apply(df: DataFrame, keyCols: Seq[String], orderBy: Seq[Column],
             k: Int): DataFrame = {
     val spark = df.sparkSession
-    register(spark)
     val keyExprs =
       keyCols.map(c => ColumnBridge.eagerExpression(spark, df.col(c)))
     val sortOrder = orderBy.map(c =>

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression, LessThan, LessThanOrEqual, Literal, RowNumber, WindowExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Window, WindowGroupLimit}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -52,13 +51,4 @@ object RewriteWindowTopK extends Rule[LogicalPlan] {
           if a.semanticEquals(rn) => Some(v - 1)
       case _ => None
     }
-
-  /** Activate on an existing session (idempotent); also injected by
-    * [[GraftExtensions]] for the `spark.sql.extensions` config path. */
-  def register(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(RewriteWindowTopK))
-      spark.experimental.extraOptimizations = cur :+ RewriteWindowTopK
-    GroupedTopK.register(spark) // the strategy that plans the rewritten node
-  }
 }

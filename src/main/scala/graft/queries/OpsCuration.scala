@@ -789,8 +789,8 @@ object OpsCuration extends Suite {
       .crossJoin(broadcast(queryQ))
       // native codegen'd integer dot kernel (VectorDotIntSpec proves
       // bit-parity with the composed zip_with/aggregate form)
-      .withColumn("qdot", graft.expressions.VectorDotInt.vecDotInt(
-        s, col("quantized"), col("qq")))
+      .withColumn("qdot",
+        graft.expressions.VectorDotInt.vecDotInt(col("quantized"), col("qq")))
       .select(col("vec_id"), col("qdot"),
         (col("qdot") / (col("scale") * col("qs"))).as("approx_dot"))
       .orderBy(col("approx_dot").desc, col("vec_id"))

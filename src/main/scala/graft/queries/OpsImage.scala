@@ -96,7 +96,6 @@ object OpsImage extends Suite {
   //    decoder has nowhere to hide. -----------------------------------------
   private val features: Q = (s, dir) => {
     val t = Tables(s, dir)
-    MediaHeaders.register(s)
     val media = t.documents.select(col("doc_id"),
       call_function(MediaHeaders.buildName,
         gradMedia(col("doc_id")): _*).as("payload"))
@@ -134,7 +133,6 @@ object OpsImage extends Suite {
   //    decode/resample/encode and the hash diverges. ------------------------
   private val resize: Q = (s, dir) => {
     val t = Tables(s, dir)
-    MediaHeaders.register(s)
     val media = t.documents.select(col("doc_id"),
       call_function(MediaHeaders.buildName,
         gradMedia(col("doc_id")): _*).as("payload"))
@@ -177,7 +175,6 @@ object OpsImage extends Suite {
   //    constants by the oracle. -------------------------------------------
   private val jpegDecode: Q = (s, dir) => {
     val t = Tables(s, dir)
-    MediaHeaders.register(s)
     val grad = gradMedia(col("doc_id"))
     val media = t.documents.select(col("doc_id"),
       call_function(MediaHeaders.buildName, grad: _*).as("png"),
@@ -213,7 +210,6 @@ object OpsImage extends Suite {
   //    recomputed by the oracle from the group arithmetic. -----------------
   private val imageDedup: Q = (s, dir) => {
     val t = Tables(s, dir)
-    MediaHeaders.register(s)
     val id = col("doc_id")
     val media = noiseMedia(t.documents)
     val dh = Dedup.reuse("img:dhash",
@@ -265,7 +261,6 @@ object OpsImage extends Suite {
   //    order, stride, or header offset and the hash diverges. -------------
   private val audio: Q = (s, dir) => {
     val t = Tables(s, dir)
-    MediaHeaders.register(s)
     val id = col("doc_id")
     val rates = array(lit(8000), lit(11025), lit(16000), lit(22050),
       lit(44100))
@@ -325,7 +320,6 @@ object OpsImage extends Suite {
   //    survivors are exactly doc_id 0..49. ---------------------------------
   private val imageSurvivors: Q = (s, dir) => {
     val t = Tables(s, dir)
-    MediaHeaders.register(s)
     val id = col("doc_id")
     val media = noiseMedia(t.documents)
     val dh = Dedup.reuse("img:dhash",
@@ -348,7 +342,6 @@ object OpsImage extends Suite {
   //    extraction, AND ranking are all under the hash. ---------------------
   private val imageKnn: Q = (s, dir) => {
     val t = Tables(s, dir)
-    MediaHeaders.register(s)
     val media = t.documents.select(col("doc_id"),
       call_function(MediaHeaders.buildName,
         gradMedia(col("doc_id")): _*).as("payload"))
@@ -393,7 +386,6 @@ object OpsImage extends Suite {
   //    recomputed by the oracle from the group arithmetic. ----------------
   private val audioDedup: Q = (s, dir) => {
     val t = Tables(s, dir)
-    MediaHeaders.register(s)
     val id = col("doc_id")
     val media = toneMedia(t.documents)
     val ah = Dedup.reuse("audio:hash",
@@ -452,7 +444,6 @@ object OpsImage extends Suite {
   //    audio links) must survive BOTH implementations to hash-match. -----
   private val multimodalDedup: Q = (s, dir) => {
     val t = Tables(s, dir)
-    MediaHeaders.register(s)
     val dh = Dedup.reuse("img:dhash",
       Multimodal.dHash(noiseMedia(t.documents), "doc_id", "payload"))
     val imgPairs = Dedup.reuse("img:dhash:pairs",
@@ -497,7 +488,6 @@ object OpsImage extends Suite {
   //    misreads dimensions on a valid one, diverges. --------------------
   private val mediaHealth: Q = (s, dir) => {
     val t = Tables(s, dir)
-    MediaHeaders.register(s)
     val id = col("doc_id")
     val rates = array(lit(8000), lit(11025), lit(16000), lit(22050),
       lit(44100))

@@ -1084,7 +1084,7 @@ object OpsLlm extends Suite {
       .join(broadcast(queries.select(col("vec_id").as("query_id"),
         col("embedding").as("__qv"))), "query_id")
       .select(col("query_id"), col("vec_id"),
-        graft.expressions.VectorCosine.vecCosine(s,
+        graft.expressions.VectorCosine.vecCosine(
           col("__cv").cast("array<double>"),
           col("__qv").cast("array<double>")).as("cosine"))
     val pqTop = graft.plans.GroupedTopK(rescored, Seq("query_id"),
@@ -1259,7 +1259,7 @@ object OpsLlm extends Suite {
   private val compressRatio: Q = (s, dir) => {
     val t = Tables(s, dir)
     def ratio(c: org.apache.spark.sql.Column) =
-      graft.expressions.DeflateRatio.deflateRatio(s, c)
+      graft.expressions.DeflateRatio.deflateRatio(c)
     val scored = t.documents.select(col("doc_id"),
       ratio(col("text")).as("r1"),
       ratio(concat(col("text"), col("text"), col("text"), col("text")))
@@ -1489,7 +1489,6 @@ object OpsLlm extends Suite {
   //    byte offset the hash diverges. ---------------------------------------
   private val multimodalHeaders: Q = (s, dir) => {
     val t = Tables(s, dir)
-    graft.expressions.MediaHeaders.register(s)
     val id = col("doc_id")
     val rates = array(lit(8000L), lit(11025L), lit(16000L), lit(22050L),
       lit(44100L))

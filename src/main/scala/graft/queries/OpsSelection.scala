@@ -211,9 +211,9 @@ object OpsSelection extends Suite {
     t.documents.select(
         col("doc_id"),
         length(dec).as("raw_len"),
-        length(UnicodeNormalize.nfc(s, dec)).as("nfc_len"),
-        UnicodeNormalize.nfc(s, dec).as("nfc_text"),
-        UnicodeNormalize.nfkc(s, fw).as("nfkc_text"),
+        length(UnicodeNormalize.nfc(dec)).as("nfc_len"),
+        UnicodeNormalize.nfc(dec).as("nfc_text"),
+        UnicodeNormalize.nfkc(fw).as("nfkc_text"),
         Curation.cleanText(messy).as("clean_text"))
       .orderBy(col("doc_id"))
   }

@@ -37,7 +37,7 @@ class CentroidParitySpec extends SparkSpec {
     val df = mkVecs(200).toDF("id", "v")
     def scores(forceLiteral: Boolean): Map[Long, Seq[Double]] =
       df.select(col("id"),
-          Similarity.centroidScores(df, cents, col("v"), forceLiteral)
+          Similarity.centroidScores(cents, col("v"), forceLiteral)
             .getField("c").as("cs"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     val lit0 = scores(forceLiteral = true)
@@ -64,7 +64,7 @@ class CentroidParitySpec extends SparkSpec {
       }).toDF("id", "v")
     def assign(forceLiteral: Boolean): Map[Long, Int] =
       df.select(col("id"),
-          array_max(Similarity.centroidScores(df, tieCents, col("v"),
+          array_max(Similarity.centroidScores(tieCents, col("v"),
             forceLiteral)).getField("i").as("cl"))
         .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(assign(forceLiteral = true) == assign(forceLiteral = false))
@@ -75,15 +75,15 @@ class CentroidParitySpec extends SparkSpec {
     val cents = mkCentroids()
     val df = Seq((1L, Seq.fill(dim)(0.0))).toDF("id", "v")
     val litScores = df.select(
-        Similarity.centroidScores(df, cents, col("v"), forceLiteral = true)
+        Similarity.centroidScores(cents, col("v"), forceLiteral = true)
           .getField("c")).collect().head.getSeq[Double](0)
     val matScores = df.select(
-        Similarity.centroidScores(df, cents, col("v"), forceLiteral = false)
+        Similarity.centroidScores(cents, col("v"), forceLiteral = false)
           .getField("c")).collect().head.getSeq[Double](0)
     assert(litScores.forall(_.isNaN))
     assert(matScores.forall(_ == 0.0))
     def cl(forceLiteral: Boolean): Int = df.select(
-        array_max(Similarity.centroidScores(df, cents, col("v"),
+        array_max(Similarity.centroidScores(cents, col("v"),
           forceLiteral)).getField("i")).collect().head.getInt(0)
     assert(cl(forceLiteral = true) == cl(forceLiteral = false))
   }

@@ -35,7 +35,6 @@ class DeflateRatioSpec extends SparkSpec {
   }
 
   test("expression under forced codegen: values, null, binary input") {
-    DeflateRatio.register(spark)
     val prev = spark.conf.getOption("spark.sql.codegen.fallback")
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {

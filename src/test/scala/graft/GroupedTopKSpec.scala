@@ -53,7 +53,6 @@ class GroupedTopKSpec extends SparkSpec {
   }
 
   test("optimizer rule rewrites the window top-k idiom into the operator") {
-    graft.plans.RewriteWindowTopK.register(spark)
     val df = data.toDF("g", "id", "v").repartition(6)
     // the idiomatic window formulation, untouched user code
     val w = Window.partitionBy($"g").orderBy($"v".desc, $"id")
@@ -65,7 +64,7 @@ class GroupedTopKSpec extends SparkSpec {
     assert(plan.contains("GroupedTopK"), s"rewrite did not fire:\n$plan")
     assert(!plan.contains("Sort "), s"unexpected sort in:\n$plan")
     // semantics unchanged vs a driver-side reference (windowTopK itself
-    // would be rewritten by the now-registered rule)
+    // would be rewritten by the session's rule)
     val expected = data.groupBy(_._1).values.flatMap { rs =>
       rs.sortBy(r => (-r._3, r._2)).take(4)
     }.toSet

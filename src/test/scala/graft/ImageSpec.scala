@@ -235,11 +235,10 @@ class ImageSpec extends SparkSpec {
     assert(minHd > 3, s"audio group fingerprints too close: $minHd")
   }
 
-  test("every batch-seam kernel returns the same rows with " +
-    "spark.graft.multimodal.batchSize at 1 and 3 as at the default") {
+  test("six decode kernels: one id-aligned row per mixed payload in one " +
+    "partition") {
     import spark.implicits._
-    // images, audio and garbage in ONE partition, so 1- and 3-payload
-    // batches cut the partition at different rows than the default does
+    // images, audio and garbage in ONE partition
     val payloads = Seq(
       MediaHeaders.buildPngGradient(19, 11, 4, 3, 200),
       MediaHeaders.buildPngGradient(31, 17, 5, 2, 90),
@@ -258,22 +257,19 @@ class ImageSpec extends SparkSpec {
       "audioStats" -> (Multimodal.audioStats(_, "id", "bin")),
       "audioHash" -> (Multimodal.audioHash(_, "id", "bin")),
       "dHash" -> (Multimodal.dHash(_, "id", "bin")))
-    // binary cells compare by content, not by array identity
-    def rowsOf(k: DataFrame => DataFrame) =
-      k(df).orderBy("id").collect().toSeq.map(_.toSeq.map {
-        case b: Array[Byte] => b.toSeq
-        case v => v
-      })
-    val key = "spark.graft.multimodal.batchSize"
-    val default = kernels.map { case (n, k) => n -> rowsOf(k) }
-    assert(default.forall(_._2.size == payloads.size))
-    try {
-      for (bs <- Seq("1", "3")) {
-        spark.conf.set(key, bs)
-        for (((n, k), (_, want)) <- kernels.zip(default))
-          assert(rowsOf(k) == want, s"$n at batchSize=$bs")
-      }
-    } finally spark.conf.unset(key)
+    // ids whose first output field decoded, per kernel
+    val decoded = kernels.map { case (n, k) =>
+      val rows = k(df).orderBy("id").collect().toSeq
+      assert(rows.map(_.getLong(0)) == payloads.indices.map(_.toLong),
+        s"$n ids: ${rows.map(_.getLong(0))}")
+      n -> rows.filterNot(_.isNullAt(1)).map(_.getLong(0)).toSet
+    }.toMap
+    // each payload's fields sit on its own id: images decode only as
+    // images, audio only as audio, garbage as neither
+    for (n <- Seq("extractFeatures", "imageStats", "resizeImage", "dHash"))
+      assert(decoded(n) == Set(0L, 1L, 2L, 3L), s"$n: ${decoded(n)}")
+    assert(decoded("audioStats") == Set(4L, 5L, 6L))
+    assert(decoded("audioHash").subsetOf(Set(4L, 5L, 6L)))
   }
 
   test("truncated payloads fail BOTH decoders (magic intact, header " +

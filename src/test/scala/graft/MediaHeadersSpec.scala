@@ -138,7 +138,6 @@ class MediaHeadersSpec extends SparkSpec {
   }
 
   test("Spark expressions round-trip under forced codegen") {
-    MediaHeaders.register(spark)
     val prev = spark.conf.getOption("spark.sql.codegen.fallback")
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {

@@ -20,7 +20,7 @@ class MinHashSigSpec extends SparkSpec {
 
   test("bit-identical to k separate min(xxhash64(lit(i), sh)) aggregates") {
     val fused = sh.groupBy($"id")
-      .agg(MinHashSig.minhashSig(spark, $"sh", k).as("mh"))
+      .agg(MinHashSig.minhashSig($"sh", k).as("mh"))
     val composed = sh.groupBy($"id")
       .agg(min(xxhash64(lit(0), $"sh")).as("c_0"),
         (1 until k).map(i => min(xxhash64(lit(i), $"sh")).as(s"c_$i")): _*)
@@ -39,7 +39,7 @@ class MinHashSigSpec extends SparkSpec {
     val mixed = Seq((1, Some(10L)), (1, None), (2, None))
       .toDF("id", "sh")
     val out = mixed.groupBy($"id")
-      .agg(MinHashSig.minhashSig(spark, $"sh", 4).as("mh"))
+      .agg(MinHashSig.minhashSig($"sh", 4).as("mh"))
       .orderBy($"id").collect()
     val sig1 = out(0).getAs[scala.collection.Seq[Long]]("mh")
     assert(sig1 != null && sig1.length == 4)

@@ -13,24 +13,24 @@ class SelectionSpec extends SparkSpec {
 
   test("NFC composes decomposed accents; idempotent on composed input") {
     val df = Seq("cafe\u0301", "caf\u00e9", "A\u0300", "plain").toDF("s")
-    val out = df.select(UnicodeNormalize.nfc(spark, col("s")).as("n"))
+    val out = df.select(UnicodeNormalize.nfc(col("s")).as("n"))
       .as[String].collect()
     assert(out.toSeq == Seq("caf\u00e9", "caf\u00e9", "\u00c0", "plain"))
   }
 
   test("NFKC folds fullwidth, double-struck, and ligature forms") {
     val df = Seq("\uFF21\uFF01", "\u2102", "\uFB00", "\uFF15").toDF("s")
-    val out = df.select(UnicodeNormalize.nfkc(spark, col("s")).as("n"))
+    val out = df.select(UnicodeNormalize.nfkc(col("s")).as("n"))
       .as[String].collect()
     assert(out.toSeq == Seq("A!", "C", "ff", "5"))
   }
 
   test("UnicodeNormalize propagates null and rejects non-string input") {
     val out = Seq[(Integer, String)]((1, null)).toDF("i", "s")
-      .select(UnicodeNormalize.nfc(spark, col("s"))).collect()
+      .select(UnicodeNormalize.nfc(col("s"))).collect()
     assert(out.head.isNullAt(0))
     intercept[Exception] {
-      Seq(1).toDF("i").select(UnicodeNormalize.nfc(spark, col("i"))).collect()
+      Seq(1).toDF("i").select(UnicodeNormalize.nfc(col("i"))).collect()
     }
   }
 

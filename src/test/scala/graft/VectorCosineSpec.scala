@@ -18,7 +18,7 @@ class VectorCosineSpec extends SparkSpec {
 
   test("known values: identical→1, orthogonal→0, zero-norm→NaN") {
     val out = df.select(
-      VectorCosine.vecCosine(spark, $"a", $"b").as("c")).collect()
+      VectorCosine.vecCosine($"a", $"b").as("c")).collect()
     assert(math.abs(out(0).getDouble(0) - 1.0) < 1e-15)
     assert(out(1).getDouble(0) == 0.0)
     assert(out(3).getDouble(0).isNaN)
@@ -29,7 +29,7 @@ class VectorCosineSpec extends SparkSpec {
     // throw DIVIDE_BY_ZERO, while the native kernel yields NaN (Java
     // semantics) — the kernel is the more forgiving of the two.
     val both = df.filter(aggregate($"a", lit(0.0), _ + abs(_)) > 0).select(
-      VectorCosine.vecCosine(spark, $"a", $"b").as("fast"),
+      VectorCosine.vecCosine($"a", $"b").as("fast"),
       Similarity.cosine($"a".cast("array<double>"),
         $"b".cast("array<double>")).as("composed")).collect()
     both.foreach { r =>
@@ -41,18 +41,18 @@ class VectorCosineSpec extends SparkSpec {
 
   test("double-array inputs and mixed float/double work") {
     val d = Seq((Seq(1.0, 2.0), Seq(2.0, 4.0))).toDF("a", "b")
-    val c = d.select(VectorCosine.vecCosine(spark, $"a", $"b")).collect()
+    val c = d.select(VectorCosine.vecCosine($"a", $"b")).collect()
       .head.getDouble(0)
     assert(math.abs(c - 1.0) < 1e-15)
     val mixed = Seq((Seq(1.0f, 2.0f), Seq(2.0, 4.0))).toDF("a", "b")
-    assert(math.abs(mixed.select(VectorCosine.vecCosine(spark, $"a", $"b"))
+    assert(math.abs(mixed.select(VectorCosine.vecCosine($"a", $"b"))
       .collect().head.getDouble(0) - 1.0) < 1e-15)
   }
 
   test("null inputs propagate null") {
     val d = Seq((Some(Seq(1.0f)), None: Option[Seq[Float]]))
       .toDF("a", "b")
-    assert(d.select(VectorCosine.vecCosine(spark, $"a", $"b")).collect()
+    assert(d.select(VectorCosine.vecCosine($"a", $"b")).collect()
       .head.isNullAt(0))
   }
 
@@ -61,13 +61,13 @@ class VectorCosineSpec extends SparkSpec {
     // kernel must agree (NULL), not silently truncate to min(n)
     val mism = Seq((Seq(1.0f, 2.0f, 3.0f), Seq(1.0f, 2.0f)))
       .toDF("a", "b")
-    assert(mism.select(VectorCosine.vecCosine(spark, $"a", $"b")).collect()
+    assert(mism.select(VectorCosine.vecCosine($"a", $"b")).collect()
       .head.isNullAt(0))
     // a null element propagates through the sum → NULL
     val withNull = Seq((Seq[java.lang.Float](1.0f, null, 3.0f),
         Seq[java.lang.Float](1.0f, 2.0f, 3.0f)))
       .toDF("a", "b")
-    assert(withNull.select(VectorCosine.vecCosine(spark, $"a", $"b"))
+    assert(withNull.select(VectorCosine.vecCosine($"a", $"b"))
       .collect().head.isNullAt(0))
     // and the composed form agrees on both cases
     val composed = mism.select(Similarity.cosine(
@@ -78,7 +78,7 @@ class VectorCosineSpec extends SparkSpec {
   test("rejects non-array inputs at analysis time") {
     val d = Seq((1, 2)).toDF("a", "b")
     val e = intercept[Exception] {
-      d.select(VectorCosine.vecCosine(spark, $"a", $"b")).collect()
+      d.select(VectorCosine.vecCosine($"a", $"b")).collect()
     }
     assert(e.getMessage.contains("vec_cosine") ||
       e.getMessage.toLowerCase.contains("type"))
@@ -91,7 +91,7 @@ class VectorCosineSpec extends SparkSpec {
           i => (i + $"id" % 7).cast("float")).as("a"),
         transform(sequence(lit(0), lit(63)),
           i => (i * 2 + 1).cast("float")).as("b"))
-    val n = wide.select(VectorCosine.vecCosine(spark, $"a", $"b").as("c"))
+    val n = wide.select(VectorCosine.vecCosine($"a", $"b").as("c"))
       .filter($"c" > 0.5).count()
     assert(n > 0)
   }

@@ -22,7 +22,7 @@ class VectorDotIntSpec extends SparkSpec {
     }
     val df = rows.toDF("id", "a", "b")
     val out = df.select(col("id"),
-        VectorDotInt.vecDotInt(spark, col("a"), col("b")).as("native"),
+        VectorDotInt.vecDotInt(col("a"), col("b")).as("native"),
         composed("a", "b").as("ref"))
       .collect()
     out.foreach(r => assert(r.getLong(1) == r.getLong(2), s"id=${r.get(0)}"))
@@ -31,12 +31,12 @@ class VectorDotIntSpec extends SparkSpec {
   test("null contract: length mismatch and null elements yield NULL") {
     val df = Seq((1L, Seq(1, 2, 3), Seq(1, 2))).toDF("id", "a", "b")
     assert(df.select(
-      VectorDotInt.vecDotInt(spark, col("a"), col("b"))).collect()(0)
+      VectorDotInt.vecDotInt(col("a"), col("b"))).collect()(0)
       .isNullAt(0))
     val withNull = spark.sql(
       "SELECT array(1, NULL, 3) AS a, array(1, 2, 3) AS b")
     assert(withNull.select(
-      VectorDotInt.vecDotInt(spark, col("a"), col("b"))).collect()(0)
+      VectorDotInt.vecDotInt(col("a"), col("b"))).collect()(0)
       .isNullAt(0))
   }
 
@@ -44,7 +44,7 @@ class VectorDotIntSpec extends SparkSpec {
     val df = Seq((Seq(2000000000, 2000000000),
                   Seq(2000000000, 2000000000))).toDF("a", "b")
     val got = df.select(
-      VectorDotInt.vecDotInt(spark, col("a"), col("b"))).collect()(0)
+      VectorDotInt.vecDotInt(col("a"), col("b"))).collect()(0)
       .getLong(0)
     assert(got == 2L * 2000000000L * 2000000000L)
   }
@@ -52,7 +52,7 @@ class VectorDotIntSpec extends SparkSpec {
   test("rejects non-int-array inputs with a clear error") {
     val df = Seq((Seq(1.0, 2.0), Seq(1, 2))).toDF("a", "b")
     val e = intercept[Exception] {
-      df.select(VectorDotInt.vecDotInt(spark, col("a"), col("b"))).collect()
+      df.select(VectorDotInt.vecDotInt(col("a"), col("b"))).collect()
     }
     assert(e.getMessage.contains("vec_dot_int") ||
       e.getMessage.contains("DATATYPE_MISMATCH"))

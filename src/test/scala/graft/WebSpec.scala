@@ -62,38 +62,6 @@ class WebSpec extends SparkSpec {
     assert(math.abs(got(4L) - f(0.0)) < 1e-15)
   }
 
-  test("pageRank/hits epsilon early-exit equals the full-iteration " +
-    "result within tolerance, and a huge epsilon stops after round 1") {
-    def ranksOf(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    // converged long before the 40-round cap: early-exit result must sit
-    // at the same fixpoint as the uncapped run
-    val full = ranksOf(Graph.pageRank(tinyNodes, tinyEdges, "id", "src",
-      "dst", iters = 40))
-    val early = ranksOf(Graph.pageRank(tinyNodes, tinyEdges, "id", "src",
-      "dst", iters = 40, epsilon = Some(1e-12)))
-    full.foreach { case (k, v) =>
-      assert(math.abs(v - early(k)) < 1e-9, s"node $k: $v vs ${early(k)}") }
-    // epsilon large enough that round 1's delta already clears it: the
-    // loop must stop there, i.e. equal the explicit iters=1 run exactly
-    val one = ranksOf(Graph.pageRank(tinyNodes, tinyEdges, "id", "src",
-      "dst", iters = 1))
-    val big = ranksOf(Graph.pageRank(tinyNodes, tinyEdges, "id", "src",
-      "dst", iters = 40, epsilon = Some(10.0)))
-    assert(one == big, "huge epsilon must stop after the first round")
-    // hits: same contract on the authority vector
-    val hFull = Graph.hits(tinyNodes, tinyEdges, "id", "src", "dst",
-        iters = 30).collect()
-      .map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
-    val hEarly = Graph.hits(tinyNodes, tinyEdges, "id", "src", "dst",
-        iters = 30, epsilon = Some(1e-12)).collect()
-      .map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
-    hFull.foreach { case (k, (a, h)) =>
-      assert(math.abs(a - hEarly(k)._1) < 1e-9)
-      assert(math.abs(h - hEarly(k)._2) < 1e-9)
-    }
-  }
-
   test("trustRank: teleport to seeds, unreachable non-seeds decay to " +
     "exactly zero") {
     val seeds = Seq(1L).toDF("id")
