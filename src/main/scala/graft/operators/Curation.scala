@@ -208,10 +208,12 @@ object Curation {
     * query-term list and the two scalar aggregates (N, avg doc length)
     * broadcast. Scores are rounded to 6 decimals — ln differs by 1 ulp
     * across libm implementations — and must be ordered by the ROUNDED
-    * value for cross-engine determinism. */
+    * value for cross-engine determinism. Uses the standard k1 = 1.2,
+    * b = 0.75. */
   def bm25Scores(df: DataFrame, docId: String, text: Column,
-                 terms: Seq[String], k1: Double = 1.2,
-                 b: Double = 0.75): DataFrame = {
+                 terms: Seq[String]): DataFrame = {
+    val k1 = 1.2
+    val b = 0.75
     val toks = df.select(col(docId),
         explode_outer(split(trim(lower(text)), "\\s+")).as("term"))
       .filter(col("term").isNotNull)
@@ -279,10 +281,9 @@ object Curation {
     * floor(Σw·2^32) cutoffs — integer thresholds, so any engine computing
     * the same md5 assigns the same label). A pure map-side projection: no
     * shuffle, no RNG, re-runnable on any layout; weights are normalized so
-    * every row is labeled. */
+    * every row is labeled. The label column is `split`. */
   def datasetSplit(df: DataFrame, id: Column,
-                   weights: Seq[(String, Double)], salt: String,
-                   labelCol: String = "split"): DataFrame = {
+                   weights: Seq[(String, Double)], salt: String): DataFrame = {
     require(weights.nonEmpty && weights.forall(_._2 > 0),
       "weights must be non-empty and positive")
     val total = weights.map(_._2).sum
@@ -294,7 +295,7 @@ object Curation {
         when(bucket >= cuts(i) && bucket < cuts(i + 1), lit(name))
           .otherwise(acc)
     }
-    df.withColumn(labelCol, label)
+    df.withColumn("split", label)
   }
 
   /** The integer cutoffs [[datasetSplit]] uses, for oracle SQL to embed. */
@@ -305,6 +306,11 @@ object Curation {
   }
 
   // ---- corpus-adaptive LM scoring ----------------------------------------
+
+  /** The add-α smoothing constant of the corpus language models
+    * ([[unigramLogProb]], [[bigramLogProb]], [[perplexityBuckets]]):
+    * add-one (Laplace) smoothing. */
+  private val LmAlpha = 1.0
 
   /** Per-document average log-probability under an add-α smoothed unigram
     * language model trained on the corpus itself — the classic
@@ -318,9 +324,8 @@ object Curation {
     * per occurrence — and the hot-stopword join skew is capped by each
     * document's distinct vocabulary; the model itself is two count
     * aggregates. Only the 2-row total/vocab aggregate is broadcast. */
-  def unigramLogProb(df: DataFrame, idCol: String, textCol: String,
-                     alpha: Double = 1.0): DataFrame = {
-    require(alpha > 0, s"alpha=$alpha must be positive")
+  def unigramLogProb(df: DataFrame, idCol: String, textCol: String)
+      : DataFrame = {
     val toks = df.select(col(idCol),
         explode_outer(split(lower(trim(col(textCol))), "\\s+")).as("w"))
       .filter(col("w").isNotNull)
@@ -331,7 +336,7 @@ object Curation {
     tf.join(cnt, "w")
       .crossJoin(broadcast(tot))
       .withColumn("lp",
-        log((col("c") + lit(alpha)) / (col("n") + lit(alpha) * col("v"))))
+        log((col("c") + lit(LmAlpha)) / (col("n") + lit(LmAlpha) * col("v"))))
       .groupBy(col(idCol))
       .agg((sum(col("tf") * col("lp")) / sum(col("tf"))).as("avg_logprob"),
         sum(col("tf")).as("n_tok"))
@@ -370,9 +375,8 @@ object Curation {
     (toks, biTf, biCnt)
   }
 
-  def bigramLogProb(df: DataFrame, idCol: String, textCol: String,
-                    alpha: Double = 1.0): DataFrame = {
-    require(alpha > 0, s"alpha=$alpha must be positive")
+  def bigramLogProb(df: DataFrame, idCol: String, textCol: String)
+      : DataFrame = {
     val (toks, biTf, biCnt) = bigramCounts(df, idCol, textCol)
     val uniCnt = toks.groupBy(col("w")).agg(count(lit(1)).as("cu"))
     val vocab = uniCnt.agg(count(lit(1)).as("v"))
@@ -380,7 +384,8 @@ object Curation {
       .join(uniCnt, Seq("w"))
       .crossJoin(broadcast(vocab))
       .withColumn("lp",
-        log((col("cb") + lit(alpha)) / (col("cu") + lit(alpha) * col("v"))))
+        log((col("cb") + lit(LmAlpha)) /
+          (col("cu") + lit(LmAlpha) * col("v"))))
       .groupBy(col(idCol))
       .agg((sum(col("tf") * col("lp")) / sum(col("tf"))).as("avg_logprob"),
         sum(col("tf")).as("n_bigrams"))
@@ -401,9 +406,9 @@ object Curation {
     * the bigram-type table; context/continuation statistics are two more
     * vocabulary-scale aggregations of it; the single corpus-scale join is
     * tf-aggregated per doc first (never per occurrence). */
-  def bigramKneserNey(df: DataFrame, idCol: String, textCol: String,
-                      d: Double = 0.75): DataFrame = {
-    require(d > 0 && d < 1, s"discount d=$d must be in (0,1)")
+  def bigramKneserNey(df: DataFrame, idCol: String, textCol: String)
+      : DataFrame = {
+    val d = 0.75
     val (_, biTf, biCnt) = bigramCounts(df, idCol, textCol)
     val ctx = biCnt.groupBy(col("w"))
       .agg(sum(col("cb")).as("cw"), count(lit(1)).as("nf"))
@@ -514,7 +519,7 @@ object Curation {
   /** Robust per-group outlier detection on the median/MAD scale (the
     * length/quality trimming pass a curation pipeline runs before
     * training): med = exact median of `valueCol` within each group,
-    * mad = median absolute deviation, outlier ⇔ |v − med| > k·mad.
+    * mad = median absolute deviation, outlier ⇔ |v − med| > 2·mad.
     * Median/MAD instead of mean/σ because corpus length distributions are
     * heavy-tailed — a single 10 MB document would drag a z-score
     * threshold past every real outlier.
@@ -522,10 +527,9 @@ object Curation {
     * Two grouped exact percentiles + two broadcastable per-group joins;
     * the deviation relation is computed once under the scoped cache. With
     * integer-valued inputs every med/mad is x.0 or x.5 — binary-exact —
-    * so the k·mad comparison is engine-portable without rounding. */
-  def robustOutliers(df: DataFrame, groupCol: String, valueCol: String,
-                     k: Double = 2.0): DataFrame = {
-    require(k > 0, s"k=$k must be positive")
+    * so the 2·mad comparison is engine-portable without rounding. */
+  def robustOutliers(df: DataFrame, groupCol: String, valueCol: String)
+      : DataFrame = {
     val med = df.groupBy(col(groupCol))
       .agg(expr(s"percentile($valueCol, 0.5)").as("__med"))
     val dev = Dedup.reuse(s"outlier:dev:$groupCol:$valueCol",
@@ -535,7 +539,7 @@ object Curation {
     val mad = dev.groupBy(col(groupCol))
       .agg(expr("percentile(__dev, 0.5)").as("__mad"))
     dev.join(mad, groupCol)
-      .withColumn("is_outlier", col("__dev") > lit(k) * col("__mad"))
+      .withColumn("is_outlier", col("__dev") > lit(2.0) * col("__mad"))
       .withColumnRenamed("__med", "med")
       .withColumnRenamed("__mad", "mad")
       .drop("__dev")
@@ -669,7 +673,7 @@ object Curation {
     * reportable, so corpus dashboards can attribute removal volume to
     * specific rules.
     *
-    * Rules: word count in [minWords, maxWords]; mean word length in
+    * Rules: word count in [10, 100000]; mean word length in
     * [3, 12] chars; ≥ 80% of words contain an alphabetic character;
     * symbol-to-word ratio ('#' or '…'/'...') ≤ 0.1; at least 2 distinct
     * English stopword hits (the duplicated-stopword guard against
@@ -684,8 +688,7 @@ object Curation {
     * super-linear 10× probe curve, 12.7×; the kernel is fuzz-proven
     * value-identical in GopherSignalsSpec.) All ratios are exact
     * integer-to-double divisions — bit-reproducible across engines. */
-  def gopherFilters(df: DataFrame, docId: Column, text: Column,
-                    minWords: Int = 10, maxWords: Int = 100000): DataFrame = {
+  def gopherFilters(df: DataFrame, docId: Column, text: Column): DataFrame = {
     val nWords = greatest(col("n_words"), lit(1)).cast("double")
     val flag = (c: Column) => when(c, 1).otherwise(0)
     df.select(docId.as("doc_id"), text.as("__t"))
@@ -699,7 +702,7 @@ object Curation {
         col("__sig.n_symbols").cast("double") / nWords)
       .withColumn("n_stop", col("__sig.n_stop"))
       .withColumn("g_words",
-        flag(col("n_words").between(minWords, maxWords)))
+        flag(col("n_words").between(10, 100000)))
       .withColumn("g_mean_len",
         flag(col("mean_word_len").between(3.0, 12.0)))
       .withColumn("g_alpha", flag(col("alpha_frac") >= 0.8))
@@ -903,9 +906,8 @@ object Curation {
     * an in-query raise_error guard on max(id) enforces that bound rather
     * than letting the packing go silently wrong past it. */
   def perplexityBuckets(df: DataFrame, idCol: String, textCol: String,
-                        trainFilter: Column, alpha: Double = 1.0,
-                        buckets: Int = 3): DataFrame = {
-    require(alpha > 0 && buckets > 1, "alpha > 0 and buckets > 1 required")
+                        trainFilter: Column, buckets: Int = 3): DataFrame = {
+    require(buckets > 1, "buckets > 1 required")
     // ONE tokenization pass: the train-side counts derive from the same
     // (doc, word) term-frequency table via the per-doc train flag — the
     // corpus text is exploded and shuffled once, not once per model side
@@ -926,8 +928,8 @@ object Curation {
       tf.join(cnt, Seq("w"), "left")
         .crossJoin(broadcast(tot))
         .withColumn("lp", log(
-          (coalesce(col("c"), lit(0L)) + lit(alpha)) /
-            (col("n") + lit(alpha) * col("v"))))
+          (coalesce(col("c"), lit(0L)) + lit(LmAlpha)) /
+            (col("n") + lit(LmAlpha) * col("v"))))
         .groupBy(col(idCol))
         .agg(round(sum(col("tf") * col("lp")) / sum(col("tf")), 6)
           .as("fluency")))

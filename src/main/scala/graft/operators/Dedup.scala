@@ -19,6 +19,16 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
+  /** Word-n-gram size of every shingle operator: the default `n` of those
+    * that take one, the fixed size of those that do not. */
+  private val ShingleN = 3
+
+  /** Doc-frequency cap of the posting-list pair operators: shingles and
+    * terms shared by more than 500 documents are dropped before pairing. */
+  private val DocFreqCap: Option[Int] = Some(500)
+
+  /** Cosine threshold of the TF-IDF pair operators. */
+  private val TfidfThreshold = 0.5
 
   /** Scoped persist: each operator keys its reused intermediate; a repeated
     * call (new corpus, bench re-run) releases the previous call's blocks
@@ -216,15 +226,15 @@ object Dedup {
   }
 
   /** Near-dup candidate pairs by shared winnowing fingerprints — the MOSS
-    * use of [[winnowFingerprints]]: docs sharing at least `minShared`
+    * use of [[winnowFingerprints]]: docs sharing at least 2
     * selected fingerprints (each shared fingerprint witnesses a shared
     * k-gram; winnowing guarantees coverage of shared runs ≥ w+k-1 tokens).
     * `maxDocFreq` drops boilerplate fingerprints shared by more than that
     * many docs before pairing (same quadratic-blowup control as
     * [[ngramJaccardPairs]]; deterministic, so an oracle can replicate it). */
   def winnowPairs(df: DataFrame, idCol: String, textCol: String,
-                  k: Int = 4, w: Int = 5, minShared: Int = 2,
-                  maxDocFreq: Option[Int] = Some(500)): DataFrame = {
+                  k: Int = 4, w: Int = 5,
+                  maxDocFreq: Option[Int] = DocFreqCap): DataFrame = {
     val fp = persistScoped(s"winnow:$idCol:$textCol:$k:$w",
       winnowFingerprints(df, idCol, textCol, k, w))
     val docFreq = fp.groupBy(col("fp")).agg(count(lit(1)).as("df"))
@@ -238,7 +248,7 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("shared"))
-      .filter(col("shared") >= minShared)
+      .filter(col("shared") >= 2)
   }
 
   // --- span-level duplicate detection (Lee et al., ACL'22 family) ---------
@@ -308,8 +318,8 @@ object Dedup {
     * document id (a handful of span rows per doc) and the re-assembly
     * sorts each document's own tokens — bounded by document length. */
   def removeSpans(df: DataFrame, idCol: String, textCol: String,
-                  L: Int = 20, minOccurrences: Int = 2): DataFrame = {
-    val spans = duplicateSpans(df, idCol, textCol, L, minOccurrences)
+                  L: Int = 20): DataFrame = {
+    val spans = duplicateSpans(df, idCol, textCol, L)
       .select(col(idCol), col("span_start"), col("span_end"))
     val toks = df.select(col(idCol),
         posexplode_outer(split(lower(trim(col(textCol))), "\\s+"))
@@ -441,7 +451,7 @@ object Dedup {
     * Tokens cannot contain whitespace, so hash-tuple identity equals
     * string-shingle identity modulo 64-bit collisions. */
   def shingles(df: DataFrame, idCol: String, textCol: String,
-               n: Int = 3): DataFrame = {
+               n: Int = ShingleN): DataFrame = {
     val t = tokensExpr(textCol)
     val hashArgs = (0 until n).map(j => s"element_at(th, i + $j)")
       .mkString(", ")
@@ -479,8 +489,8 @@ object Dedup {
     * and the shared posting-list cache would hide them from the consuming
     * query) in favor of canonical shareable plans. */
   def shingleCapStats(df: DataFrame, idCol: String, textCol: String,
-                      n: Int = 3, cap: Int = 500): DataFrame =
-    shingles(df, idCol, textCol, n)
+                      cap: Int = 500): DataFrame =
+    shingles(df, idCol, textCol)
       .groupBy(col("sh")).agg(count(lit(1)).as("df"))
       .agg(count(lit(1)).as("distinct_shingles"),
         max(col("df")).as("max_doc_freq"),
@@ -503,14 +513,15 @@ object Dedup {
     * opt into the exact-but-unbounded computation. Size the cap with
     * [[shingleCapStats]], the one-pass truncation diagnostic. */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                        n: Int = 3, threshold: Double = 0.8,
-                        maxDocFreq: Option[Int] = Some(500)): DataFrame = {
+                        threshold: Double = 0.8,
+                        maxDocFreq: Option[Int] = DocFreqCap): DataFrame = {
     // persisted: consumed by the size and posting aggregations; scoped so a
     // repeated call releases the previous call's blocks (see persistScoped)
-    val sh = persistScoped(s"ngram:$idCol:$textCol:$n", shingles(df, idCol, textCol, n))
+    val sh = persistScoped(s"ngram:$idCol:$textCol:$ShingleN",
+      shingles(df, idCol, textCol))
     val sizes = shingleSizes(sh, idCol)
-    jaccardAbove(commonCounts(sh, idCol, textCol, n, maxDocFreq), sizes,
-      idCol, threshold)
+    jaccardAbove(commonCounts(sh, idCol, textCol, ShingleN, maxDocFreq),
+      sizes, idCol, threshold)
   }
 
   /** The exact Jaccard verifier every n-gram pair operator ends in:
@@ -597,16 +608,15 @@ object Dedup {
     * before any posting list materializes), and the direction expansion is
     * a map-side union of two projections of that bounded pair set. */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
-                       n: Int = 3, threshold: Double = 0.8,
-                       maxDocFreq: Option[Int] = Some(500)): DataFrame = {
-    val sh = persistScoped(s"contain:$idCol:$textCol:$n",
-      shingles(df, idCol, textCol, n))
+                       threshold: Double = 0.8): DataFrame = {
+    val sh = persistScoped(s"contain:$idCol:$textCol:$ShingleN",
+      shingles(df, idCol, textCol))
     val sizes = shingleSizes(sh, idCol)
     // persistScoped: the intersection-count aggregation (the dominant
     // posting self-join) feeds BOTH direction projections of the union —
     // unpersisted it executes twice
-    val undirected = persistScoped(s"contain:pairs:$idCol:$textCol:$n",
-      commonCounts(sh, idCol, textCol, n, maxDocFreq))
+    val undirected = persistScoped(s"contain:pairs:$idCol:$textCol:$ShingleN",
+      commonCounts(sh, idCol, textCol, ShingleN, DocFreqCap))
     val directed = undirected
       .unionAll(undirected.select(col("id_b").as("id_a"),
         col("id_a").as("id_b"), col("common")))
@@ -642,11 +652,11 @@ object Dedup {
     * [[ngramJaccardPairs]]); texts re-attach by two id joins, so no text
     * payload rides through the posting-list shuffle. */
   def editDistancePairs(df: DataFrame, idCol: String, textCol: String,
-                        n: Int = 3, maxRel: Double = 0.3, minCommon: Int = 5,
-                        maxDocFreq: Option[Int] = Some(500)): DataFrame = {
+                        n: Int = ShingleN, maxRel: Double = 0.3,
+                        minCommon: Int = 5): DataFrame = {
     val sh = persistScoped(s"edit:$idCol:$textCol:$n",
       shingles(df, idCol, textCol, n))
-    val cands = commonCounts(sh, idCol, textCol, n, maxDocFreq)
+    val cands = commonCounts(sh, idCol, textCol, n, DocFreqCap)
       .filter(col("common") >= minCommon)
       .select(col("id_a"), col("id_b"))
     val bound =
@@ -683,10 +693,10 @@ object Dedup {
     * fixed-size buffers, full map-side combine, no posting lists, no cap
     * needed. The ratio is an exact integer-to-double division, so the
     * scores are bit-reproducible across engines. */
-  def noveltyScores(df: DataFrame, idCol: String, textCol: String,
-                    n: Int = 3): DataFrame = {
-    val sh = persistScoped(s"novel:$idCol:$textCol:$n",
-      shingles(df, idCol, textCol, n))
+  def noveltyScores(df: DataFrame, idCol: String, textCol: String)
+      : DataFrame = {
+    val sh = persistScoped(s"novel:$idCol:$textCol:$ShingleN",
+      shingles(df, idCol, textCol))
     val docFreq = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
     sh.join(docFreq, "sh")
       .groupBy(col(idCol))
@@ -709,8 +719,8 @@ object Dedup {
     * that would make the pair join quadratic. N counts documents with at
     * least one shingle; norms are over each document's kept terms. */
   def tfidfWeights(df: DataFrame, idCol: String, textCol: String,
-                   n: Int = 3,
-                   maxDocFreq: Option[Int] = Some(500)): DataFrame = {
+                   n: Int = ShingleN,
+                   maxDocFreq: Option[Int] = DocFreqCap): DataFrame = {
     val tf = persistScoped(s"tfidf:$idCol:$textCol:$n",
       shingleTf(df, idCol, textCol, n))
     val docFreq = tf.groupBy(col("sh")).agg(count(lit(1)).as("df"))
@@ -789,8 +799,8 @@ object Dedup {
     * is reused by the returned plan, so total work is unchanged; callers
     * composing plans without executing them pay the posting build early. */
   def tfidfCosinePairs(df: DataFrame, idCol: String, textCol: String,
-                       n: Int = 3, threshold: Double = 0.5,
-                       maxDocFreq: Option[Int] = Some(500)): DataFrame = {
+                       n: Int = ShingleN, threshold: Double = TfidfThreshold,
+                       maxDocFreq: Option[Int] = DocFreqCap): DataFrame = {
     // persisted: consumed by both the norm aggregate and the posting-list
     // dot product; scoped lifecycle (released on the next call / releaseCaches)
     val w = persistScoped(s"tfidfW:$idCol:$textCol:$n:$maxDocFreq",
@@ -915,8 +925,9 @@ object Dedup {
     * headline, and this variant is the documented skew-regime path
     * (equality-gated so switching is always safe). */
   def tfidfCosinePairsPrefix(df: DataFrame, idCol: String, textCol: String,
-                             n: Int = 3, threshold: Double = 0.5,
-                             maxDocFreq: Option[Int] = Some(500))
+                             n: Int = ShingleN,
+                             threshold: Double = TfidfThreshold,
+                             maxDocFreq: Option[Int] = DocFreqCap)
       : DataFrame = {
     val (annot, norms) =
       tfidfPrefixParts(df, idCol, textCol, n, threshold, maxDocFreq)
@@ -1005,10 +1016,9 @@ object Dedup {
     * posting tables (linear work, no pair join, driver state = two
     * doubles). 1.0 when the corpus has no kept terms. */
   def tfidfPrefixMassRatio(df: DataFrame, idCol: String, textCol: String,
-                           n: Int = 3, threshold: Double = 0.5,
-                           maxDocFreq: Option[Int] = Some(500)): Double = {
+                           n: Int = ShingleN): Double = {
     val (annot, _) =
-      tfidfPrefixParts(df, idCol, textCol, n, threshold, maxDocFreq)
+      tfidfPrefixParts(df, idCol, textCol, n, TfidfThreshold, DocFreqCap)
     // both pair masses in ONE aggregate: per-term total and
     // prefix-surviving counts, then Σc² / Σcp². Double sums — Σ df² can
     // exceed Long range on an uncapped 100 TB corpus (df up to N ⇒ df² up
@@ -1032,10 +1042,11 @@ object Dedup {
     * full statistic drops and flips the decision; see
     * [[tfidfCosinePairsAuto]]), persist-free single-action plan. */
   def tfidfPrefixMassRatioSampled(df: DataFrame, idCol: String,
-                                  textCol: String, n: Int = 3,
-                                  threshold: Double = 0.5,
-                                  maxDocFreq: Option[Int] = Some(500),
-                                  m: Int = TfidfAutoSampleMod): Double = {
+                                  textCol: String, n: Int = ShingleN,
+                                  threshold: Double = TfidfThreshold,
+                                  maxDocFreq: Option[Int] = DocFreqCap)
+      : Double = {
+    val m = TfidfAutoSampleMod
     val stat = df.filter(pmod(xxhash64(col(idCol)), lit(m.toLong)) === 0)
     val sampleCap = maxDocFreq.map(c => math.max(1, c / m))
     // FUSED chain (r10): the unfused route (tfidfPrefixParts) pays ~11
@@ -1113,7 +1124,7 @@ object Dedup {
     else (if (r.isNullAt(0)) 0.0 else r.getDouble(0)) / total
   }
 
-  /** [[tfidfCosinePairsAuto]]'s default cutoff: the prefix path runs when
+  /** [[tfidfCosinePairsAuto]]'s cutoff: the prefix path runs when
     * it keeps at most this share of the posting pair mass. SkewProbe and
     * SkewProbeSpec check it separates the measured regimes. */
   private[graft] val TfidfAutoMassRatioCutoff = 0.35
@@ -1123,7 +1134,7 @@ object Dedup {
 
   /** Selection rule frozen from the round-8 skew probe (committed
     * artifact BENCH_SKEW_r08.json): run [[tfidfCosinePairsPrefix]] when
-    * the prefix keeps at most `massRatioCutoff` of the posting pair
+    * the prefix keeps at most [[TfidfAutoMassRatioCutoff]] of the posting pair
     * mass, else [[tfidfCosinePairs]]. Measured regimes: the near-uniform
     * bench corpus keeps 0.539 of its pair mass (prefix overhead loses),
     * the Zipf skew corpus keeps 0.003 (prefix wins by the saved candidate
@@ -1164,10 +1175,7 @@ object Dedup {
     * statistic); the sampled pre-flight here stays uncached so the two
     * eager steps never fight over scoped caches. */
   def tfidfCosinePairsAuto(df: DataFrame, idCol: String, textCol: String,
-                           n: Int = 3, threshold: Double = 0.5,
-                           maxDocFreq: Option[Int] = Some(500),
-                           massRatioCutoff: Double = TfidfAutoMassRatioCutoff)
-      : DataFrame =
+                           n: Int = ShingleN): DataFrame =
     // sampled statistic with the cap SCALED to the sample: the cap is
     // defined against full-corpus doc counts, and a term with full df D
     // shows sampled df ≈ D/m — an unscaled cap keeps exactly the hot
@@ -1175,17 +1183,17 @@ object Dedup {
     // the prunable tail, dragging the sampled ratio across the cutoff
     // (observed on the bench corpus: unscaled-cap sample read below the
     // cutoff vs the exact 0.539 and mis-selected the prefix path)
-    if (tfidfPrefixMassRatioSampled(df, idCol, textCol, n, threshold,
-        maxDocFreq) <= massRatioCutoff)
-      tfidfCosinePairsPrefix(df, idCol, textCol, n, threshold, maxDocFreq)
-    else tfidfCosinePairs(df, idCol, textCol, n, threshold, maxDocFreq)
+    if (tfidfPrefixMassRatioSampled(df, idCol, textCol, n) <=
+        TfidfAutoMassRatioCutoff)
+      tfidfCosinePairsPrefix(df, idCol, textCol, n)
+    else tfidfCosinePairs(df, idCol, textCol, n)
 
   /** [[shingles]] with term frequencies: one row per (id, shingleHash, tf)
     * where tf counts the shingle's occurrences within the document (the
     * distinct-set form drops multiplicity, which TF-IDF needs). Same
     * allocation-free hash pipeline and explode_outer guard. */
   def shingleTf(df: DataFrame, idCol: String, textCol: String,
-                n: Int = 3): DataFrame = {
+                n: Int = ShingleN): DataFrame = {
     val t = tokensExpr(textCol)
     val hashArgs = (0 until n).map(j => s"element_at(th, i + $j)")
       .mkString(", ")
@@ -1233,7 +1241,8 @@ object Dedup {
     * both exact AND cheap; below that prefer [[ngramJaccardPairs]] with a
     * doc-frequency cap or [[minhashDedupPairs]]. */
   def prefixJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                         n: Int = 3, threshold: Double = 0.8): DataFrame = {
+                         threshold: Double = 0.8): DataFrame = {
+    val n = ShingleN
     require(threshold > 0 && threshold <= 1,
       s"threshold=$threshold must be in (0, 1]")
     import org.apache.spark.sql.expressions.Window
@@ -1369,15 +1378,15 @@ object Dedup {
     * corpus the linear signature work makes minhash run close to (not
     * below) the exact postings pass, which is expected: exact n-gram
     * Jaccard's own quadratic term only overtakes minhash's linear overhead
-    * as the corpus — and its co-shingle pair volume — grows. */
+    * as the corpus — and its co-shingle pair volume — grows. Signatures
+    * are k = 64 min-wise hashes in 16 bands. */
   def minhashDedupPairs(df: DataFrame, idCol: String, textCol: String,
-                        n: Int = 3, k: Int = 64, bands: Int = 16,
                         threshold: Double = 0.8): DataFrame = {
     // one shingle pass feeds signatures, sizes, and candidate verification
-    val sh = persistScoped(s"minhash:$idCol:$textCol:$n",
-      shingles(df, idCol, textCol, n))
-    val sig = signaturesFromShingles(sh, idCol, k)
-    val cands = lshCandidates(sig, idCol, k, bands)
+    val sh = persistScoped(s"minhash:$idCol:$textCol:$ShingleN",
+      shingles(df, idCol, textCol))
+    val sig = signaturesFromShingles(sh, idCol, 64)
+    val cands = lshCandidates(sig, idCol, 64, 16)
     val sizes = shingleSizes(sh, idCol)
     jaccardAbove(sharedShingles(cands, sh, idCol), sizes, idCol, threshold)
   }
@@ -1392,10 +1401,11 @@ object Dedup {
     * (plain neighbor-min alone needs diameter iterations — a silent
     * wrong-answer trap on long chains under any iteration cap). Each
     * iteration is two joins + a min-aggregate; convergence is verified
-    * with a cheap count and failure to converge within `maxIter` raises
-    * rather than returning wrong labels. */
-  def clusterLabels(pairs: DataFrame, maxIter: Int = 15,
+    * with a cheap count and failure to converge within 15 iterations
+    * raises rather than returning wrong labels. */
+  def clusterLabels(pairs: DataFrame,
                     maxDriverEdges: Long = 2000000L): DataFrame = {
+    val maxIter = 15
     // undirected edge list, both directions — checkpointed ONCE: every
     // iteration joins against it, and without truncation each round would
     // re-evaluate the full upstream pair-generation plan (shingling/LSH/
@@ -1513,7 +1523,7 @@ object Dedup {
     }
     require(converged,
       s"clusterLabels did not converge within $maxIter iterations — " +
-        "raise maxIter (diameter of the pair graph exceeds 2^maxIter)")
+        s"the diameter of the pair graph exceeds 2^$maxIter")
     labels
   }
 
@@ -1579,7 +1589,7 @@ object Dedup {
     agg.select(col(idCol), bits.reduce(_.bitwiseOR(_)).as("simhash"))
   }
 
-  /** Near-dup pairs by SimHash Hamming distance ≤ maxHamming, found without
+  /** Near-dup pairs by SimHash Hamming distance ≤ 3, found without
     * a quadratic pass: split the 64 bits into `blocks` 16-bit blocks — any
     * pair within Hamming ≤ blocks-1 shares at least one exact block
     * (pigeonhole) — join per block, then filter on true bit_count.
@@ -1590,11 +1600,8 @@ object Dedup {
     * a `distinct()` — a full extra shuffle of the candidate set — each pair
     * is kept only at its SMALLEST matching block (all lower blocks must
     * differ). Every candidate then appears exactly once, by construction. */
-  def simhashPairs(sim: DataFrame, idCol: String,
-                   maxHamming: Int = 3): DataFrame = {
-    val blocks = 4 // 4 x 16-bit blocks covers maxHamming <= 3
-    require(maxHamming < blocks,
-      s"maxHamming=$maxHamming needs more than $blocks blocks")
+  def simhashPairs(sim: DataFrame, idCol: String): DataFrame = {
+    val blocks = 4 // 4 x 16-bit blocks cover Hamming distance <= 3
     val blockCols = (0 until blocks).map(bix =>
       shiftrightunsigned(col("simhash"), bix * 16).bitwiseAND(0xFFFFL))
     val exploded = sim.select(col(idCol), col("simhash"),
@@ -1613,6 +1620,6 @@ object Dedup {
       .filter(col("id_a") < col("id_b") && firstMatch)
       .select(col("id_a"), col("id_b"),
         bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= 3)
   }
 }

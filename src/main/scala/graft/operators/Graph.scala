@@ -62,13 +62,13 @@ object Graph {
     *
     *   rank'(v) = (1−d)·t(v) + d·( Σ_{u→v} rank(u)/outdeg(u) + D·t(v) )
     *
-    * where t is the teleport distribution — uniform 1/N without
-    * `teleport`, uniform over the seed set with it (TrustRank, Gyöngyi et
-    * al. VLDB 2004: trust flows OUT of a vetted seed set, so link-spam
-    * neighborhoods no seed reaches stay near zero — the crawl-level
-    * spam/quality prior) — and D the dangling mass (Σ rank over nodes
-    * with outdeg 0). Both the restart and the dangling redistribution go
-    * to t, so Σ rank stays exactly 1 every round. Returns (`idCol`, rank).
+    * with damping d = 0.85, where t is the teleport distribution —
+    * uniform 1/N without `teleport`, uniform over the seed set with it
+    * (TrustRank, Gyöngyi et al. VLDB 2004: trust flows OUT of a vetted
+    * seed set, so link-spam neighborhoods no seed reaches stay near zero
+    * — the crawl-level spam/quality prior) — and D the dangling mass
+    * (Σ rank over nodes with outdeg 0). Both the restart and the dangling
+    * redistribution go to t, so Σ rank stays exactly 1 every round. Returns (`idCol`, rank).
     *
     * Contract: `nodes` unique on `idCol`; edge endpoints and seeds drawn
     * from `nodes` (both are joined against it — a stray endpoint's
@@ -79,11 +79,10 @@ object Graph {
     * per iteration. The loop runs exactly `iters` rounds. */
   def pageRank(nodes: DataFrame, edges: DataFrame, idCol: String,
                srcCol: String, dstCol: String,
-               iters: Int = 5, damping: Double = 0.85,
+               iters: Int = 5,
                teleport: Option[DataFrame] = None): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    require(damping > 0 && damping < 1,
-      s"damping must be in (0,1), got $damping")
+    val damping = 0.85
     val ids = nodes.select(col(idCol))
     val n = ids.count()
     require(n > 0, "pageRank needs a non-empty node set")

@@ -65,13 +65,12 @@ object Multimodal {
 
   /** Attach a synthetic media payload to any string column: the bytes are
     * the UTF-8 of the text (an opaque stand-in), metadata derived
-    * deterministically. Gives every pipeline a `content binary, meta struct`
-    * pair shaped exactly like a real ingest. */
-  def syntheticMedia(df: DataFrame, textCol: String,
-                     kind: String = "image"): DataFrame =
+    * deterministically, of kind `image`. Gives every pipeline a
+    * `content binary, meta struct` pair shaped exactly like a real ingest. */
+  def syntheticMedia(df: DataFrame, textCol: String): DataFrame =
     df.withColumn("content", col(textCol).cast("binary"))
       .withColumn("meta", struct(
-        lit(kind).as("kind"),
+        lit("image").as("kind"),
         (pmod(xxhash64(col(textCol)), lit(1920L)) + 1).cast("int")
           .as("width"),
         (pmod(xxhash64(col(textCol), lit(1)), lit(1080L)) + 1).cast("int")
@@ -342,12 +341,12 @@ object Multimodal {
       }
     }
 
-  /** STUB frame sampler: every video payload yields `frames` byte slices
+  /** STUB frame sampler: every video payload yields 4 byte slices
     * (deterministic offsets). Real plumbing under test: one-to-many
     * expansion with an index column, partition-preserving. */
-  def sampleFrames(df: DataFrame, idCol: String, binCol: String,
-                   frames: Int = 4): DataFrame = {
-    val frameIdx = sequence(lit(0), lit(frames - 1))
+  def sampleFrames(df: DataFrame, idCol: String, binCol: String)
+      : DataFrame = {
+    val frameIdx = sequence(lit(0), lit(3))
     df.select(col(idCol), col(binCol), explode(frameIdx).as("frame_ix"))
       .withColumn("frame_bytes",
         expr(s"substring($binCol, frame_ix * 8 + 1, 8)"))

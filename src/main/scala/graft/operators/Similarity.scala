@@ -234,6 +234,10 @@ object Similarity {
       assignments.write.partitionBy("cluster").mode("overwrite").parquet(path)
   }
 
+  /** Training-sample bound of [[ivfIndex]] and [[pqIndex]]: at most this
+    * many rows × dim doubles reach the driver. */
+  private[graft] val MaxTrainRows = 25600
+
   /** Build an IVF index with deterministic spherical k-means: centroids
     * initialize from a seeded hash-order sample, Lloyd iterations run
     * driver-locally on that bounded sample, and the full corpus is
@@ -241,30 +245,30 @@ object Similarity {
     * kernels), so the same code runs unchanged at 100 TB. Empty clusters
     * keep their previous centroid. */
   def ivfIndex(corpus: DataFrame, idCol: String, vecCol: String,
-               nlist: Int = 64, iters: Int = 3, seed: Long = 42L,
-               maxTrainRows: Int = 25600): IvfIndex = {
+               nlist: Int = 64, iters: Int = 3,
+               seed: Long = 42L): IvfIndex = {
     val v = col(vecCol).cast("array<double>")
     // Train on a bounded deterministic sample (hash-ordered; the whole
     // corpus when it is smaller), with Lloyd iterations run driver-locally
     // — the standard IVF training recipe (coarse quantizers train on a
     // fixed-size sample regardless of corpus size). At most
-    // maxTrainRows × dim doubles of bounded driver memory; the per-
+    // MaxTrainRows × dim doubles of bounded driver memory; the per-
     // iteration DISTRIBUTED jobs of a naive k-means — each one a fresh
     // whole-stage-codegen compile because the centroid literals change
     // every round — are gone entirely. Assignment of the full corpus stays
     // a distributed one-pass expression.
     val train: Array[Array[Double]] = corpus
       .orderBy(xxhash64(col(idCol), lit(seed)), col(idCol))
-      .limit(maxTrainRows)
+      .limit(MaxTrainRows)
       .select(v)
       .collect()
       .map(_.getSeq[Double](0).toArray)
     require(train.nonEmpty,
       "ivfIndex: corpus is empty — no centroids can be seeded")
     // take(nlist) seeds min(nlist, train rows) centroids: fewer than
-    // requested when the corpus (or maxTrainRows) is smaller than nlist.
+    // requested when the corpus (or MaxTrainRows) is smaller than nlist.
     // Intentional for tiny corpora; callers sizing nlist from N must also
-    // keep nlist <= maxTrainRows or the cell count silently stops
+    // keep nlist <= MaxTrainRows or the cell count silently stops
     // growing with the corpus (see semanticDedupIvf's explicit clamp).
     // argmax-cosine assignment, ties to the higher index (mirroring the
     // distributed struct-max tie-break)
@@ -447,11 +451,10 @@ object Similarity {
     * neighbors from [[knnGraph]] — the standard embedding-space
     * outlier/isolation signal (low density = far from everything =
     * off-distribution sample; high density = redundant cluster core).
-    * Same exact/blocked modes as knnGraph. */
-  def knnDensity(corpus: DataFrame, idCol: String, vecCol: String, k: Int,
-                 nlist: Int = 0, probes: Int = 3, iters: Int = 2,
-                 seed: Long = 42L): DataFrame =
-    knnGraph(corpus, idCol, vecCol, k, nlist, probes, iters, seed)
+    * Exact: scores all pairs (knnGraph's `nlist = 0` mode). */
+  def knnDensity(corpus: DataFrame, idCol: String, vecCol: String, k: Int)
+      : DataFrame =
+    knnGraph(corpus, idCol, vecCol, k)
       .groupBy(col("src").as(idCol))
       .agg(avg(col("cosine")).as("knn_density"),
         count(lit(1)).as("n_neighbors"))
@@ -473,10 +476,9 @@ object Similarity {
     * positive seen). */
   def hardNegatives(corpus: DataFrame, idCol: String, vecCol: String,
                     labelCol: String, k: Int, nlist: Int = 0,
-                    probes: Int = 3, iters: Int = 2,
-                    seed: Long = 42L): DataFrame = {
+                    probes: Int = 3): DataFrame = {
     val labels = corpus.select(col(idCol), col(labelCol))
-    val g = knnGraph(corpus, idCol, vecCol, k, nlist, probes, iters, seed)
+    val g = knnGraph(corpus, idCol, vecCol, k, nlist, probes)
     val same = col("__src_label") === col("__dst_label")
     g.join(labels.select(col(idCol).as("src"),
         col(labelCol).as("__src_label")), Seq("src"))
@@ -591,17 +593,19 @@ object Similarity {
     *
     * `nlist = 0` scores all pairs exactly (the validation/oracle mode,
     * quadratic — small corpora only); `nlist > 0` blocks through an IVF
-    * index with `probes`-nearest multi-probe assignment — the 100 TB path:
-    * per-cluster quadratic only, recall characterized in LlmOpsSpec (0.84+
-    * at probes=3 on this corpus; every emitted pair is exact-rescored, so
-    * false positives are structurally impossible in either mode). */
+    * index (2 Lloyd iterations) with 3-nearest multi-probe assignment —
+    * the 100 TB path: per-cluster quadratic only, recall characterized in
+    * LlmOpsSpec (0.84+ on this corpus; every emitted pair is
+    * exact-rescored, so false positives are structurally impossible in
+    * either mode). */
   def semanticDedup(corpus: DataFrame, idCol: String, vecCol: String,
-                    threshold: Double, nlist: Int = 0, probes: Int = 3,
-                    iters: Int = 2, seed: Long = 42L): DataFrame = {
+                    threshold: Double, nlist: Int = 0,
+                    seed: Long = 42L): DataFrame = {
     val pairs =
       if (nlist <= 0) exactPairs(corpus, idCol, vecCol, threshold)
-      else clusterPairs(ivfIndex(corpus, idCol, vecCol, nlist, iters, seed),
-        idCol, vecCol, threshold, probes)
+      else clusterPairs(
+        ivfIndex(corpus, idCol, vecCol, nlist, iters = 2, seed = seed),
+        idCol, vecCol, threshold, probes = 3)
     Dedup.survivors(corpus, pairs, idCol)
   }
 
@@ -648,18 +652,18 @@ object Similarity {
   }
 
   /** Build a PQ index: codebooks train driver-side on the same bounded
-    * hash-ordered sample contract as [[ivfIndex]] (≤ maxTrainRows × dim
+    * hash-ordered sample contract as [[ivfIndex]] (≤ [[MaxTrainRows]] × dim
     * doubles of driver memory); corpus encoding is one distributed pass
     * through the fused [[graft.expressions.PqEncode]] kernel. `dim` must be
     * divisible by `m`. */
   def pqIndex(corpus: DataFrame, idCol: String, vecCol: String,
-              m: Int = 8, ksub: Int = 16, iters: Int = 5, seed: Long = 42L,
-              maxTrainRows: Int = 25600): PqIndex = {
+              m: Int = 8, ksub: Int = 16, iters: Int = 5,
+              seed: Long = 42L): PqIndex = {
     val spark = corpus.sparkSession
     val vd = col(vecCol).cast("array<double>")
     val train = corpus
       .orderBy(xxhash64(col(idCol), lit(seed)), col(idCol))
-      .limit(maxTrainRows)
+      .limit(MaxTrainRows)
       .select(normalized(vd))
       .collect()
       .map(_.getSeq[Double](0).toArray)

@@ -210,8 +210,7 @@ object OpsCuration extends Suite {
     val t = Tables(s, dir)
     Curation.perplexityBuckets(
         t.documents.select(col("doc_id"), col("text"), col("lang")),
-        "doc_id", "text", trainFilter = col("lang") === "en",
-        alpha = 1.0, buckets = 3)
+        "doc_id", "text", trainFilter = col("lang") === "en", buckets = 3)
       .orderBy(col("doc_id"))
   }
   private val ccnetBucketsSql =
@@ -342,8 +341,7 @@ object OpsCuration extends Suite {
     // the pair set feeds BOTH direction branches of the CC edge list —
     // persist so the verify tail of the prefix join runs once, not twice
     val pairs = Dedup.reuse("v2:pairs",
-      Dedup.prefixJaccardPairs(t.documents, "doc_id", "text",
-        n = 3, threshold = 0.8))
+      Dedup.prefixJaccardPairs(t.documents, "doc_id", "text", threshold = 0.8))
     val surv = Dedup.survivors(
       t.documents.select(col("doc_id"), col("lang"), col("n_chars")),
       pairs, "doc_id")
@@ -416,7 +414,7 @@ object OpsCuration extends Suite {
   //    and double-summation-order divergence absorbed by round(6). -------
   private val lmScore: Q = (s, dir) => {
     val t = Tables(s, dir)
-    Curation.unigramLogProb(t.documents, "doc_id", "text", alpha = 1.0)
+    Curation.unigramLogProb(t.documents, "doc_id", "text")
       .select(col("doc_id"), round(col("avg_logprob"), 6).as("avg_logprob"),
         col("n_tok"))
       .orderBy(col("doc_id"))
@@ -439,7 +437,7 @@ object OpsCuration extends Suite {
   //    catches unnatural word ORDER that unigram scoring cannot. --------
   private val lmBigram: Q = (s, dir) => {
     val t = Tables(s, dir)
-    Curation.bigramLogProb(t.documents, "doc_id", "text", alpha = 1.0)
+    Curation.bigramLogProb(t.documents, "doc_id", "text")
       .select(col("doc_id"), round(col("avg_logprob"), 6).as("avg_logprob"),
         col("n_bigrams"))
       .orderBy(col("doc_id"))

@@ -215,7 +215,7 @@ object OpsImage extends Suite {
     val dh = Dedup.reuse("img:dhash",
       Multimodal.dHash(media, "doc_id", "payload"))
     val emitted = Dedup.reuse("img:dhash:pairs",
-      Dedup.simhashPairs(dh, "doc_id", maxHamming = 3)
+      Dedup.simhashPairs(dh, "doc_id")
         .select(col("id_a"), col("id_b")))
     val a = dh.select(col("doc_id").as("id_a"), col("simhash").as("sh_a"))
     val b = dh.select(col("doc_id").as("id_b"), col("simhash").as("sh_b"))
@@ -325,7 +325,7 @@ object OpsImage extends Suite {
     val dh = Dedup.reuse("img:dhash",
       Multimodal.dHash(media, "doc_id", "payload"))
     val pairs = Dedup.reuse("img:dhash:pairs",
-      Dedup.simhashPairs(dh, "doc_id", maxHamming = 3)
+      Dedup.simhashPairs(dh, "doc_id")
         .select(col("id_a"), col("id_b")))
     Dedup.survivors(t.documents.select(id), pairs, "doc_id")
       .orderBy(id)
@@ -391,7 +391,7 @@ object OpsImage extends Suite {
     val ah = Dedup.reuse("audio:hash",
       Multimodal.audioHash(media, "doc_id", "payload"))
     val emitted = Dedup.reuse("audio:hash:pairs",
-      Dedup.simhashPairs(ah, "doc_id", maxHamming = 3)
+      Dedup.simhashPairs(ah, "doc_id")
         .select(col("id_a"), col("id_b")))
     val a = ah.select(col("doc_id").as("id_a"), col("simhash").as("sh_a"))
     val b = ah.select(col("doc_id").as("id_b"), col("simhash").as("sh_b"))
@@ -447,12 +447,12 @@ object OpsImage extends Suite {
     val dh = Dedup.reuse("img:dhash",
       Multimodal.dHash(noiseMedia(t.documents), "doc_id", "payload"))
     val imgPairs = Dedup.reuse("img:dhash:pairs",
-      Dedup.simhashPairs(dh, "doc_id", maxHamming = 3)
+      Dedup.simhashPairs(dh, "doc_id")
         .select(col("id_a"), col("id_b")))
     val ah = Dedup.reuse("audio:hash",
       Multimodal.audioHash(toneMedia(t.documents), "doc_id", "payload"))
     val audPairs = Dedup.reuse("audio:hash:pairs",
-      Dedup.simhashPairs(ah, "doc_id", maxHamming = 3)
+      Dedup.simhashPairs(ah, "doc_id")
         .select(col("id_a"), col("id_b")))
     Dedup.survivors(t.documents.select(col("doc_id")),
       imgPairs.unionByName(audPairs).distinct(), "doc_id")

@@ -347,8 +347,7 @@ object OpsLlm extends Suite {
   // -- n-gram Jaccard near-dup pairs (exact computation) --------------------
   private val dedupNgram: Q = (s, dir) => {
     val t = Tables(s, dir)
-    Dedup.ngramJaccardPairs(t.documents, "doc_id", "text",
-        n = 3, threshold = 0.5)
+    Dedup.ngramJaccardPairs(t.documents, "doc_id", "text", threshold = 0.5)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
       .orderBy(col("id_a"), col("id_b"))
   }
@@ -376,8 +375,7 @@ object OpsLlm extends Suite {
   //    computation returns the identical pair set. -----------------------
   private val dedupPrefix: Q = (s, dir) => {
     val t = Tables(s, dir)
-    Dedup.prefixJaccardPairs(t.documents, "doc_id", "text",
-        n = 3, threshold = 0.8)
+    Dedup.prefixJaccardPairs(t.documents, "doc_id", "text", threshold = 0.8)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
       .orderBy(col("id_a"), col("id_b"))
   }
@@ -413,7 +411,7 @@ object OpsLlm extends Suite {
   private val winnowPairs: Q = (s, dir) => {
     val t = Tables(s, dir)
     Dedup.winnowPairs(t.documents, "doc_id", "text",
-        k = 4, w = 5, minShared = 2, maxDocFreq = Some(500))
+        k = 4, w = 5, maxDocFreq = Some(500))
       .orderBy(col("id_a"), col("id_b"))
   }
   private val winnowPairsSql =
@@ -483,8 +481,7 @@ object OpsLlm extends Suite {
   //    ordered string_agg. -----------------------------------------------
   private val despanned: Q = (s, dir) => {
     val t = Tables(s, dir)
-    Dedup.removeSpans(t.documents, "doc_id", "text",
-        L = 8, minOccurrences = 2)
+    Dedup.removeSpans(t.documents, "doc_id", "text", L = 8)
       .orderBy(col("doc_id"))
   }
   private val despannedSql =
@@ -525,8 +522,7 @@ object OpsLlm extends Suite {
   //    division keeps the scores engine-portable unrounded. ---------------
   private val dedupContainment: Q = (s, dir) => {
     val t = Tables(s, dir)
-    Dedup.containmentPairs(t.documents, "doc_id", "text",
-        n = 3, threshold = 0.8)
+    Dedup.containmentPairs(t.documents, "doc_id", "text", threshold = 0.8)
       .orderBy(col("id_a"), col("id_b"))
   }
   private val dedupContainmentSql =
@@ -583,7 +579,7 @@ object OpsLlm extends Suite {
   //    nowhere else — a corpus-level diversity / boilerplate signal. -------
   private val novelty: Q = (s, dir) => {
     val t = Tables(s, dir)
-    Dedup.noveltyScores(t.documents, "doc_id", "text", n = 3)
+    Dedup.noveltyScores(t.documents, "doc_id", "text")
       .orderBy(col("doc_id"))
   }
   private val noveltySql =
@@ -653,8 +649,7 @@ object OpsLlm extends Suite {
   //    paths are exact, so the SAME oracle gates whichever it picks. ----
   private val tfidfPairsAuto: Q = (s, dir) => {
     val t = Tables(s, dir)
-    Dedup.tfidfCosinePairsAuto(t.documents, "doc_id", "text",
-        n = 3, threshold = 0.5)
+    Dedup.tfidfCosinePairsAuto(t.documents, "doc_id", "text", n = 3)
       .orderBy(col("id_a"), col("id_b"))
   }
 
@@ -665,8 +660,7 @@ object OpsLlm extends Suite {
   //    SQL at the same threshold. ------------------------------------------
   private val dedupMinhash: Q = (s, dir) => {
     val t = Tables(s, dir)
-    Dedup.minhashDedupPairs(t.documents, "doc_id", "text",
-        n = 3, k = 64, bands = 16, threshold = 0.9)
+    Dedup.minhashDedupPairs(t.documents, "doc_id", "text", threshold = 0.9)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
       .orderBy(col("id_a"), col("id_b"))
   }
@@ -680,7 +674,7 @@ object OpsLlm extends Suite {
   private val dedupSurvivors: Q = (s, dir) => {
     val t = Tables(s, dir)
     val pairs = Dedup.minhashDedupPairs(t.documents, "doc_id", "text",
-      n = 3, k = 64, bands = 16, threshold = 0.9)
+      threshold = 0.9)
     Dedup.survivors(t.documents, pairs, "doc_id")
       .select(col("doc_id"))
       .orderBy(col("doc_id"))
@@ -721,7 +715,7 @@ object OpsLlm extends Suite {
   private val dedupSurvivorsBest: Q = (s, dir) => {
     val t = Tables(s, dir)
     val pairs = Dedup.ngramJaccardPairs(t.documents, "doc_id", "text",
-      n = 3, threshold = 0.9)
+      threshold = 0.9)
     Dedup.survivorsKeepBest(
         t.documents.select(col("doc_id"), col("n_chars")),
         pairs, "doc_id", col("n_chars"))
@@ -764,8 +758,7 @@ object OpsLlm extends Suite {
   private val dedupSimhash: Q = (s, dir) => {
     val t = Tables(s, dir)
     Dedup.simhashPairs(
-        Dedup.simhash(t.documents, "doc_id", "text"), "doc_id",
-        maxHamming = 3)
+        Dedup.simhash(t.documents, "doc_id", "text"), "doc_id")
       .orderBy(col("id_a"), col("id_b"))
   }
 
@@ -783,7 +776,7 @@ object OpsLlm extends Suite {
     val t = Tables(s, dir)
     val sim = Dedup.reuse("simhash:recall",
       Dedup.simhash(t.documents, "doc_id", "text"))
-    val emitted = Dedup.simhashPairs(sim, "doc_id", maxHamming = 3)
+    val emitted = Dedup.simhashPairs(sim, "doc_id")
     val a = sim.select(col("doc_id").as("id_a"), col("simhash").as("sh_a"))
     val b = sim.select(col("doc_id").as("id_b"), col("simhash").as("sh_b"))
     val exact = a.crossJoin(b).filter(col("id_a") < col("id_b"))
@@ -944,8 +937,7 @@ object OpsLlm extends Suite {
   //    the embedding-space outlier signal. ------------------------------
   private val knnDensity: Q = (s, dir) => {
     val t = Tables(s, dir)
-    Similarity.knnDensity(t.embeddings, "vec_id", "embedding", k = 5,
-        nlist = 0)
+    Similarity.knnDensity(t.embeddings, "vec_id", "embedding", k = 5)
       .select(col("vec_id"), round(col("knn_density"), 6).as("knn_density"),
         col("n_neighbors"))
       .orderBy(col("vec_id"))
@@ -983,15 +975,15 @@ object OpsLlm extends Suite {
   private val semanticDedupIvf: Q = (s, dir) => {
     val t = Tables(s, dir)
     val n = t.embeddings.count()
-    // clamp at ivfIndex's default training-sample cap: train.take(nlist)
-    // can seed at most maxTrainRows centroids, so asking for more would
-    // SILENTLY cap the cell count and re-grow cells with N — past
-    // 25600*64 ≈ 1.6M vectors a real deployment raises maxTrainRows and
-    // nlist together (both are parameters); the clamp makes the
-    // degradation explicit here instead of invisible
-    val nlist = math.min(math.max(32, math.ceil(n / 64.0).toInt), 25600)
+    // clamp at ivfIndex's training-sample cap: train.take(nlist) can seed
+    // at most MaxTrainRows centroids, so asking for more would SILENTLY
+    // cap the cell count and re-grow cells with N — past 25600*64 ≈ 1.6M
+    // vectors a real deployment raises MaxTrainRows and nlist together;
+    // the clamp makes the degradation explicit here instead of invisible
+    val nlist = math.min(math.max(32, math.ceil(n / 64.0).toInt),
+      Similarity.MaxTrainRows)
     Similarity.semanticDedup(t.embeddings, "vec_id", "embedding",
-        threshold = 0.45, nlist = nlist, probes = 3)
+        threshold = 0.45, nlist = nlist)
       .select(col("vec_id"))
       .orderBy(col("vec_id"))
   }
@@ -1467,7 +1459,7 @@ object OpsLlm extends Suite {
     val t = Tables(s, dir)
     val media = Multimodal.syntheticMedia(
       t.documents.select(col("doc_id"), col("text")), "text")
-    Multimodal.sampleFrames(media, "doc_id", "content", frames = 4)
+    Multimodal.sampleFrames(media, "doc_id", "content")
       .select(col("doc_id"), col("frame_ix").cast("long").as("frame_ix"),
         hex(col("frame_bytes")).as("frame_hex"))
       .orderBy(col("doc_id"), col("frame_ix"))

@@ -53,8 +53,7 @@ object OpsWeb extends Suite {
     val t = Tables(s, dir)
     val docs = t.documents.select(col("doc_id"))
     val cnt = docs.agg(count(lit(1)).as("__n"))
-    Graph.pageRank(docs, t.edges, "doc_id", "src", "dst",
-        iters = 5, damping = 0.85)
+    Graph.pageRank(docs, t.edges, "doc_id", "src", "dst", iters = 5)
       .crossJoin(broadcast(cnt))
       .select(col("doc_id"),
         round(col("rank") * col("__n"), 6).as("rank_scaled"))
@@ -94,7 +93,7 @@ object OpsWeb extends Suite {
     val cnt = docs.agg(count(lit(1)).as("__n"))
     val seeds = docs.filter(pmod(col("doc_id"), lit(17)) === 0)
     Graph.pageRank(docs, t.edges, "doc_id", "src", "dst",
-        iters = 5, damping = 0.85, teleport = Some(seeds))
+        iters = 5, teleport = Some(seeds))
       .crossJoin(broadcast(cnt))
       .select(col("doc_id"),
         round(col("rank") * col("__n"), 6).as("trust_scaled"))
@@ -637,7 +636,7 @@ object OpsWeb extends Suite {
     val t = Tables(s, dir)
     val d = t.documents.select(col("doc_id"), col("source"),
       size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok"))
-    Curation.robustOutliers(d, "source", "n_tok", k = 2.0)
+    Curation.robustOutliers(d, "source", "n_tok")
       .filter(col("is_outlier"))
       .select(col("source"), col("doc_id"), col("n_tok"),
         col("med"), col("mad"))

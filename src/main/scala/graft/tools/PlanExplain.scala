@@ -3,67 +3,114 @@ package graft.tools
 import graft.SparkEntry
 
 /** Dump the `.explain("formatted")` output (and, after a noop-sink
-  * execution, the AQE-final executed plan) of one gated query, for the
+  * execution, the AQE-final executed plan) of gated queries, for the
   * committed before/after plan evidence under plans/. Args:
-  * <sfDir> <queryName> [outFile]. Same session + cache-reset discipline
-  * as PlanGuardSpec so the dumped plan is the one the bench measures.
-  * The dump is [[normalise]]d, so two runs of one plan print the same
-  * text and a diff between two dumps shows only plan changes. */
+  * <sfDir> <outDir> <queryName>...; writes `<outDir>/<queryName>.txt` per
+  * query, all from one JVM. Same session + cache-reset discipline as
+  * PlanGuardSpec so the dumped plan is the one the bench measures. Each
+  * dump is [[normalise]]d, so two runs of one plan print the same text and
+  * a diff between two dumps shows only plan changes. */
 object PlanExplain {
   def main(args: Array[String]): Unit = {
     val sf = args(0)
-    val name = args(1)
+    val outDir = new java.io.File(args(1))
+    outDir.mkdirs()
     val spark = graft.engine.Context.local().spark
-    graft.engine.QueryProfile.cold(spark)
-    val df = SparkEntry.queries(name)(spark, sf)
-    val sb = new StringBuilder
-    sb.append("==== explain(formatted) " + name + " ====\n")
-    sb.append(df.queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-    // Drive execution through the df's OWN QueryExecution (r11, per
-    // ADVICE): a df.write.save() runs a separate QueryExecution, so
-    // df.queryExecution.executedPlan would never execute and the dump
-    // below would mislabel the initial adaptive plan
-    // (isFinalPlan=false) as AQE-final evidence. Counting the executed
-    // plan's RDD materializes every partition of THIS QueryExecution,
-    // so AdaptiveSparkPlanExec re-optimizes and the toString shows the
-    // real final plan (isFinalPlan=true).
-    df.queryExecution.executedPlan.execute().count()
-    sb.append("\n==== executed plan (AQE final) " + name + " ====\n")
-    sb.append(df.queryExecution.executedPlan.toString)
-    val out = normalise(sb.toString,
-      new java.io.File(sf).getCanonicalPath)
-    if (args.length > 2) {
-      java.nio.file.Files.write(java.nio.file.Paths.get(args(2)),
-        out.getBytes("UTF-8"))
-      println("wrote " + args(2))
-    } else println(out)
+    for (name <- args.drop(2)) {
+      graft.engine.QueryProfile.cold(spark)
+      val df = SparkEntry.queries(name)(spark, sf)
+      val sb = new StringBuilder
+      sb.append("==== explain(formatted) " + name + " ====\n")
+      sb.append(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+      // Drive execution through the df's OWN QueryExecution (r11, per
+      // ADVICE): a df.write.save() runs a separate QueryExecution, so
+      // df.queryExecution.executedPlan would never execute and the dump
+      // below would mislabel the initial adaptive plan
+      // (isFinalPlan=false) as AQE-final evidence. Counting the executed
+      // plan's RDD materializes every partition of THIS QueryExecution,
+      // so AdaptiveSparkPlanExec re-optimizes and the toString shows the
+      // real final plan (isFinalPlan=true).
+      df.queryExecution.executedPlan.execute().count()
+      sb.append("\n==== executed plan (AQE final) " + name + " ====\n")
+      sb.append(df.queryExecution.executedPlan.toString)
+      val out = new java.io.File(outDir, name + ".txt")
+      java.nio.file.Files.write(out.toPath, normalise(sb.toString,
+        new java.io.File(sf).getCanonicalPath).getBytes("UTF-8"))
+      println("wrote " + out)
+    }
     spark.stop()
   }
 
   /** The numbers in a plan dump that change from run to run, each with
     * the text before it: expression ids (`#123`), exchange plan ids, AQE
-    * query-stage numbers (assigned in the order stages finish) and
-    * whole-stage codegen ids (`*(3)` in a tree, `codegen id : 3` in the
-    * formatted listing; one numbering for both). */
+    * query-stage numbers (assigned in the order stages finish), RDD ids
+    * (`MapPartitionsRDD[45]` of a checkpointed scan) and whole-stage
+    * codegen ids (`*(3)` in a tree, `codegen id : 3` in the formatted
+    * listing; one numbering for both). */
   private val runNumbers = Seq(
     "expr" -> "(#)(\\d+)".r,
     "plan" -> "(plan_id=)(\\d+)".r,
     "stage" -> "(QueryStage )(\\d+)".r,
+    "rdd" -> "(RDD\\[)(\\d+)(?=\\])".r,
     "codegen" -> "(\\*\\()(\\d+)(?=\\))".r,
     "codegen" -> "(codegen id : )(\\d+)".r)
 
+  /** Text masked whole: the source line an RDD was created at
+    * (`at localCheckpoint at Graph.scala:140` moves with every edit above
+    * it) and a lambda's class name and identity hash
+    * (`Multimodal$$$Lambda/0x00007f8a78d8bbb0@5984742f`). */
+  private val runText = Seq(
+    "(\\.scala:)\\d+".r -> "$1N",
+    "\\$Lambda[$/\\w]*@[0-9a-f]+".r -> "\\$Lambda")
+
   /** `dump` with each kind of [[runNumbers]] renumbered 1, 2, … in order
-    * of first appearance, and the table directory `sfDir` printed as
-    * `$SF`. Two runs of one plan normalise to the same text. */
+    * of first appearance, [[runText]] masked, the table directory `sfDir`
+    * printed as `$SF` and the working directory (where Tables keeps the
+    * derived `target/graft-edges` table) as `$CWD`. The codegen ids of a
+    * cached plan printed under an `InMemoryRelation` count on their own:
+    * that plan was compiled by another query, and its ids would otherwise
+    * interleave with this query's. Two runs of one plan normalise to the
+    * same text. */
   def normalise(dump: String, sfDir: String): String = {
-    val renumbered = runNumbers.groupMap(_._1)(_._2).foldLeft(dump) {
+    val masked = runText.foldLeft(dump) { case (t, (p, r)) =>
+      p.replaceAllIn(t, r)
+    }
+    val renumbered = runNumbers.groupMap(_._1)(_._2).foldLeft(masked) {
+      case (text, ("codegen", patterns)) =>
+        val (outer, cached) = (new Ids, new Ids)
+        inCachedPlan(text).map { case (line, isCached) =>
+          val ids = if (isCached) cached else outer
+          patterns.foldLeft(line)((l, p) => ids.renumber(p, l))
+        }.mkString("\n")
       case (text, (_, patterns)) =>
-        val ids = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-        patterns.foldLeft(text)((t, p) => p.replaceAllIn(t, m =>
-          scala.util.matching.Regex.quoteReplacement(m.group(1) +
-            ids.getOrElseUpdate(m.group(2), ids.size + 1))))
+        val ids = new Ids
+        patterns.foldLeft(text)((t, p) => ids.renumber(p, t))
     }
     renumbered.replace(sfDir, "$SF")
+      .replace(new java.io.File(".").getCanonicalPath, "$CWD")
+  }
+
+  /** One numbering: each distinct id becomes 1, 2, … by first appearance. */
+  private final class Ids {
+    private val ids = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    def renumber(p: scala.util.matching.Regex, text: String): String =
+      p.replaceAllIn(text, m => scala.util.matching.Regex.quoteReplacement(
+        m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size + 1)))
+  }
+
+  /** Each line of a plan tree, marked when it lies in the subtree under an
+    * `InMemoryRelation` node: the lines after it that are indented deeper. */
+  private def inCachedPlan(text: String): Seq[(String, Boolean)] = {
+    var cachedAt = -1
+    text.split("\n", -1).toSeq.map { line =>
+      val col = line.indexOf("InMemoryRelation")
+      val indent = line.indexWhere(c => c.isLetter || c == '*' || c == '(')
+      if (cachedAt >= 0 && indent <= cachedAt)
+        cachedAt = -1
+      val isCached = cachedAt >= 0
+      if (col >= 0 && cachedAt < 0) cachedAt = col
+      (line, isCached)
+    }
   }
 }

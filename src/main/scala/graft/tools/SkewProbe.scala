@@ -93,14 +93,12 @@ object SkewProbe {
       n = 1, threshold = 0.5)
     def prefS() = Dedup.tfidfCosinePairsPrefix(skew, "doc_id", "text",
       n = 1, threshold = 0.5)
-    def autoS() = Dedup.tfidfCosinePairsAuto(skew, "doc_id", "text",
-      n = 1, threshold = 0.5)
+    def autoS() = Dedup.tfidfCosinePairsAuto(skew, "doc_id", "text", n = 1)
     def plainB() = Dedup.tfidfCosinePairs(bench, "doc_id", "text",
       n = 3, threshold = 0.5)
     def prefB() = Dedup.tfidfCosinePairsPrefix(bench, "doc_id", "text",
       n = 3, threshold = 0.5)
-    def autoB() = Dedup.tfidfCosinePairsAuto(bench, "doc_id", "text",
-      n = 3, threshold = 0.5)
+    def autoB() = Dedup.tfidfCosinePairsAuto(bench, "doc_id", "text", n = 3)
 
     def time1(mk: () => DataFrame): Double = QueryProfile.pass(spark)(mk())
     def min3(mk: () => DataFrame): Double =
@@ -112,10 +110,8 @@ object SkewProbe {
     val (nPlainS, hPlainS) = pairHash(plainS())
     val (nPrefS, hPrefS) = pairHash(prefS())
     val equalS = nPlainS == nPrefS && hPlainS == hPrefS
-    val ratioSkew = Dedup.tfidfPrefixMassRatio(skew, "doc_id", "text",
-      n = 1, threshold = 0.5)
-    val ratioBench = Dedup.tfidfPrefixMassRatio(bench, "doc_id", "text",
-      n = 3, threshold = 0.5)
+    val ratioSkew = Dedup.tfidfPrefixMassRatio(skew, "doc_id", "text", n = 1)
+    val ratioBench = Dedup.tfidfPrefixMassRatio(bench, "doc_id", "text", n = 3)
 
     val tPlainS = min3(plainS)
     val tPrefS = min3(prefS)

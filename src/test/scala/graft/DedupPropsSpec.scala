@@ -33,7 +33,7 @@ class DedupPropsSpec extends SparkSpec {
       val df = docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text")
       for (t <- Seq(0.4, 0.7, 0.9)) {
-        val got = Dedup.prefixJaccardPairs(df, "doc_id", "text", 3, t)
+        val got = Dedup.prefixJaccardPairs(df, "doc_id", "text", t)
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         val sets = docs.map(shingleSet(_, 3))
         val want = (for {
@@ -129,7 +129,7 @@ class DedupPropsSpec extends SparkSpec {
       val df = docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text")
       for (t <- Seq(0.5, 0.9)) {
-        val got = Dedup.containmentPairs(df, "doc_id", "text", 3, t)
+        val got = Dedup.containmentPairs(df, "doc_id", "text", t)
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         val sets = docs.map(shingleSet(_, 3))
         val want = (for {
@@ -148,7 +148,7 @@ class DedupPropsSpec extends SparkSpec {
     cases(genCorpus, 5).foreach { docs =>
       val df = docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text")
-      val got = Dedup.noveltyScores(df, "doc_id", "text", 3)
+      val got = Dedup.noveltyScores(df, "doc_id", "text")
         .collect()
         .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
       val sets = docs.map(shingleSet(_, 3))

@@ -129,7 +129,7 @@ class ImageSpec extends SparkSpec {
       (i.toLong, MediaHeaders.buildPngNoise(20, 16, seed, (i % 3) * 4))
     }
     val dh = Multimodal.dHash(rows.toDF("id", "bin"), "id", "bin")
-    val pairs = Dedup.simhashPairs(dh, "id", maxHamming = 3)
+    val pairs = Dedup.simhashPairs(dh, "id")
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val planted = (for {

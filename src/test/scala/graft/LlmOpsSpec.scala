@@ -30,7 +30,7 @@ class LlmOpsSpec extends SparkSpec {
 
   test("ngram jaccard finds exact and near dup pairs, not unrelated") {
     val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        n = 3, threshold = 0.5)
+        threshold = 0.5)
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((0L, 1L)))
@@ -41,18 +41,18 @@ class LlmOpsSpec extends SparkSpec {
   test("ngram doc-frequency cap drops hot-shingle pairs explicitly") {
     // every shingle in docs 0/1 is shared by >= 2 docs; cap=1 drops them all
     val capped = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        n = 3, threshold = 0.5, maxDocFreq = Some(1))
+        threshold = 0.5, maxDocFreq = Some(1))
       .collect()
     assert(capped.isEmpty)
     // an uncapped (None) run restores the exact computation
     val uncapped = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        n = 3, threshold = 0.5, maxDocFreq = None)
+        threshold = 0.5, maxDocFreq = None)
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(uncapped.contains((0L, 1L)))
     // the default cap (500) leaves natural-text results identical to exact
     val default = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        n = 3, threshold = 0.5)
+        threshold = 0.5)
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(default == uncapped)
@@ -63,11 +63,11 @@ class LlmOpsSpec extends SparkSpec {
     // exact posting-list computation, at several thresholds
     for (t <- Seq(0.3, 0.5, 0.8)) {
       val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-          n = 3, threshold = t, maxDocFreq = None)
+          threshold = t, maxDocFreq = None)
         .collect().map(r => (r.getLong(0), r.getLong(1),
           math.rint(r.getDouble(2) * 1e9))).toSet
       val pref = Dedup.prefixJaccardPairs(docs, "doc_id", "text",
-          n = 3, threshold = t)
+          threshold = t)
         .collect().map(r => (r.getLong(0), r.getLong(1),
           math.rint(r.getDouble(2) * 1e9))).toSet
       assert(pref == exact, s"threshold $t")
@@ -76,7 +76,7 @@ class LlmOpsSpec extends SparkSpec {
 
   test("prefix-filtered jaccard at threshold 1.0 keeps exact duplicates") {
     val pairs = Dedup.prefixJaccardPairs(docs, "doc_id", "text",
-        n = 3, threshold = 1.0)
+        threshold = 1.0)
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((0L, 1L)))
@@ -107,13 +107,13 @@ class LlmOpsSpec extends SparkSpec {
 
   test("winnowPairs finds near-dup docs and caps boilerplate fingerprints") {
     val pairs = Dedup.winnowPairs(docs, "doc_id", "text",
-        k = 3, w = 3, minShared = 2)
+        k = 3, w = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((0L, 1L)))        // exact dups share all fps
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L)) // unrelated
     // cap=1 treats every shared fingerprint as boilerplate -> no pairs
     val capped = Dedup.winnowPairs(docs, "doc_id", "text",
-        k = 3, w = 3, minShared = 2, maxDocFreq = Some(1)).collect()
+        k = 3, w = 3, maxDocFreq = Some(1)).collect()
     assert(capped.isEmpty)
   }
 
@@ -151,7 +151,7 @@ class LlmOpsSpec extends SparkSpec {
       (41L, "a perfectly unique sentence with no repeats anywhere at all")
     ).toDF("doc_id", "text")
     val out = Dedup.removeSpans(d, "doc_id", "text",
-        L = 10, minOccurrences = 2)
+        L = 10)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(out(40L) == "filler")
     assert(out(41L) ==
@@ -163,26 +163,26 @@ class LlmOpsSpec extends SparkSpec {
     // the visibility path for sizing a cap (inline observe() metrics were
     // dropped: AQE detaches CollectMetrics, and the shared posting-list
     // cache would hide them from the consuming query)
-    val stats = Dedup.shingleCapStats(docs, "doc_id", "text", n = 3, cap = 1)
+    val stats = Dedup.shingleCapStats(docs, "doc_id", "text", cap = 1)
       .collect().head
     assert(stats.getAs[Long]("distinct_shingles") > 0)
     assert(stats.getAs[Long]("max_doc_freq") >= 2) // docs 0/1 are identical
     assert(stats.getAs[Long]("shingles_over_cap") > 0)
     // and the cap=1 run really does lose the pairs the diagnostic predicts
     val capped = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-      n = 3, threshold = 0.5, maxDocFreq = Some(1)).count()
+      threshold = 0.5, maxDocFreq = Some(1)).count()
     val uncapped = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-      n = 3, threshold = 0.5, maxDocFreq = None).count()
+      threshold = 0.5, maxDocFreq = None).count()
     assert(capped < uncapped)
   }
 
   test("minhash LSH recalls the exact jaccard pairs on planted dups") {
     val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        n = 3, threshold = 0.8)
+        threshold = 0.8)
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val mh = Dedup.minhashDedupPairs(docs, "doc_id", "text",
-        n = 3, k = 64, bands = 16, threshold = 0.8)
+        threshold = 0.8)
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact.nonEmpty)
@@ -191,7 +191,7 @@ class LlmOpsSpec extends SparkSpec {
 
   test("survivors: connected components keep exactly one doc per cluster") {
     val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-      n = 3, threshold = 0.5)
+      threshold = 0.5)
     // driver-side union-find reference over the same (small) pair set
     val edges = pairs.select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
@@ -254,7 +254,7 @@ class LlmOpsSpec extends SparkSpec {
     assert(m(0L) == m(1L))
     assert(java.lang.Long.bitCount(m(0L) ^ m(2L)) <= 8) // near dup: close
     assert(java.lang.Long.bitCount(m(0L) ^ m(3L)) > 10) // unrelated: far
-    val pairs = Dedup.simhashPairs(sim, "doc_id", maxHamming = 3)
+    val pairs = Dedup.simhashPairs(sim, "doc_id")
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((0L, 1L)))
@@ -374,8 +374,7 @@ class LlmOpsSpec extends SparkSpec {
     assert(byId(0L) == byId(1L))
     assert(byId(0L) != byId(3L))
 
-    val frames = Multimodal.sampleFrames(media, "doc_id", "content",
-      frames = 4)
+    val frames = Multimodal.sampleFrames(media, "doc_id", "content")
     assert(frames.count() == docs.count() * 4)
     assert(frames.columns.toSet ==
       Set("doc_id", "frame_ix", "frame_bytes"))
@@ -476,7 +475,7 @@ class LlmOpsSpec extends SparkSpec {
     assert(exactKept == bases.map(_._1).toSet)
     // IVF-blocked mode (the scale path) agrees on this corpus
     val blockedKept = Similarity.semanticDedup(emb, "vec_id", "embedding",
-        threshold = 0.9, nlist = 6, probes = 3, seed = 9L)
+        threshold = 0.9, nlist = 6, seed = 9L)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(blockedKept == exactKept)
   }
@@ -484,7 +483,7 @@ class LlmOpsSpec extends SparkSpec {
   test("survivorsKeepBest keeps the argmax per cluster, singletons pass") {
     // docs 0,1,2 cluster (exact + near dup); 3..6 singleton-ish
     val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-      n = 3, threshold = 0.5)
+      threshold = 0.5)
     val withLen = docs.withColumn("len", length(col("text")))
     val kept = Dedup.survivorsKeepBest(withLen, pairs, "doc_id", col("len"))
       .select("doc_id").collect().map(_.getLong(0)).toSet

@@ -52,8 +52,8 @@ class MinHashSigSpec extends SparkSpec {
       (1L, base), (2L, base + "extra token"), (3L, "совершенно другой текст " * 20)
     ).toDF("doc_id", "text")
     val pairs = graft.operators.Dedup
-      .minhashDedupPairs(docs, "doc_id", "text", n = 3, k = 64,
-        bands = 16, threshold = 0.8)
+      .minhashDedupPairs(docs, "doc_id", "text",
+        threshold = 0.8)
       .collect()
     assert(pairs.map(r => (r.getLong(0), r.getLong(1))).toSet == Set((1L, 2L)))
   }

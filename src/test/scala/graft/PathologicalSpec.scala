@@ -71,7 +71,7 @@ class PathologicalSpec extends SparkSpec {
         col("id"), lit("c "),
         when(col("id") < 2, lit(dup)).otherwise(lit(hot))).as("text"))
     // cap diagnostics see the hot shingles and their magnitude
-    val stats = Dedup.shingleCapStats(docs, "id", "text", n = 3, cap = 500)
+    val stats = Dedup.shingleCapStats(docs, "id", "text", cap = 500)
       .collect().head
     assert(stats.getLong(1) >= 49998L, s"max_doc_freq=${stats.getLong(1)}")
     assert(stats.getLong(2) >= 1L, "at least one shingle over the cap")
@@ -79,7 +79,7 @@ class PathologicalSpec extends SparkSpec {
     // shingles never materialize, and the result is exactly the planted
     // twin pair (the hot shingle alone would otherwise emit ~1.25e9 pairs)
     val pairs = Dedup.ngramJaccardPairs(docs, "id", "text",
-        n = 3, threshold = 0.8, maxDocFreq = Some(500))
+        threshold = 0.8, maxDocFreq = Some(500))
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.toSeq == Seq((0L, 1L)))
   }
@@ -106,9 +106,9 @@ class PathologicalSpec extends SparkSpec {
       df.select("id_a", "id_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = pairSet(Dedup.ngramJaccardPairs(docs, "id", "text",
-      n = 3, threshold = 0.8, maxDocFreq = None))
+      threshold = 0.8, maxDocFreq = None))
     val prefix = pairSet(Dedup.prefixJaccardPairs(docs, "id", "text",
-      n = 3, threshold = 0.8))
+      threshold = 0.8))
     assert(prefix == exact,
       s"prefix filter dropped/added pairs: ${prefix.diff(exact)} / " +
         s"${exact.diff(prefix)}")

@@ -83,10 +83,10 @@ class SkewProbeSpec extends SparkSpec {
     "regimes across the frozen 0.35 cutoff with margin") {
     QueryProfile.cold(spark)
     val rSkew = Dedup.tfidfPrefixMassRatio(skewDocs, "doc_id", "text",
-      n = 1, threshold = 0.5)
+      n = 1)
     QueryProfile.cold(spark)
     val rUni = Dedup.tfidfPrefixMassRatio(uniformDocs, "doc_id", "text",
-      n = 1, threshold = 0.5)
+      n = 1)
     assert(rSkew <= cutoff / 2,
       s"skew-regime mass ratio $rSkew lost its margin below the cutoff")
     assert(rUni >= cutoff * 1.5,
@@ -118,8 +118,7 @@ class SkewProbeSpec extends SparkSpec {
           threshold = 0.5))
       QueryProfile.cold(spark)
       val auto = pairHash(
-        Dedup.tfidfCosinePairsAuto(docs, "doc_id", "text", n = 1,
-          threshold = 0.5))
+        Dedup.tfidfCosinePairsAuto(docs, "doc_id", "text", n = 1))
       assert(plain._1 > 0, "degenerate corpus: no qualifying pairs")
       assert(pref === plain, "prefix output diverged from plain")
       assert(auto === plain, "auto output diverged from plain")

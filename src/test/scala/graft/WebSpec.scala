@@ -35,7 +35,7 @@ class WebSpec extends SparkSpec {
 
   test("pageRank matches the reference iteration and conserves mass") {
     val got = Graph.pageRank(tinyNodes, tinyEdges, "id", "src", "dst",
-        iters = 4, damping = 0.85)
+        iters = 4)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val want = refRanks(4, Seq((1L, 2L), (1L, 3L), (2L, 3L)), 4, 0.85,
       Seq(1L, 2L, 3L, 4L))
@@ -53,7 +53,7 @@ class WebSpec extends SparkSpec {
     // c(2) = r(1)/2 = 1/8; c(3) = r(1)/2 + r(2)/1 = 3/8
     // r'(v) = 0.0375 + 0.85*(c(v) + 1/8)
     val got = Graph.pageRank(tinyNodes, tinyEdges, "id", "src", "dst",
-        iters = 1, damping = 0.85)
+        iters = 1)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     def f(c: Double) = 0.15 / 4 + 0.85 * (c + 0.125)
     assert(math.abs(got(1L) - f(0.0)) < 1e-15)
@@ -66,7 +66,7 @@ class WebSpec extends SparkSpec {
     "exactly zero") {
     val seeds = Seq(1L).toDF("id")
     val got = Graph.pageRank(tinyNodes, tinyEdges, "id", "src", "dst",
-        iters = 4, damping = 0.85, teleport = Some(seeds))
+        iters = 4, teleport = Some(seeds))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     // driver reference with the seeded teleport vector
     val ids = Seq(1L, 2L, 3L, 4L)
@@ -227,7 +227,7 @@ class WebSpec extends SparkSpec {
       ("a", 5L, 100L), // the obvious outlier
       ("b", 6L, 7L), ("b", 7L, 7L), ("b", 8L, 7L), ("b", 9L, 9L))
       .toDF("g", "id", "v")
-    val got = graft.operators.Curation.robustOutliers(df, "g", "v", 2.0)
+    val got = graft.operators.Curation.robustOutliers(df, "g", "v")
       .select("id", "is_outlier")
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     // group a: med=12, devs {2,1,0,1,88}, mad=1 -> only 100 flagged
