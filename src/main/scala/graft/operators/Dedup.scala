@@ -255,7 +255,7 @@ object Dedup {
 
   /** Duplicated token SPANS — the practical large-scale variant of exact
     * substring deduplication: hash every word-`L`-gram, keep grams whose
-    * full text occurs at least `minOccurrences` times in the corpus
+    * full text occurs at least twice in the corpus
     * (across or within documents), then merge each document's overlapping
     * or adjacent duplicated gram intervals into maximal spans.
     * Returns (id, span_start, span_end, n_dup_grams) with 1-based inclusive
@@ -269,8 +269,8 @@ object Dedup {
     * windows (interval merge is the classic gaps-and-islands form) — no
     * global sort, no driver state. */
   def duplicateSpans(df: DataFrame, idCol: String, textCol: String,
-                     L: Int = 20, minOccurrences: Int = 2): DataFrame = {
-    require(L >= 1 && minOccurrences >= 2, s"L=$L, minOccurrences=$minOccurrences")
+                     L: Int = 20): DataFrame = {
+    require(L >= 1, s"L=$L must be >= 1")
     import org.apache.spark.sql.expressions.Window
     // Gram identity via the fixed-width token-hash chain (see shingles) —
     // no per-position gram STRING is ever built. Hash values never appear
@@ -293,7 +293,7 @@ object Dedup {
       .select(col(idCol), (col("p0") + 1).as("i"), col("gh"))
     val dupKeys = grams.groupBy(col("gh"))
       .agg(count(lit(1)).as("occ"))
-      .filter(col("occ") >= minOccurrences)
+      .filter(col("occ") >= 2)
       .select(col("gh"))
     val dupPos = grams.join(dupKeys, Seq("gh"), "left_semi")
       .select(col(idCol), col("i"), (col("i") + (L - 1)).as("e"))
@@ -714,17 +714,16 @@ object Dedup {
     * (smoothed so no kept term is zero-weighted; rounded so the one-ulp
     * divergence between libm and java.lang.Math log disappears and
     * downstream scores stay engine-portable). Terms with doc-frequency
-    * above `maxDocFreq` are dropped BEFORE weighting — they carry the least
+    * above [[DocFreqCap]] are dropped BEFORE weighting — they carry the least
     * information (idf ≈ floor) and are exactly the hot inverted-index keys
     * that would make the pair join quadratic. N counts documents with at
     * least one shingle; norms are over each document's kept terms. */
   def tfidfWeights(df: DataFrame, idCol: String, textCol: String,
-                   n: Int = ShingleN,
-                   maxDocFreq: Option[Int] = DocFreqCap): DataFrame = {
+                   n: Int = ShingleN): DataFrame = {
     val tf = persistScoped(s"tfidf:$idCol:$textCol:$n",
       shingleTf(df, idCol, textCol, n))
     val docFreq = tf.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-      .filter(maxDocFreq.map(cap => col("df") <= cap).getOrElse(lit(true)))
+      .filter(DocFreqCap.map(cap => col("df") <= cap).getOrElse(lit(true)))
     val nDocs = tf.agg(countDistinct(col(idCol)).as("n_docs"))
     tf.join(docFreq, "sh")
       .crossJoin(broadcast(nDocs))
@@ -799,12 +798,12 @@ object Dedup {
     * is reused by the returned plan, so total work is unchanged; callers
     * composing plans without executing them pay the posting build early. */
   def tfidfCosinePairs(df: DataFrame, idCol: String, textCol: String,
-                       n: Int = ShingleN, threshold: Double = TfidfThreshold,
-                       maxDocFreq: Option[Int] = DocFreqCap): DataFrame = {
+                       n: Int = ShingleN, threshold: Double = TfidfThreshold)
+      : DataFrame = {
     // persisted: consumed by both the norm aggregate and the posting-list
     // dot product; scoped lifecycle (released on the next call / releaseCaches)
-    val w = persistScoped(s"tfidfW:$idCol:$textCol:$n:$maxDocFreq",
-      tfidfWeights(df, idCol, textCol, n, maxDocFreq))
+    val w = persistScoped(s"tfidfW:$idCol:$textCol:$n:$DocFreqCap",
+      tfidfWeights(df, idCol, textCol, n))
     // EAGER pair-shuffle sizing (r10, the x30 fan-in fix): one count
     // aggregate over the just-persisted posting table (the action also
     // materializes the cache every later stage reuses, so the work is
@@ -825,7 +824,7 @@ object Dedup {
     // sides) whose projections alias differently, so exchange reuse does
     // not kick in and each build would re-aggregate the posting table
     // (profiled at ~7 s apiece at 10× probe scale). 16 bytes/doc.
-    val norms = persistScoped(s"tfidfN:$idCol:$textCol:$n:$maxDocFreq",
+    val norms = persistScoped(s"tfidfN:$idCol:$textCol:$n:$DocFreqCap",
       w.groupBy(col(idCol))
         .agg(sqrt(sum(col("wgt") * col("wgt"))).as("nrm")))
     // explicit repartition (pair-mass-sized) satisfies the self-join's
@@ -840,7 +839,7 @@ object Dedup {
     }
     // Pair generation: codegen'd self-join on the term key. Both sides
     // read the SAME user-specified repartition (exchange reuse = one
-    // shuffle), the merge join buffers at most df <= maxDocFreq rows per
+    // shuffle), the merge join buffers at most df <= DocFreqCap rows per
     // key, and every pair row stays an UnsafeRow end-to-end. It beat a
     // collect_list-per-term + double-explode plan (a non-codegen
     // ObjectHashAggregate) at x30 with identical hashes; the A/B is in
@@ -880,7 +879,7 @@ object Dedup {
     // that re-ran the dominant spilling aggregate end-to-end (profiled r9).
     // Materializing before the sort is the standard cluster discipline for
     // sorting any expensive computation.
-    persistScoped(s"tfidfOut:$idCol:$textCol:$n:$maxDocFreq:$threshold", out)
+    persistScoped(s"tfidfOut:$idCol:$textCol:$n:$DocFreqCap:$threshold", out)
   }
 
   /** [[tfidfCosinePairs]] with PREFIX-FILTERED candidate generation
@@ -926,11 +925,9 @@ object Dedup {
     * (equality-gated so switching is always safe). */
   def tfidfCosinePairsPrefix(df: DataFrame, idCol: String, textCol: String,
                              n: Int = ShingleN,
-                             threshold: Double = TfidfThreshold,
-                             maxDocFreq: Option[Int] = DocFreqCap)
+                             threshold: Double = TfidfThreshold)
       : DataFrame = {
-    val (annot, norms) =
-      tfidfPrefixParts(df, idCol, textCol, n, threshold, maxDocFreq)
+    val (annot, norms) = tfidfPrefixParts(df, idCol, textCol, n, threshold)
     val pref = annot.filter(col("__keep")).select(col("sh"), col(idCol))
     val cands = pref.select(col("sh"), col(idCol).as("id_a"))
       .join(pref.select(col("sh"), col(idCol).as("id_b")), "sh")
@@ -961,7 +958,7 @@ object Dedup {
     // output-sized persist before the caller's deterministic global sort —
     // same range-sort double-execution argument as tfidfCosinePairs
     persistScoped(
-      s"tfidfPOut:$idCol:$textCol:$n:$maxDocFreq:$threshold", out)
+      s"tfidfPOut:$idCol:$textCol:$n:$DocFreqCap:$threshold", out)
   }
 
   /** Shared machinery of the prefix-filtered TF-IDF path: per-doc `norms`
@@ -975,17 +972,16 @@ object Dedup {
     * [[tfidfPrefixMassRatio]] statistic (one count aggregate over
     * (sh, __keep)). Linear aggregates + one per-doc window; NO pair join. */
   private def tfidfPrefixParts(df: DataFrame, idCol: String,
-                               textCol: String, n: Int, threshold: Double,
-                               maxDocFreq: Option[Int])
+                               textCol: String, n: Int, threshold: Double)
       : (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
     require(threshold > 0 && threshold <= 1,
       s"threshold=$threshold must be in (0, 1] for the prefix bound")
     // same keys as tfidfCosinePairs: the two paths' weight tables are
     // plan-identical, so whichever runs first warms the other
-    val w = persistScoped(s"tfidfW:$idCol:$textCol:$n:$maxDocFreq",
-      tfidfWeights(df, idCol, textCol, n, maxDocFreq))
-    val norms = persistScoped(s"tfidfN:$idCol:$textCol:$n:$maxDocFreq",
+    val w = persistScoped(s"tfidfW:$idCol:$textCol:$n:$DocFreqCap",
+      tfidfWeights(df, idCol, textCol, n))
+    val norms = persistScoped(s"tfidfN:$idCol:$textCol:$n:$DocFreqCap",
       w.groupBy(col(idCol))
         .agg(sqrt(sum(col("wgt") * col("wgt"))).as("nrm")))
     val wn = w.join(norms, idCol)
@@ -997,7 +993,7 @@ object Dedup {
     val sufBound = sum(col("nw") * col("mw"))
       .over(byDoc.rowsBetween(Window.currentRow, Window.unboundedFollowing))
     val annot = persistScoped(
-      s"tfidfA:$idCol:$textCol:$n:$maxDocFreq:$threshold",
+      s"tfidfA:$idCol:$textCol:$n:$DocFreqCap:$threshold",
       wn.join(maxw, "sh")
         // − 1e-6: covers the round(·,6) threshold slack (5e-7) plus float
         // error — see the docstring; a larger epsilon only adds candidates
@@ -1017,8 +1013,7 @@ object Dedup {
     * doubles). 1.0 when the corpus has no kept terms. */
   def tfidfPrefixMassRatio(df: DataFrame, idCol: String, textCol: String,
                            n: Int = ShingleN): Double = {
-    val (annot, _) =
-      tfidfPrefixParts(df, idCol, textCol, n, TfidfThreshold, DocFreqCap)
+    val (annot, _) = tfidfPrefixParts(df, idCol, textCol, n, TfidfThreshold)
     // both pair masses in ONE aggregate: per-term total and
     // prefix-surviving counts, then Σc² / Σcp². Double sums — Σ df² can
     // exceed Long range on an uncapped 100 TB corpus (df up to N ⇒ df² up
@@ -1042,13 +1037,11 @@ object Dedup {
     * full statistic drops and flips the decision; see
     * [[tfidfCosinePairsAuto]]), persist-free single-action plan. */
   def tfidfPrefixMassRatioSampled(df: DataFrame, idCol: String,
-                                  textCol: String, n: Int = ShingleN,
-                                  threshold: Double = TfidfThreshold,
-                                  maxDocFreq: Option[Int] = DocFreqCap)
+                                  textCol: String, n: Int = ShingleN)
       : Double = {
     val m = TfidfAutoSampleMod
     val stat = df.filter(pmod(xxhash64(col(idCol)), lit(m.toLong)) === 0)
-    val sampleCap = maxDocFreq.map(c => math.max(1, c / m))
+    val sampleCap = DocFreqCap.map(c => math.max(1, c / m))
     // FUSED chain (r10): the unfused route (tfidfPrefixParts) pays ~11
     // exchanges plus a full window sort because its annotated rows feed
     // three consumers; the pre-flight consumes ONLY the two pair-mass
@@ -1106,7 +1099,7 @@ object Dedup {
           (a, z) => struct(
             (a.getField("run") + z.getField("c")).as("run"),
             (a.getField("k") + when(
-              col("total") - a.getField("run") >= threshold - 1e-6, 1)
+              col("total") - a.getField("run") >= TfidfThreshold - 1e-6, 1)
               .otherwise(0)).as("k")),
           a => a.getField("k")))
     val cp = perDoc
@@ -1328,21 +1321,25 @@ object Dedup {
     * [[graft.expressions.MinHashSig]] aggregate (bit-identical to the k
     * separate `min(xxhash64(lit(i), sh))` columns, see its scaladoc), then
     * unpacked to the mh_i schema downstream banding expects. */
-  private def signaturesFromShingles(sh: DataFrame, idCol: String,
-                                     k: Int): DataFrame = {
-    val sig = graft.expressions.MinHashSig.minhashSig(col("sh"), k).as("mh")
+  private def signaturesFromShingles(sh: DataFrame, idCol: String)
+      : DataFrame = {
+    val sig =
+      graft.expressions.MinHashSig.minhashSig(col("sh"), MinHashK).as("mh")
     sh.groupBy(col(idCol)).agg(sig)
       .select(col(idCol) +:
-        (0 until k).map(i => col("mh").getItem(i).as(s"mh_$i")): _*)
+        (0 until MinHashK).map(i => col("mh").getItem(i).as(s"mh_$i")): _*)
   }
 
-  /** LSH banding: signature → `bands` band-hashes → exploded (band, hash)
-    * rows. Docs sharing any band collide. r = k/bands rows per band. */
-  def lshBands(sig: DataFrame, idCol: String, k: Int = 64,
-               bands: Int = 16): DataFrame = {
-    require(k % bands == 0, s"k=$k must divide into bands=$bands")
-    val r = k / bands
-    val bandCols = (0 until bands).map { b =>
+  /** MinHash-LSH shape of [[minhashDedupPairs]]: signatures of
+    * `MinHashK` min-wise hashes, cut into `LshBands` bands of 4 rows. */
+  private val MinHashK = 64
+  private val LshBands = 16
+
+  /** LSH banding: signature → `LshBands` band-hashes → exploded (band,
+    * hash) rows. Docs sharing any band collide. */
+  def lshBands(sig: DataFrame, idCol: String): DataFrame = {
+    val r = MinHashK / LshBands
+    val bandCols = (0 until LshBands).map { b =>
       xxhash64((b * r until (b + 1) * r).map(i => col(s"mh_$i")): _*)
     }
     sig.select(col(idCol),
@@ -1350,9 +1347,8 @@ object Dedup {
   }
 
   /** Candidate pairs from LSH bucket collisions (distinct, a < b). */
-  def lshCandidates(sig: DataFrame, idCol: String, k: Int = 64,
-                    bands: Int = 16): DataFrame = {
-    val bandsDf = lshBands(sig, idCol, k, bands)
+  def lshCandidates(sig: DataFrame, idCol: String): DataFrame = {
+    val bandsDf = lshBands(sig, idCol)
     val a = bandsDf.select(col("band"), col("bh"), col(idCol).as("id_a"))
     val b = bandsDf.select(col("band"), col("bh"), col(idCol).as("id_b"))
     a.join(b, Seq("band", "bh"))
@@ -1379,14 +1375,14 @@ object Dedup {
     * below) the exact postings pass, which is expected: exact n-gram
     * Jaccard's own quadratic term only overtakes minhash's linear overhead
     * as the corpus — and its co-shingle pair volume — grows. Signatures
-    * are k = 64 min-wise hashes in 16 bands. */
+    * are `MinHashK` = 64 min-wise hashes in `LshBands` = 16 bands. */
   def minhashDedupPairs(df: DataFrame, idCol: String, textCol: String,
                         threshold: Double = 0.8): DataFrame = {
     // one shingle pass feeds signatures, sizes, and candidate verification
     val sh = persistScoped(s"minhash:$idCol:$textCol:$ShingleN",
       shingles(df, idCol, textCol))
-    val sig = signaturesFromShingles(sh, idCol, 64)
-    val cands = lshCandidates(sig, idCol, 64, 16)
+    val sig = signaturesFromShingles(sh, idCol)
+    val cands = lshCandidates(sig, idCol)
     val sizes = shingleSizes(sh, idCol)
     jaccardAbove(sharedShingles(cands, sh, idCol), sizes, idCol, threshold)
   }

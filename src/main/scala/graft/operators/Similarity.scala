@@ -428,8 +428,8 @@ object Similarity {
     * mapper per source, no per-source sort anywhere. Ties break by
     * ascending dst id (total, deterministic). */
   def knnGraph(corpus: DataFrame, idCol: String, vecCol: String, k: Int,
-               nlist: Int = 0, probes: Int = 3, iters: Int = 2,
-               seed: Long = 42L): DataFrame = {
+               nlist: Int = 0, probes: Int = 3, seed: Long = 42L)
+      : DataFrame = {
     require(k >= 1, s"k=$k must be >= 1")
     // persistScoped: the pair set feeds BOTH directions of the union below
     // — without it the (quadratic in exact mode) pair generation runs
@@ -437,8 +437,8 @@ object Similarity {
     // again per consuming query
     val undirected = Dedup.reuse(s"knng:$nlist:$probes",
       if (nlist <= 0) exactPairs(corpus, idCol, vecCol, -1.0)
-      else clusterPairs(ivfIndex(corpus, idCol, vecCol, nlist, iters, seed),
-        idCol, vecCol, -1.0, probes))
+      else clusterPairs(ivfIndex(corpus, idCol, vecCol, nlist, iters = 2,
+        seed = seed), idCol, vecCol, -1.0, probes))
     val directed = undirected.select(
         col("id_a").as("src"), col("id_b").as("dst"), col("cosine"))
       .unionAll(undirected.select(

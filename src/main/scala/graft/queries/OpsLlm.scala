@@ -442,8 +442,7 @@ object OpsLlm extends Suite {
   //    same gaps-and-islands computation in DuckDB. ----------------------
   private val dedupSpans: Q = (s, dir) => {
     val t = Tables(s, dir)
-    Dedup.duplicateSpans(t.documents, "doc_id", "text",
-        L = 8, minOccurrences = 2)
+    Dedup.duplicateSpans(t.documents, "doc_id", "text", L = 8)
       .select(col("doc_id"),
         col("span_start").cast("long").as("span_start"),
         col("span_end").cast("long").as("span_end"),

@@ -23,14 +23,8 @@ object PlanExplain {
       sb.append("==== explain(formatted) " + name + " ====\n")
       sb.append(df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-      // Drive execution through the df's OWN QueryExecution (r11, per
-      // ADVICE): a df.write.save() runs a separate QueryExecution, so
-      // df.queryExecution.executedPlan would never execute and the dump
-      // below would mislabel the initial adaptive plan
-      // (isFinalPlan=false) as AQE-final evidence. Counting the executed
-      // plan's RDD materializes every partition of THIS QueryExecution,
-      // so AdaptiveSparkPlanExec re-optimizes and the toString shows the
-      // real final plan (isFinalPlan=true).
+      // execute the df's OWN QueryExecution (a write would run another
+      // one), so the plan printed below is AQE's final plan
       df.queryExecution.executedPlan.execute().count()
       sb.append("\n==== executed plan (AQE final) " + name + " ====\n")
       sb.append(df.queryExecution.executedPlan.toString)
@@ -58,11 +52,14 @@ object PlanExplain {
 
   /** Text masked whole: the source line an RDD was created at
     * (`at localCheckpoint at Graph.scala:140` moves with every edit above
-    * it) and a lambda's class name and identity hash
-    * (`Multimodal$$$Lambda/0x00007f8a78d8bbb0@5984742f`). */
+    * it), a lambda's class name and identity hash
+    * (`Multimodal$$$Lambda/0x00007f8a78d8bbb0@5984742f`), and the identity
+    * hash of any other object a plan prints by `toString` (a bloom
+    * filter's `[B@6171b73a`, a UDAF's `GeometricMean$@461bca75`). */
   private val runText = Seq(
     "(\\.scala:)\\d+".r -> "$1N",
-    "\\$Lambda[$/\\w]*@[0-9a-f]+".r -> "\\$Lambda")
+    "\\$Lambda[$/\\w]*@[0-9a-f]+".r -> "\\$Lambda",
+    "(?<=[\\w$;])@[0-9a-f]{1,8}(?!\\w)".r -> "@")
 
   /** `dump` with each kind of [[runNumbers]] renumbered 1, 2, … in order
     * of first appearance, [[runText]] masked, the table directory `sfDir`
@@ -78,39 +75,33 @@ object PlanExplain {
     }
     val renumbered = runNumbers.groupMap(_._1)(_._2).foldLeft(masked) {
       case (text, ("codegen", patterns)) =>
-        val (outer, cached) = (new Ids, new Ids)
-        inCachedPlan(text).map { case (line, isCached) =>
-          val ids = if (isCached) cached else outer
-          patterns.foldLeft(line)((l, p) => ids.renumber(p, l))
+        val (outer, cached) = (renumber(patterns), renumber(patterns))
+        val lines = text.split("\n", -1).toSeq
+        lines.zip(inCachedPlan(lines)).map { case (line, isCached) =>
+          if (isCached) cached(line) else outer(line)
         }.mkString("\n")
-      case (text, (_, patterns)) =>
-        val ids = new Ids
-        patterns.foldLeft(text)((t, p) => ids.renumber(p, t))
+      case (text, (_, patterns)) => renumber(patterns)(text)
     }
     renumbered.replace(sfDir, "$SF")
       .replace(new java.io.File(".").getCanonicalPath, "$CWD")
   }
 
-  /** One numbering: each distinct id becomes 1, 2, … by first appearance. */
-  private final class Ids {
-    private val ids = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    def renumber(p: scala.util.matching.Regex, text: String): String =
-      p.replaceAllIn(text, m => scala.util.matching.Regex.quoteReplacement(
-        m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size + 1)))
+  /** One numbering: each distinct id `patterns` match in the texts it is
+    * given becomes 1, 2, … by first appearance. */
+  private def renumber(patterns: Seq[scala.util.matching.Regex])
+      : String => String = {
+    val ids = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    text => patterns.foldLeft(text)((t, p) => p.replaceAllIn(t, m =>
+      scala.util.matching.Regex.quoteReplacement(m.group(1) +
+        ids.getOrElseUpdate(m.group(2), ids.size + 1))))
   }
 
-  /** Each line of a plan tree, marked when it lies in the subtree under an
+  /** Whether each line of a plan tree lies in the subtree under an
     * `InMemoryRelation` node: the lines after it that are indented deeper. */
-  private def inCachedPlan(text: String): Seq[(String, Boolean)] = {
-    var cachedAt = -1
-    text.split("\n", -1).toSeq.map { line =>
-      val col = line.indexOf("InMemoryRelation")
+  private def inCachedPlan(lines: Seq[String]): Seq[Boolean] =
+    lines.scanLeft((-1, false)) { case ((at, _), line) =>
       val indent = line.indexWhere(c => c.isLetter || c == '*' || c == '(')
-      if (cachedAt >= 0 && indent <= cachedAt)
-        cachedAt = -1
-      val isCached = cachedAt >= 0
-      if (col >= 0 && cachedAt < 0) cachedAt = col
-      (line, isCached)
-    }
-  }
+      val open = if (at >= 0 && indent > at) at else -1
+      (if (open < 0) line.indexOf("InMemoryRelation") else open, open >= 0)
+    }.tail.map(_._2)
 }

@@ -73,7 +73,7 @@ class DedupPropsSpec extends SparkSpec {
     cases(genCorpus, 6).foreach { docs =>
       val df = docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text")
-      val got = Dedup.duplicateSpans(df, "doc_id", "text", L, 2)
+      val got = Dedup.duplicateSpans(df, "doc_id", "text", L)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
       // reference: gram occurrence counts over the whole corpus, then
       // per-doc merge of overlapping-or-adjacent duplicated gram intervals

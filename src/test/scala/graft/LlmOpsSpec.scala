@@ -124,8 +124,7 @@ class LlmOpsSpec extends SparkSpec {
       (21L, s"xx yy $run zz ww"),
       (22L, "no duplicated content here beyond doubt in any of these words")
     ).toDF("doc_id", "text")
-    val spans = Dedup.duplicateSpans(sdocs, "doc_id", "text",
-        L = 8, minOccurrences = 2)
+    val spans = Dedup.duplicateSpans(sdocs, "doc_id", "text", L = 8)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
     // doc 20: run occupies tokens 4..15 -> one merged span exactly
     assert(spans.contains((20L, 4, 15)))
@@ -138,8 +137,7 @@ class LlmOpsSpec extends SparkSpec {
     val run = (1 to 10).map(i => s"w$i").mkString(" ")
     val d = Seq((30L, s"$run filler $run"))  // 10 + 1 + 10 tokens
       .toDF("doc_id", "text")
-    val spans = Dedup.duplicateSpans(d, "doc_id", "text",
-        L = 10, minOccurrences = 2)
+    val spans = Dedup.duplicateSpans(d, "doc_id", "text", L = 10)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
     assert(spans == Set((30L, 1, 10), (30L, 12, 21)))
   }

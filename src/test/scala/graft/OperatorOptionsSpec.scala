@@ -15,7 +15,7 @@ class OperatorOptionsSpec extends AnyFunSuite {
       .isEmpty, "new operator defaults: add each to the list with a reason")
     assert(OperatorOptionsSpec.expected.diff(OperatorOptionsSpec.defaults)
       .isEmpty, "removed operator defaults: drop them from the list")
-    assert(OperatorOptionsSpec.defaults.size == 76)
+    assert(OperatorOptionsSpec.defaults.size == 65)
   }
 }
 
@@ -33,11 +33,10 @@ object OperatorOptionsSpec {
     objects.flatMap { obj =>
       val module = mirror.staticModule("graft.operators." + obj)
       // of overloaded alternatives, only one may declare defaults
-      val defs = module.moduleClass.asClass.toType.decls.collect {
-        case m: ru.MethodSymbol
-            if m.paramLists.flatten.exists(_.asTerm.isParamWithDefault) =>
-          m.name.decodedName.toString -> m
-      }.toMap
+      val defs = module.moduleClass.asClass.toType.decls
+        .filter(_.isMethod).map(_.asMethod)
+        .filter(_.paramLists.flatten.exists(_.asTerm.isParamWithDefault))
+        .map(m => m.name.decodedName.toString -> m).toMap
       Class.forName("graft.operators." + obj + "$").getDeclaredMethods
         .map(_.getName).collect { case Getter(name, n) =>
           val params = defs(name).paramLists.flatten
@@ -62,7 +61,6 @@ object OperatorOptionsSpec {
     "Dedup.winnowPairs.w",                  // LlmOpsSpec: 3
     "Dedup.winnowPairs.maxDocFreq",         // LlmOpsSpec: Some(1)
     "Dedup.duplicateSpans.L",               // removeSpans passes its own
-    "Dedup.duplicateSpans.minOccurrences",  // DedupPropsSpec
     "Dedup.removeSpans.L",                  // OpsLlm: 8
     "Dedup.substringDedup.L",               // OpsSelection
     "Dedup.shingles.n",                     // editDistancePairs, tfidf*
@@ -74,25 +72,16 @@ object OperatorOptionsSpec {
     "Dedup.editDistancePairs.maxRel",       // LlmOpsSpec: 0.9
     "Dedup.editDistancePairs.minCommon",    // LlmOpsSpec: 1
     "Dedup.tfidfWeights.n",                 // the tfidf pair operators
-    "Dedup.tfidfWeights.maxDocFreq",        // next candidate (ROADMAP C.7)
     "Dedup.tfidfCosinePairs.n",             // SkewProbe: 1
     "Dedup.tfidfCosinePairs.threshold",     // DedupPropsSpec: random t
-    "Dedup.tfidfCosinePairs.maxDocFreq",    // next candidate (ROADMAP C.7)
     "Dedup.tfidfCosinePairsPrefix.n",       // SkewProbe: 1
     "Dedup.tfidfCosinePairsPrefix.threshold", // DedupPropsSpec: random t
-    "Dedup.tfidfCosinePairsPrefix.maxDocFreq", // next candidate
     "Dedup.tfidfPrefixMassRatio.n",         // SkewProbe: 1
     "Dedup.tfidfPrefixMassRatioSampled.n",  // tfidfCosinePairsAuto, 1 in
                                             // SkewProbeSpec
-    "Dedup.tfidfPrefixMassRatioSampled.threshold",  // SkewProbeSpec: 0.5;
-    "Dedup.tfidfPrefixMassRatioSampled.maxDocFreq", // both next candidates
     "Dedup.tfidfCosinePairsAuto.n",         // SkewProbe: 1
     "Dedup.shingleTf.n",                    // tfidfWeights, sampled ratio
     "Dedup.prefixJaccardPairs.threshold",   // LlmOpsSpec: 1.0
-    "Dedup.lshBands.k",                     // lshCandidates passes its own
-    "Dedup.lshBands.bands",                 // lshCandidates passes its own
-    "Dedup.lshCandidates.k",                // minhashDedupPairs
-    "Dedup.lshCandidates.bands",            // minhashDedupPairs
     "Dedup.minhashDedupPairs.threshold",    // OpsLlm: 0.9
     "Dedup.clusterLabels.maxDriverEdges",   // test seam: 0 forces the
                                             // distributed loop
@@ -115,7 +104,6 @@ object OperatorOptionsSpec {
     "Similarity.clusterPairs.probes",       // OpsLlm: 3
     "Similarity.knnGraph.nlist",            // hardNegatives, LlmOpsSpec
     "Similarity.knnGraph.probes",           // hardNegatives: 5
-    "Similarity.knnGraph.iters",            // next candidate (ROADMAP C.7)
     "Similarity.knnGraph.seed",             // LlmOpsSpec: 9
     "Similarity.hardNegatives.nlist",       // OpsSelection: 16
     "Similarity.hardNegatives.probes",      // OpsSelection: 5

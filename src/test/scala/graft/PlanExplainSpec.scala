@@ -21,24 +21,28 @@ class PlanExplainSpec extends SparkSpec {
       "ShuffleQueryStage 1\n+- Exchange hashpartitioning(k#1L, 256)," +
         " [plan_id=1]\n   +- *(1) HashAggregate(keys=[k#1L])" +
         " [codegen id : 1] v#2 k#1L\nfile:$SF/t.parquet")
-    // RDD ids, source lines, lambda names, the working directory, and the
-    // codegen ids of a cached plan, which count apart from the outer ones
+    // RDD ids, source lines, lambda names, object identity hashes, the
+    // working directory, and the codegen ids of a cached plan, which count
+    // apart from the outer ones
     val cwd = new java.io.File(".").getCanonicalPath
-    def run(rdd: Int, line: Int, lambda: String, cached: Int): String =
+    def run(rdd: Int, line: Int, lambda: String, cached: Int,
+            hash: String): String =
       s"*($cached) Project\n+- InMemoryRelation [k#1L]\n" +
         s"   +- *($cached) Scan MapPartitionsRDD[$rdd] at localCheckpoint" +
         s" at Graph.scala:$line\n*(${cached + 1}) MapPartitions" +
         s" graft.operators.Multimodal$$$$$$Lambda$lambda\n" +
+        s"Filter bloommightcontain(fp#2, [B@$hash)\n" +
         s"file:$cwd/target/graft-edges/e"
-    val c = run(45, 140, "/0x00007f8a78d8bbb0@5984742f", 1)
-    val d = run(7, 152, "$2668/0x00007f00d8a3b2c0@1a2b3c", 4)
+    val c = run(45, 140, "/0x00007f8a78d8bbb0@5984742f", 1, "6171b73a")
+    val d = run(7, 152, "$2668/0x00007f00d8a3b2c0@1a2b3c", 4, "e6ed753")
     assert(PlanExplain.normalise(c, "/data/sf") ==
       PlanExplain.normalise(d, "/data/sf"))
     assert(PlanExplain.normalise(c, "/data/sf") ==
       "*(1) Project\n+- InMemoryRelation [k#1L]\n" +
         "   +- *(1) Scan MapPartitionsRDD[1] at localCheckpoint" +
         " at Graph.scala:N\n*(2) MapPartitions" +
-        " graft.operators.Multimodal$$$Lambda\nfile:$CWD/target/graft-edges/e")
+        " graft.operators.Multimodal$$$Lambda\n" +
+        "Filter bloommightcontain(fp#2, [B@)\nfile:$CWD/target/graft-edges/e")
   }
 
   test("two plannings of one query normalise to the same text") {

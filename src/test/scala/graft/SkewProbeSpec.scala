@@ -76,8 +76,7 @@ class SkewProbeSpec extends SparkSpec {
     * the PRODUCTION method (sample + scaled cap + persist-free), not a
     * replica that could drift. */
   private def sampledRatio(df: DataFrame): Double =
-    Dedup.tfidfPrefixMassRatioSampled(df, "doc_id", "text", n = 1,
-      threshold = 0.5)
+    Dedup.tfidfPrefixMassRatioSampled(df, "doc_id", "text", n = 1)
 
   test("exact mass-ratio statistic separates the skew and uniform " +
     "regimes across the frozen 0.35 cutoff with margin") {
